@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Literal, Multiply, Round}
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.IntegerType
 
 import graft.expr.{ByteStats, ChunkSplit, CountMinAgg, DotProduct, Fingerprint, FreqItemsAgg, IntersectSize, IntersectSizeSorted, NGramPos, RiskScore, TopKValuesAgg}
@@ -107,6 +108,20 @@ object GraftFunctions {
     org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs.head, exprs(1))
   }
 
+  /** `round_cents(x)` = `round(x * 100, 0) / 100`: `round(x, 2)` as
+    * DuckDB (and Python) compute it, half away from zero on the binary
+    * value. Spark's `round(double, 2)` rounds `Double.toString(x)`
+    * instead, so 305.275 (binary 305.27499999…) becomes 305.28 there and
+    * 305.27 in DuckDB. At scale 0 the two agree: a double that prints
+    * as k.5 is exactly k.5. */
+  private[functions] val roundCentsBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 1, "round_cents expects exactly one argument")
+    Divide(Round(Multiply(exprs.head, Literal(100.0)), Literal(0)), Literal(100.0))
+  }
+
+  /** Column form of `round_cents`; needs [[register]] on the session. */
+  def roundCents(x: Column): Column = call_function("round_cents", x)
+
   /** Make `risk_score(str)`, `top_k_values(double, k)`,
     * `dot_product(arr, arr)`, `intersect_size(arr, arr)`,
     * `freq_items(str, k)` and `fingerprint(str)` callable from SQL /
@@ -138,6 +153,8 @@ object GraftFunctions {
       "byte_stats", byteStatsBuilder, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "ngram_pos", ngramPosBuilder, "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "round_cents", roundCentsBuilder, "built-in")
   }
 }
 

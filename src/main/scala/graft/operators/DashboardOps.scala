@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.roundCents
 import graft.functions.TextFunctions
 import graft.model.Tables
 
@@ -41,9 +42,9 @@ object DashboardOps {
   def globalStats(spark: SparkSession, dir: String): DataFrame =
     scoredDocuments(spark, dir).agg(
       count(lit(1)).as("total_posts"),
-      round(avg(col("risk_score")), 2).as("avg_risk"),
+      roundCents(avg(col("risk_score"))).as("avg_risk"),
       sum(when(col("risk_score") >= 30, 1L).otherwise(0L)).as("high_risk_count"),
-      round(avg(col("n_chars")), 2).as("avg_chars"),
+      roundCents(avg(col("n_chars"))).as("avg_chars"),
     )
 
   /** A-4 hash group-by with multi-agg (reference: dashboard/app.py:48-59):
@@ -56,8 +57,8 @@ object DashboardOps {
       .agg(
         count(lit(1)).as("post_count"),
         sum(col("n_chars")).as("total_chars"),
-        round(avg(col("n_chars")), 2).as("avg_chars"),
-        round(avg(col("risk_score")), 2).as("avg_risk"),
+        roundCents(avg(col("n_chars"))).as("avg_chars"),
+        roundCents(avg(col("risk_score"))).as("avg_risk"),
       )
       .orderBy(col("lang"))
 
@@ -144,10 +145,10 @@ object DashboardOps {
     scored.createOrReplaceTempView("graft_dashboard_scored")
     val payload = spark.sql(
       """SELECT 'stats' AS section, 'all' AS key,
-           CAST(count(*) AS BIGINT) AS n, round(avg(risk_score), 2) AS metric
+           CAST(count(*) AS BIGINT) AS n, round_cents(avg(risk_score)) AS metric
          FROM graft_dashboard_scored
          UNION ALL
-         SELECT 'stats', 'avg_chars', CAST(count(*) AS BIGINT), round(avg(n_chars), 2)
+         SELECT 'stats', 'avg_chars', CAST(count(*) AS BIGINT), round_cents(avg(n_chars))
          FROM graft_dashboard_scored
          UNION ALL
          SELECT 'stats', 'high_risk',
@@ -155,7 +156,7 @@ object DashboardOps {
            CAST(NULL AS DOUBLE)
          FROM graft_dashboard_scored
          UNION ALL
-         SELECT 'lang', lang, CAST(count(*) AS BIGINT), round(avg(risk_score), 2)
+         SELECT 'lang', lang, CAST(count(*) AS BIGINT), round_cents(avg(risk_score))
          FROM graft_dashboard_scored GROUP BY lang
          UNION ALL
          SELECT 'hist', b.bucket, CAST(coalesce(c.n, 0) AS BIGINT), CAST(NULL AS DOUBLE)

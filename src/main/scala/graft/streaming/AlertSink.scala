@@ -25,22 +25,25 @@ class AlertSink(threshold: Int = 30, maxAlerts: Int = 1000) extends Serializable
   def alertRows: Seq[Row] = synchronized(alerts.toSeq)
 
   /** Append the batch's high-risk slice, newest kept under the cap.
-    * The cap applies EXECUTOR-side as orderBy(event time desc).limit —
+    * The cap applies EXECUTOR-side as orderBy(key desc, id desc).limit —
     * TakeOrderedAndProject, so an alert-storm micro-batch transfers at
     * most maxAlerts rows to the driver AND the retained subset is the
-    * NEWEST maxAlerts by event time (a bare limit would keep an arbitrary
-    * partition-order subset within an over-cap batch). Rows append
-    * oldest-first so the deque stays chronological and eviction always
-    * drops the oldest. A frame without the event-time column (e.g. an
-    * already-pruned projection) falls back to a bare limit: still capped
-    * transfer, retained subset arbitrary within one over-cap batch. */
+    * NEWEST maxAlerts (a bare limit would keep an arbitrary
+    * partition-order subset within an over-cap batch). The key is event
+    * time (`created_utc`) when the frame carries it, else the arrival
+    * time (`timestamp`, the key `SnapshotSink` ranks by) that survives
+    * `Pipeline.prune`. Rows append oldest-first so the deque stays
+    * chronological and eviction always drops the oldest. A frame with
+    * neither column falls back to a bare limit: still capped transfer,
+    * retained subset arbitrary within one over-cap batch. */
   def update(batch: DataFrame, batchId: Long): Unit = {
     val hiRisk = batch.filter(col("risk_score") >= threshold)
-    val capped =
-      if (batch.columns.contains("created_utc"))
-        hiRisk.orderBy(col("created_utc").desc_nulls_last, col("id").desc_nulls_last)
+    val capped = Seq("created_utc", "timestamp").find(batch.columns.contains) match {
+      case Some(key) =>
+        hiRisk.orderBy(col(key).desc_nulls_last, col("id").desc_nulls_last)
           .limit(maxAlerts).collect().reverse
-      else hiRisk.limit(maxAlerts).collect()
+      case None => hiRisk.limit(maxAlerts).collect()
+    }
     synchronized {
       capped.foreach { r =>
         alerts.append(r)

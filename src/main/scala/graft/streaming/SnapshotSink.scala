@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -17,6 +21,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `limit(maxRows).collect()` is a constant-size driver transfer no
   * matter how large the batch — the unbounded part of the stream never
   * reaches the driver.
+  *
+  * The ring already lives on the driver, so the snapshot is written there
+  * too, with no Spark write job: each row is rendered by Spark's own JSON
+  * generator (`to_json(struct(*))` over a local relation, which the
+  * optimizer folds on the driver), so the lines are byte-identical to the
+  * JSON writer's. They go to a hidden temp file inside `path` that is
+  * atomically renamed onto `path/part-00000.json`: `path` stays a
+  * directory `spark.read.json` reads, and a concurrent reader sees either
+  * the previous snapshot or the new one, never a missing or partial file.
   */
 class SnapshotSink(path: String, maxRows: Int = 100,
     arrivalCols: Seq[String] = Seq("timestamp", "id")) extends Serializable {
@@ -39,10 +52,14 @@ class SnapshotSink(path: String, maxRows: Int = 100,
       buffer.append(r)
       if (buffer.size > maxRows) buffer.removeHead()
     }
-    val spark = batch.sparkSession
-    spark.createDataFrame(buffer.toList.asJava, batch.schema)
-      .coalesce(1)
-      .write.mode("overwrite").json(path)
+    val lines = batch.sparkSession
+      .createDataFrame(buffer.toList.asJava, batch.schema)
+      .select(to_json(struct(col("*"))))
+      .collect()
+    val dir = Files.createDirectories(Paths.get(path))
+    val tmp = dir.resolve(".part-00000.json.tmp") // readers skip "."/"_" files
+    Files.write(tmp, lines.map(_.getString(0) + "\n").mkString.getBytes(UTF_8))
+    Files.move(tmp, dir.resolve("part-00000.json"), ATOMIC_MOVE, REPLACE_EXISTING)
   }
 
   /** Attach to a streaming DataFrame. */

@@ -39,6 +39,22 @@ class OperatorSmokeSpec extends AnyFunSuite {
     assert(got === Seq("0-9", "0-9", "10-19", "10-19", "20-29", "20-29", "30+", "30+"))
   }
 
+  test("round_cents rounds the binary double half away from zero, as DuckDB does") {
+    import org.apache.spark.sql.functions.{col, round}
+    graft.functions.GraftFunctions.register(spark)
+    // 305.275 is binary 305.27499999…: Spark's round(x, 2) reads the
+    // decimal string and gives 305.28; DuckDB and round_cents give 305.27
+    val df = Seq(305275.0 / 1000, 0.125, -0.125, 2.5, 7.0).toDF("x")
+    val got = df.select(graft.functions.GraftFunctions.roundCents(col("x")))
+      .as[Double].collect().toSeq
+    assert(got === Seq(305.27, 0.13, -0.13, 2.5, 7.0))
+    assert(df.select(round(col("x"), 2)).as[Double].head() === 305.28)
+    // the dashboard shape: a mean of 1000 integers summing to 305275
+    val avgChars = "avg(CASE WHEN id < 275 THEN 306 ELSE 305 END)"
+    assert(spark.sql(s"SELECT round_cents($avgChars), round($avgChars, 2) FROM range(1000)")
+      .as[(Double, Double)].head() === ((305.27, 305.28)))
+  }
+
   test("multimodal feature stub: byte stats of a known payload") {
     val feats = MultimodalOps.features(spark, SparkTestSession.sf0001)
       .filter("doc_id = 0").head()

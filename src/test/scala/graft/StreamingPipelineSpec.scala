@@ -1,8 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{lit, to_timestamp}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Tables.Post
@@ -91,6 +98,80 @@ class StreamingPipelineSpec extends AnyFunSuite {
       val ids = rows.map(_.getAs[String]("id")).toSet
       assert(!ids.contains("id30") && ids.contains("id31") && ids.contains("id130"))
     } finally q.stop()
+  }
+
+  /** Jobs started by `f`, counted by a listener. The bus delivers events
+    * in order, so once a later marker job has been seen every job of `f`
+    * has been counted. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(body: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      inGroup("jobs-of")(f)
+      inGroup("jobs-of-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-of-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("jobs-of-marker"), "listener bus did not drain")
+      groups.asScala.count(_ == "jobs-of")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshot file: reads back, matches Spark's JSON writer byte for byte, replaced whole, one job per update") {
+    val dir = Files.createTempDirectory("snapfile")
+    val path = dir.resolve("posts")
+    val sink = new SnapshotSink(path.toString, maxRows = 100)
+    // the pipeline's output shape; a millisecond processed_at round-trips
+    // exactly through the JSON timestamp format, and null, non-ASCII and
+    // escaped titles exercise the generator
+    def batch(ids: Range) = Pipeline.prune(Pipeline.enrich(ids.map(i =>
+        mkPost(i, if (i % 7 == 0) null else "é \"" + i + "\"\t")).toDF()))
+      .withColumn("processed_at", to_timestamp(lit("2025-01-01 00:00:00.123")))
+    def writerBytes(rows: Seq[Row], schema: StructType): Seq[Byte] = {
+      val out = Files.createTempDirectory(dir, "writer").resolve("out")
+      spark.createDataFrame(rows.asJava, schema).coalesce(1).write.json(out.toString)
+      val parts = Files.list(out).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(parts.size === 1)
+      Files.readAllBytes(parts.head).toSeq
+    }
+    for ((ids, batchId) <- Seq(1 to 60, 61 to 130).zipWithIndex) {
+      val b = batch(ids).persist() // as attachWithSnapshot hands it over
+      try {
+        assert(jobsOf(sink.update(b, batchId)) === 1)
+        val rows = sink.snapshotRows
+        assert(rows.map(_.getAs[String]("id")) ===
+          (math.max(1, ids.last - 99) to ids.last).map(i => s"id$i"))
+        assert(spark.read.schema(b.schema).json(path.toString).collect().toSeq === rows)
+        // batch 2's file replaced batch 1's; no temp or _temporary file left
+        assert(Files.list(path).iterator.asScala.map(_.getFileName.toString).toSeq ===
+          Seq("part-00000.json"))
+        assert(Files.readAllBytes(path.resolve("part-00000.json")).toSeq ===
+          writerBytes(rows, b.schema))
+      } finally b.unpersist()
+    }
+  }
+
+  test("alert cap keeps the newest maxAlerts of a pruned over-cap batch, oldest first") {
+    // 12 alerting posts in shuffled order; the pruned shape has no
+    // created_utc, so the cap must rank by the arrival timestamp
+    val posts = new scala.util.Random(7).shuffle((1 to 12).map(i =>
+      mkPost(i, "hopeless and worthless", "thinking about suicide")))
+    val batch = Pipeline.prune(Pipeline.enrich(posts.toDF().repartition(3)))
+    assert(!batch.columns.contains("created_utc"))
+    val alerts = new AlertSink(threshold = 30, maxAlerts = 5)
+    alerts.update(batch, 0L)
+    assert(alerts.alertRows.map(_.getAs[String]("id")) === (8 to 12).map(i => s"id$i"))
   }
 
   test("alert branch: high-risk rows split to the side sink, snapshot gets all") {

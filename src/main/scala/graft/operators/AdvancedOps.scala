@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.roundCents
 import graft.model.Tables
 
 /** Capability extensions beyond the reference's surface: as-of join,
@@ -123,7 +124,7 @@ object AdvancedOps {
       .agg(
         count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("total_price"),
-        round(avg(col("o_totalprice")), 2).as("avg_price"),
+        roundCents(avg(col("o_totalprice"))).as("avg_price"),
       )
       .withColumn("month_label", date_format(col("month"), "yyyy-MM"))
       .orderBy(col("month"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** User-behavior analytics over the event stream: conversion funnel and
   * retention cohorts — the two aggregate shapes every product-analytics
@@ -25,7 +25,7 @@ object BehaviorOps {
     * hash-partitioned on user_id and sorted (user_id, ts_us, event_id)
     * within partitions, materialized once per session. The checkpoint
     * keeps the partitioning AND the sort order visible (see
-    * [[DedupOps.cachedPartitionedFrame]]), so the ~20 queries that run
+    * [[SharedFrames.partitionedFrame]]), so the ~20 queries that run
     * user-keyed windows or per-user aggregates over the event log do so
     * with NO exchange — and those ordering by (ts_us, event_id) skip
     * the sort too. This is the 100-TB shape: one clustered, time-sorted
@@ -33,7 +33,7 @@ object BehaviorOps {
     * co-partitioned instead of re-shuffling the raw log.
     */
   private[graft] def eventSeq(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedPartitionedFrame(spark, dir, "eventSeq") {
+    SharedFrames.partitionedFrame(spark, dir, "eventSeq") {
       Tables.fanOut(Tables.events(spark, dir))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts").as("ts_ns"), expr("ts div 1000").as("ts_us"), col("value"))
@@ -43,10 +43,6 @@ object BehaviorOps {
 
   private def ev(spark: SparkSession, dir: String): DataFrame =
     eventSeq(spark, dir).select(col("user_id"), col("event_type"), col("ts_us"))
-
-  /** Session-memoized distinct-user count, keyed like the frame cache. */
-  private val nUsersCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
   /** Shared per-(user, day, event_type) activity cube — the session's
     * materialized daily-activity rollup. Eight registry queries
@@ -63,7 +59,7 @@ object BehaviorOps {
     * magnitude smaller than the event log.
     */
   private[graft] def userDayCube(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "userDayCube") {
+    SharedFrames.frame(spark, dir, "userDayCube") {
       // coarsens the already-partitioned [[eventSeq]] — user_id is a
       // subset of the grouping key, so the BUILD aggregate is
       // exchange-free. The cube itself is cached WITHOUT pinned
@@ -86,7 +82,7 @@ object BehaviorOps {
     * more, shared by the active-user family (DAU/WAU, growth
     * accounting, retention cohorts). */
   private[graft] def userDays(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "userDays") {
+    SharedFrames.frame(spark, dir, "userDays") {
       userDayCube(spark, dir).select(col("user_id"), col("day")).distinct()
     }
 
@@ -96,7 +92,7 @@ object BehaviorOps {
     * Exact counts and exact integer cents; at 100 TB this is the daily
     * rollup mart those queries would read anyway. */
   private[graft] def typeDaily(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "typeDaily") {
+    SharedFrames.frame(spark, dir, "typeDaily") {
       userDayCube(spark, dir)
         .groupBy(col("event_type"), col("day"))
         .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
@@ -1652,11 +1648,8 @@ object BehaviorOps {
         types.map(t =>
           min(when(col("event_type") === t, col("ts_us"))).over(w).as(s"n_$t")): _*)
     // bounded driver scalar (PlanSpec: never cross-join a 1-row frame),
-    // memoized per session like the frames — an unmemoized .head() here
-    // would rerun a full pass every time the query is merely CONSTRUCTED
-    // (plan audits, smoke tests, both robustness partition settings)
-    val nUsers = nUsersCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    // memoized per session: query construction alone must not rerun it
+    val nUsers = SharedFrames.value(spark, dir, "nUsers")(
       e.select(countDistinct(col("user_id"))).head().getLong(0))
     withNext
       .select(col("user_id"), col("event_type").as("a_type"), col("ts_us"),

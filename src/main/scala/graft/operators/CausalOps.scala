@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Causal-inference and model-evaluation operators over the event log —
   * the experimentation tier beyond single-test statistics (`q_ab_ztest`,
@@ -74,7 +74,7 @@ object CausalOps {
     * [[BehaviorOps.userDayCube]], session-cached so each consumer
     * rereads ≤|users| rows. */
   private def userArm(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "userArm") {
+    SharedFrames.frame(spark, dir, "userArm") {
       BehaviorOps.userDayCube(spark, dir)
         .groupBy(col("user_id"))
         .agg(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Corpus-preparation operators a large-scale LLM training-data pipeline
   * needs beyond dedup/similarity (SURVEY.md §2.11 extensions): fixed-size
@@ -323,7 +323,7 @@ object CorpusOps {
     * Downstream is distinct counting, so the shared frame cannot move
     * a hash. */
   private def docTrigrams(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "docTrigrams") {
+    SharedFrames.frame(spark, dir, "docTrigrams") {
       Tables.fanOut(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .withColumn("toks", toksCol)

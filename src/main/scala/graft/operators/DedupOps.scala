@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Near-duplicate detection for training-data pipelines: MinHash,
   * SimHash, and n-gram Jaccard. All signature computation is per-row
@@ -17,46 +17,6 @@ import graft.model.Tables
   * signatures (Spark murmur3 `hash()` has no DuckDB twin).
   */
 object DedupOps {
-
-  /** Session-scoped materialized-frame cache — the feature-store
-    * pattern lifted to the query-suite level. ~6 registry queries share
-    * the minhash band table and the per-doc bigram table; without this
-    * each query re-runs the md5 fan-out / tokenize+sort pass from the
-    * parquet scan. Keyed on (applicationId, dir, frame) so a fresh
-    * driver never sees a stale entry and Verify/Bench (one app each)
-    * pay each shared frame exactly once. Entries are `localCheckpoint`ed
-    * — materialized on executor block storage, lineage truncated — which
-    * is the single-app stand-in for writing the feature table out once
-    * and scanning it per query at 100 TB.
-    */
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-  private[operators] def cachedFrame(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    frameCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, key),
-      build.localCheckpoint())
-
-  /** [[cachedFrame]] variant for frames whose VALUE includes their
-    * physical layout: the build runs with AQE momentarily disabled so
-    * the localCheckpoint's LogicalRDD captures the child plan's
-    * hash-partitioning and sort order (under AQE the pre-execution
-    * physical plan reports UnknownPartitioning and the checkpoint
-    * records neither). Downstream keyed windows and aggregates over the
-    * cached frame then meet their distribution/ordering requirements
-    * with NO exchange and NO sort — the exchange reuse that makes a
-    * shared partitioned+sorted frame worth materializing once per
-    * session (probe-verified: a user-keyed lag window over the frame
-    * plans Window ← Scan ExistingRDD directly).
-    */
-  private[operators] def cachedPartitionedFrame(spark: SparkSession, dir: String,
-      key: String)(build: => DataFrame): DataFrame =
-    frameCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, key), {
-      val aqe = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(aqe)
-      spark.conf.set(aqe, "false")
-      try build.localCheckpoint()
-      finally spark.conf.set(aqe, prev)
-    })
 
   /** Distinct non-empty whitespace tokens as an array column. */
   private def tokensCol = array_remove(array_distinct(split(col("text"), " ")), "")
@@ -94,7 +54,7 @@ object DedupOps {
     * — no pairwise stage ever sees a non-colliding pair.
     */
   private def bandBuckets(spark: SparkSession, dir: String): DataFrame =
-    cachedFrame(spark, dir, "bandBuckets")(withBandBuckets(signatures(spark, dir)))
+    SharedFrames.frame(spark, dir, "bandBuckets")(withBandBuckets(signatures(spark, dir)))
 
   /** (band, bucket) expansion on any frame carrying a `signature`
     * column — shared by the batch candidate generators and the streaming
@@ -220,7 +180,7 @@ object DedupOps {
     * two-pointer merge ([[graft.expr.IntersectSizeSorted]]) instead of a
     * hash-set build per candidate pair. */
   private[operators] def bigrams(spark: SparkSession, dir: String): DataFrame =
-    cachedFrame(spark, dir, "bigrams") {
+    SharedFrames.frame(spark, dir, "bigrams") {
     Tables.fanOut(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .withColumn("toks", split(col("text"), " "))
       .withColumn("grams", expr(
@@ -288,7 +248,7 @@ object DedupOps {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     // one minhash pass, not two: the band table is probe side AND corpus
     // side of the collision join, and arrives pre-materialized from the
-    // session frame cache
+    // SharedFrames registry
     val bands = bandBuckets(spark, dir)
     val probes = bands.filter(col("doc_id") % 50 === 0)
       .select(col("band"), col("bucket"), col("doc_id").as("a_id"))
@@ -332,7 +292,7 @@ object DedupOps {
     * bigram joins + intersect kernel. */
   private[operators] def jaccardPairs(spark: SparkSession, dir: String,
       cap: Int = 20, threshold: Double = 0.1): DataFrame =
-    cachedFrame(spark, dir, s"jaccardPairs:$cap:$threshold") {
+    SharedFrames.frame(spark, dir, s"jaccardPairs:$cap:$threshold") {
       // fanned out: this scored-pair table serves the whole graph
       // family, and without the spread its kernel pass ran on the
       // AQE-coalesced couple of partitions (measured ~0.6 s)
@@ -417,7 +377,7 @@ object DedupOps {
     * regardless of how degenerate a bucket gets.
     */
   private def cappedBandCandidates(spark: SparkSession, dir: String,
-      cap: Int): DataFrame = cachedFrame(spark, dir, s"cappedCands:$cap") {
+      cap: Int): DataFrame = SharedFrames.frame(spark, dir, s"cappedCands:$cap") {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket")).orderBy(col("doc_id"))
     val capped = bandBuckets(spark, dir)
@@ -626,7 +586,7 @@ object DedupOps {
     */
   def incrementalNearDup(spark: SparkSession, dir: String,
       cap: Int = 20, threshold: Double = 0.5): DataFrame = {
-    // one minhash+band pass feeds both split sides (session frame cache)
+    // one minhash+band pass feeds both split sides (SharedFrames)
     val bands = bandBuckets(spark, dir)
     def cappedSide(side: DataFrame, as: String) = {
       val w = Window.partitionBy(col("band"), col("bucket")).orderBy(col("doc_id"))

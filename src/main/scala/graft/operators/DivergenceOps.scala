@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Corpus-divergence analytics: the source-mixture audits a training-data
   * pipeline runs before blending corpora — per-source KL divergence
@@ -34,19 +34,8 @@ object DivergenceOps {
     * joins, no cartesian product in the plan. */
   private final case class Corpus(grid: DataFrame, t: Double, v: Double)
 
-  /** Session-scoped corpus-grid cache: six registry queries (KL, JS,
-    * keyness, classifier, calibration, reweighting) share the same
-    * smoothing grid; the (applicationId, dir) keying is the same
-    * amortization as DedupOps' frame cache — Verify/Bench pay the
-    * tokenize + grid build once, the way a shipped LM table is built
-    * once and read everywhere. The grid is localCheckpoint-materialized
-    * inside [[buildCorpus]]. */
-  private val corpusCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Corpus]
-
   private def corpus(spark: SparkSession, dir: String): Corpus =
-    corpusCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir), buildCorpus(spark, dir))
+    SharedFrames.value(spark, dir, "corpus")(buildCorpus(spark, dir))
 
   private def buildCorpus(spark: SparkSession, dir: String): Corpus = {
     // the one corpus-scale pass: the session's cached token stream +
@@ -185,7 +174,7 @@ object DivergenceOps {
     * identically by the classifier and its calibration audit, so it is
     * session-cached: one tf aggregate + score join instead of two. */
   private def lmScoredGrid(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "lmScoredGrid") {
+    SharedFrames.frame(spark, dir, "lmScoredGrid") {
       val cp = corpus(spark, dir)
       val lm = cp.grid.select(col("source").as("cand"), col("term"),
         log((col("c0") + lit(1.0)) / (col("ts") + lit(cp.v))).as("lp"))

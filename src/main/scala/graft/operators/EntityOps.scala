@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Entity-resolution operators: fuzzy (edit-distance) matching and
   * sorted-neighborhood pairing. The reference has no entity resolution at
@@ -37,7 +37,7 @@ object EntityOps {
       // the d≤3 pair table subsumes every tighter threshold, so the
       // fuzzy join and the cluster build share ONE cached blocked
       // self-join and filter it (dist is emitted per pair anyway)
-      DedupOps.cachedFrame(spark, dir, "fuzzyPartPairs") {
+      SharedFrames.frame(spark, dir, "fuzzyPartPairs") {
         buildFuzzyPairs(spark, dir, 3, 40)
       }.filter(col("dist") <= maxDist)
         .orderBy(col("a_key"), col("b_key")) // re-assert the output order

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Graph post-processing for dedup pipelines: candidate PAIRS (from
   * MinHash bands, cosine thresholds, …) become duplicate GROUPS via
@@ -175,7 +175,7 @@ object GraphOps {
     * the O(log d)-round star loop is the expensive part — same
     * amortization discipline as the pair frames themselves. */
   private def nearDupCC(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "nearDupCC") {
+    SharedFrames.frame(spark, dir, "nearDupCC") {
       connectedComponentsStar(
         SimilarityOps.nearDupPairs(spark, dir), "a_id", "b_id")
     }
@@ -185,7 +185,7 @@ object GraphOps {
     * materialized once: canonical selection, the leakage-free split,
     * and the cluster span census all consume it. */
   private def jaccardCC(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "jaccardCC") {
+    SharedFrames.frame(spark, dir, "jaccardCC") {
       connectedComponentsStar(
         DedupOps.jaccardPairs(spark, dir).select(col("a_id"), col("b_id")),
         "a_id", "b_id")
@@ -490,11 +490,11 @@ object GraphOps {
     * nation, one row per pair with its lineitem count) — the shared
     * graph under [[hitsNationTrade]] and [[twoHopReach]]. The fact-fact
     * equi-join + broadcast dims shuffles once on the nation pair, and
-    * the session frame cache materializes the ≤|nations|² result so
+    * [[SharedFrames]] materializes the ≤|nations|² result so
     * every consumer rereads a tiny checkpoint, never the lineitem
     * table. */
   private[graft] def tradeEdges(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "tradeEdges") {
+    SharedFrames.frame(spark, dir, "tradeEdges") {
       Tables.fanOut(Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_suppkey")))
         .join(Tables.maybeBroadcast(Tables.orders(spark, dir)

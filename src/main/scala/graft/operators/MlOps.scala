@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** North-star text/ML operators over the documents corpus (SURVEY.md
   * §2.11): tokenization, TF-IDF, hash dedup — all pure DataFrame ops so
@@ -30,7 +30,7 @@ object MlOps {
     * per query. tf is an exact integer, so sharing the materialization
     * cannot move a hash. */
   private[graft] def docTf(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "docTf") {
+    SharedFrames.frame(spark, dir, "docTf") {
       docTerms(spark, dir)
         .groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"))
@@ -43,7 +43,7 @@ object MlOps {
     * downstream is exact integer counting or explicitly sorted output,
     * so the shared materialization cannot move a hash. */
   private[graft] def docTermsDistinct(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "docTermsDistinct") {
+    SharedFrames.frame(spark, dir, "docTermsDistinct") {
       docTerms(spark, dir).distinct()
     }
 
@@ -51,7 +51,7 @@ object MlOps {
     * (doc, source, lang, term) long table every per-source divergence /
     * mixture query re-derived with its own explode. */
   private[graft] def docTermsWide(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "docTerms") {
+    SharedFrames.frame(spark, dir, "docTerms") {
       Tables.fanOut(Tables.documents(spark, dir)
           .select(col("doc_id"), col("source"), col("lang"), col("text")))
         .select(col("doc_id"), col("source"), col("lang"),
@@ -365,19 +365,9 @@ object MlOps {
       .orderBy(col("step"))
   }
 
-  /** Session-scoped trainer cache: the merge table is a bounded driver
-    * artifact (steps rows) shared by the trainer report AND the encoder
-    * — the same (applicationId, dir)-keyed amortization as DedupOps'
-    * frame cache, so Verify/Bench pay the iterative training loop once,
-    * exactly like a shipped tokenizer is trained once and applied
-    * everywhere. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(Int, String, Long, Long)]]
-
   private def trainedMerges(spark: SparkSession, dir: String,
       steps: Int): Seq[(Int, String, Long, Long)] =
-    mergeCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, steps), {
+    SharedFrames.value(spark, dir, s"bpeMerges:$steps") {
     var vocab = docTerms(spark, dir)
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
       .withColumn("repr", concat_ws(" ", expr(
@@ -413,7 +403,7 @@ object MlOps {
       out += ((step, pair, cnt, totalSyms))
     }
     out.result()
-  })
+  }
 
   /** BPE ENCODER — the apply half of the trainer/encoder pair: take the
     * merges [[bpeMerges]] learned (a bounded `steps`-row driver handoff,
@@ -860,7 +850,7 @@ object MlOps {
     * both the association-rule miner and the k-core co-purchase graph.
     */
   private[graft] def baskets(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "baskets") {
+    SharedFrames.frame(spark, dir, "baskets") {
       Tables.fanOut(
           Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")))
         .select(col("l_orderkey").as("o"), col("l_partkey").as("item"))
@@ -872,7 +862,7 @@ object MlOps {
     * self-join instead of each paying it — the pair space stays bounded
     * by basket size squared, keyed on the order. */
   private[graft] def basketPairs(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "basketPairs") {
+    SharedFrames.frame(spark, dir, "basketPairs") {
       val b = baskets(spark, dir)
       b.select(col("o"), col("item").as("a_item"))
         .join(b.select(col("o"), col("item").as("b_item")), Seq("o"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Similarity search over the embeddings table (Array[Float] vectors).
   * Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
@@ -27,11 +27,11 @@ object SimilarityOps {
   }
 
   /** [[embDouble]] plus the per-vector L2 norm, materialized once per
-    * (app, dir) through the session frame cache — eleven ANN/similarity
+    * (app, dir) through [[SharedFrames]] — eleven ANN/similarity
     * queries start from this exact frame, and at 100 TB "embeddings
     * with norms" is a stored feature table, not a per-query recompute. */
   private def embNormed(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedFrame(spark, dir, "embNormed") {
+    SharedFrames.frame(spark, dir, "embNormed") {
       embDouble(spark, dir)
         .withColumn("nv", sqrt(dot(col("v"), col("v"))))
     }
@@ -415,16 +415,14 @@ object SimilarityOps {
 
   /** The (a_id, b_id, cosine) near-dup pair frame WITHOUT the
     * presentation sort, materialized once per (app, dir, threshold)
-    * through the session frame cache: six graph-family registry queries
+    * through [[SharedFrames]]: six graph-family registry queries
     * (components, degrees, triangles, pagerank, cluster sizes, …) all
     * start from these pairs, and each would otherwise re-run the
-    * bucket join + pairwise cosine stage from the parquet scan. Same
-    * amortization discipline as DedupOps' band/bigram tables — the
-    * single-app stand-in for writing the pair table out once at 100 TB.
+    * bucket join + pairwise cosine stage from the parquet scan.
     */
   private[operators] def nearDupPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame =
-    DedupOps.cachedFrame(spark, dir, s"nearDupPairs:$threshold") {
+    SharedFrames.frame(spark, dir, s"nearDupPairs:$threshold") {
       val e = embNormed(spark, dir)
         .withColumn("bucket", bucketExpr)
       val a = e.select(col("bucket"), col("vec_id").as("a_id"),

@@ -104,6 +104,16 @@ class SourceLintSpec extends AnyFunSuite {
       s"round-after-sum integer cast in oracle SQL:\n${bad.mkString("\n")}")
   }
 
+  test("no ad-hoc session memo in the operators") {
+    // session artifacts are memoized in graft.model.SharedFrames, the one
+    // registry; a TrieMap or getOrElseUpdate in an operator is a second
+    // memo with its own keying, outside the registry's contract
+    val bad = offenders("TrieMap|getOrElseUpdate".r)
+      .filter(_.startsWith("src/main/scala/graft/operators/"))
+    assert(bad.isEmpty,
+      s"ad-hoc memo in an operator (use SharedFrames):\n${bad.mkString("\n")}")
+  }
+
   // ---------------------------------------------------------------------
   // Oracle window-sum output-type lint.
   //

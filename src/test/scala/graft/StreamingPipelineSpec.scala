@@ -1,17 +1,16 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{lit, to_timestamp}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.jobsOf
 import graft.model.Tables.Post
 import graft.streaming.{AlertSink, Pipeline, SnapshotSink}
 
@@ -98,33 +97,6 @@ class StreamingPipelineSpec extends AnyFunSuite {
       val ids = rows.map(_.getAs[String]("id")).toSet
       assert(!ids.contains("id30") && ids.contains("id31") && ids.contains("id130"))
     } finally q.stop()
-  }
-
-  /** Jobs started by `f`, counted by a listener. The bus delivers events
-    * in order, so once a later marker job has been seen every job of `f`
-    * has been counted. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup(g: String)(body: => Unit): Unit = {
-        sc.setJobGroup(g, g)
-        try body finally sc.clearJobGroup()
-      }
-      inGroup("jobs-of")(f)
-      inGroup("jobs-of-marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!groups.contains("jobs-of-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("jobs-of-marker"), "listener bus did not drain")
-      groups.asScala.count(_ == "jobs-of")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("snapshot file: reads back, matches Spark's JSON writer byte for byte, replaced whole, one job per update") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{cmsCounts, riskScore, topKValues}
 import graft.functions.TextFunctions
 import graft.model.Tables
 import graft.operators.{AdvancedOps, BehaviorOps, DashboardOps, DedupOps, MlOps, MultimodalOps, RelationalOps, SimilarityOps, TextAnalysisOps, TimeWindowOps}
@@ -371,14 +372,13 @@ object SparkEntry {
     * factorize array cells, and integer strings render identically in
     * both engines (no float-format drift). */
   private def topKValuesQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // fanOut: the partial (object-hash) aggregate otherwise runs inside
     // the single-split scan task
     Tables.fanOut(Tables.events(spark, dir).select(col("event_type"), col("value")))
       .groupBy(col("event_type"))
       .agg(array_join(
         transform(
-          call_function("top_k_values", col("value"), lit(5)),
+          topKValues(col("value"), 5),
           x => round(x * 100, 0).cast("bigint").cast("string")),
         ",").as("top_values"))
       .orderBy(col("event_type"))
@@ -397,12 +397,10 @@ object SparkEntry {
     * family (counter addition commutes). Raw estimates — the
     * oracle-facing audit is [[cmsCountsQuery]]. */
   private[graft] def cmsCountsRaw(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val probes = array(cmsProbeTerms.map(lit): _*)
     graft.operators.MlOps.docTermsWide(spark, dir)
       .select(col("source"), col("term"))
       .groupBy(col("source"))
-      .agg(call_function("cms_counts", col("term"), probes).as("ests"),
+      .agg(cmsCounts(col("term"), cmsProbeTerms).as("ests"),
         count(lit(1)).as("n_terms"))
       .select(col("source"), col("n_terms"), explode(col("ests")).as("pair"))
       .select(col("source"),
@@ -427,10 +425,8 @@ object SparkEntry {
     // exact counts (the same frame cmsCountsRaw aggregates)
     val terms = graft.operators.MlOps.docTermsWide(spark, dir)
       .select(col("source"), col("term"))
-    graft.functions.GraftFunctions.register(spark)
-    val probes = array(cmsProbeTerms.map(lit): _*)
     val ests = terms.groupBy(col("source"))
-      .agg(call_function("cms_counts", col("term"), probes).as("ests"),
+      .agg(cmsCounts(col("term"), cmsProbeTerms).as("ests"),
         count(lit(1)).as("n_terms"))
       .select(col("source"), col("n_terms"), explode(col("ests")).as("pair"))
       .select(col("source"), col("n_terms"),
@@ -529,13 +525,12 @@ object SparkEntry {
       .orderBy(col("surviving_doc_id"))
 
   /** U-2 as the custom Catalyst RiskScore expression (whole-stage
-    * codegen'd, registered in the function registry) — must hash-match
+    * codegen'd, called as a typed Column) — must hash-match
     * q_risk_score's Column-algebra formulation. */
   private def riskScoreExprQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        call_function("risk_score", col("text")).as("risk_score"))
+        riskScore(col("text")).as("risk_score"))
       .orderBy(col("doc_id"))
   }
 

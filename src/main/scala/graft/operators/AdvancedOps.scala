@@ -156,23 +156,23 @@ object AdvancedOps {
       .orderBy(col("event_type"))
   }
 
-  /** GROUPING SETS through the SQL surface (DataFrame API only exposes
-    * rollup/cube): per-type totals, per-cohort totals, and the grand
+  /** GROUPING SETS: per-type totals, per-cohort totals, and the grand
     * total in one pass over an Expand. */
-  def eventGroupingSets(spark: SparkSession, dir: String): DataFrame = {
+  def eventGroupingSets(spark: SparkSession, dir: String): DataFrame =
     ev(spark, dir)
       .withColumn("cohort", col("user_id") % 3)
-      .createOrReplaceTempView("graft_events_gs")
-    spark.sql(
-      """SELECT
-           CASE WHEN GROUPING(event_type) = 1 THEN 'ALL' ELSE event_type END AS event_type,
-           CASE WHEN GROUPING(cohort) = 1 THEN -1 ELSE cohort END AS cohort,
-           count(1) AS n,
-           round(sum(value), 2) AS total_value
-         FROM graft_events_gs
-         GROUP BY GROUPING SETS ((event_type), (cohort), ())
-         ORDER BY event_type, cohort""")
-  }
+      .groupingSets(Seq(Seq(col("event_type")), Seq(col("cohort")), Seq()),
+        col("event_type"), col("cohort"))
+      .agg(
+        when(grouping("event_type") === 1, lit("ALL"))
+          .otherwise(col("event_type")).as("event_type_all"),
+        when(grouping("cohort") === 1, lit(-1))
+          .otherwise(col("cohort")).as("cohort_all"),
+        count(lit(1)).as("n"),
+        round(sum(col("value")), 2).as("total_value"))
+      .select(col("event_type_all").as("event_type"),
+        col("cohort_all").as("cohort"), col("n"), col("total_value"))
+      .orderBy(col("event_type"), col("cohort"))
 
   /** argmax/argmin (max_by/min_by) with a deterministic composite key:
     * value has exactly 2 decimals, so round(value*100) is an exact

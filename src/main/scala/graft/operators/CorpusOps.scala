@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{bloomAgg, mightContain}
 import graft.model.{SharedFrames, Tables}
 
 /** Corpus-preparation operators a large-scale LLM training-data pipeline
@@ -371,18 +372,16 @@ object CorpusOps {
     */
   def bloomDecontaminate(spark: SparkSession, dir: String,
       benchMax: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val grams = docTrigrams(spark, dir)
     // used twice (bloom build + exact confirm): materialize the tiny
     // bench gram set once instead of re-running the expansion
     val bench = grams.filter(col("doc_id") < benchMax)
       .select(col("gram")).distinct().localCheckpoint()
     val bloomBytes = bench
-      .agg(expr(
-        "bloom_agg(xxhash64(gram), cast(4096 AS bigint), cast(65536 AS bigint))"))
+      .agg(bloomAgg(xxhash64(col("gram")), 4096L, 65536L))
       .head().getAs[Array[Byte]](0)
     grams.filter(col("doc_id") >= benchMax)
-      .filter(call_function("might_contain", lit(bloomBytes), xxhash64(col("gram"))))
+      .filter(mightContain(bloomBytes, xxhash64(col("gram"))))
       .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gram")).as("n_hits"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.roundCents
+import graft.functions.GraftFunctions.{riskScore, roundCents}
 import graft.functions.TextFunctions
 import graft.model.Tables
 
@@ -20,17 +20,17 @@ object DashboardOps {
     * stream. One narrow projection, fully codegen'd.
     */
   def scoredDocuments(spark: SparkSession, dir: String): DataFrame = {
-    // The native RiskScore expression generates ~10 lines of Java per use
-    // vs the 16-way contains tree of the Column-algebra form (which, once
-    // a filter predicate duplicates it, dominates codegen compile time).
-    graft.functions.GraftFunctions.register(spark)
+    // riskScore builds the native RiskScore expression on any session: ~10
+    // lines of Java per use vs the 16-way contains tree of the Column-algebra
+    // form (which, once a filter predicate duplicates it, dominates codegen
+    // compile time).
     Tables.fanOut(Tables.documents(spark, dir))
       .select(
         col("doc_id"),
         col("lang"),
         col("source"),
         col("n_chars"),
-        call_function("risk_score", col("text")).as("risk_score"),
+        riskScore(col("text")).as("risk_score"),
       )
   }
 
@@ -145,10 +145,10 @@ object DashboardOps {
     scored.createOrReplaceTempView("graft_dashboard_scored")
     val payload = spark.sql(
       """SELECT 'stats' AS section, 'all' AS key,
-           CAST(count(*) AS BIGINT) AS n, round_cents(avg(risk_score)) AS metric
+           CAST(count(*) AS BIGINT) AS n, avg(risk_score) AS metric
          FROM graft_dashboard_scored
          UNION ALL
-         SELECT 'stats', 'avg_chars', CAST(count(*) AS BIGINT), round_cents(avg(n_chars))
+         SELECT 'stats', 'avg_chars', CAST(count(*) AS BIGINT), avg(n_chars)
          FROM graft_dashboard_scored
          UNION ALL
          SELECT 'stats', 'high_risk',
@@ -156,7 +156,7 @@ object DashboardOps {
            CAST(NULL AS DOUBLE)
          FROM graft_dashboard_scored
          UNION ALL
-         SELECT 'lang', lang, CAST(count(*) AS BIGINT), round_cents(avg(risk_score))
+         SELECT 'lang', lang, CAST(count(*) AS BIGINT), avg(risk_score)
          FROM graft_dashboard_scored GROUP BY lang
          UNION ALL
          SELECT 'hist', b.bucket, CAST(coalesce(c.n, 0) AS BIGINT), CAST(NULL AS DOUBLE)
@@ -180,6 +180,8 @@ object DashboardOps {
                FROM (SELECT doc_id, risk_score FROM graft_dashboard_scored
                      ORDER BY doc_id DESC LIMIT 10))
          ORDER BY section, key""")
+      // rounds the means; the identity on the other rows (NULL, integers)
+      .withColumn("metric", roundCents(col("metric")))
     // Materialize the (22-row) payload eagerly so neither the scored
     // cache nor the temp view outlives the call in a shared session:
     // localCheckpoint pins the tiny result, the corpus-sized cache is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.intersectSizeSorted
 import graft.model.{SharedFrames, Tables}
 
 /** Near-duplicate detection for training-data pipelines: MinHash,
@@ -212,7 +213,6 @@ object DedupOps {
     // the feature-store pattern: materialize the per-doc feature table
     // once, join it many times. (Blocks are freed by the context cleaner
     // once the query's result is materialized and dereferenced.)
-    graft.functions.GraftFunctions.register(spark)
     val cand = candidates.localCheckpoint()
     val g = bigrams(spark, dir)
       .join(candidateIds(cand), Seq("doc_id"), "left_semi")
@@ -226,7 +226,7 @@ object DedupOps {
       // of grams per side across every candidate pair; arrays arrive
       // sorted from the feature table above)
       .withColumn("inter",
-        call_function("intersect_size_sorted", col("a_grams"), col("b_grams")))
+        intersectSizeSorted(col("a_grams"), col("b_grams")))
       .withColumn("uni", size(col("a_grams")) + size(col("b_grams")) - col("inter"))
       .withColumn("jaccard",
         round(col("inter") / when(col("uni") === 0, 1).otherwise(col("uni")), 6))
@@ -313,7 +313,6 @@ object DedupOps {
     */
   def containment(spark: SparkSession, dir: String,
       cap: Int = 20, threshold: Double = 0.8): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cand = cappedBandCandidates(spark, dir, cap) // cache-materialized
     val g = bigrams(spark, dir)
       .join(candidateIds(cand), Seq("doc_id"), "left_semi")
@@ -323,7 +322,7 @@ object DedupOps {
       .join(g.select(col("doc_id").as("a_id"), col("grams").as("a_grams")), Seq("a_id"))
       .join(g.select(col("doc_id").as("b_id"), col("grams").as("b_grams")), Seq("b_id"))
       .withColumn("inter",
-        call_function("intersect_size_sorted", col("a_grams"), col("b_grams")))
+        intersectSizeSorted(col("a_grams"), col("b_grams")))
       .withColumn("containment_a",
         round(col("inter") / denom(size(col("a_grams"))), 6))
       .withColumn("containment_b",
@@ -530,7 +529,6 @@ object DedupOps {
     */
   def minhashEstVsExact(spark: SparkSession, dir: String,
       cap: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cand = cappedBandCandidates(spark, dir, cap) // cache-materialized
     val ids = candidateIds(cand).localCheckpoint() // keys both feature fetches
     val sig = signatures(spark, dir)
@@ -550,7 +548,7 @@ object DedupOps {
         """size(filter(sequence(1, 8), i ->
              element_at(a_parts, i) = element_at(b_parts, i)))""") / 8.0, 6))
       .withColumn("inter",
-        call_function("intersect_size_sorted", col("a_toks"), col("b_toks")))
+        intersectSizeSorted(col("a_toks"), col("b_toks")))
       .withColumn("uni", size(col("a_toks")) + size(col("b_toks")) - col("inter"))
       .withColumn("exact_jaccard",
         round(col("inter") / when(col("uni") === 0, 1).otherwise(col("uni")), 6))
@@ -672,7 +670,6 @@ object DedupOps {
     */
   def prefixJaccardJoin(spark: SparkSession, dir: String,
       cap: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // per-doc distinct tokens = the session-cached presence pairs (the
     // local tokenize+explode ran ~3x: df counts, prefix probe, verify
     // sets — now all three read the shared materialization)
@@ -707,7 +704,7 @@ object DedupOps {
       .join(sets.select(col("doc_id").as("a_id"), col("toks").as("a_toks")), Seq("a_id"))
       .join(sets.select(col("doc_id").as("b_id"), col("toks").as("b_toks")), Seq("b_id"))
       .withColumn("inter",
-        call_function("intersect_size_sorted", col("a_toks"), col("b_toks")))
+        intersectSizeSorted(col("a_toks"), col("b_toks")))
       .withColumn("jaccard", round(col("inter") /
         (size(col("a_toks")) + size(col("b_toks")) - col("inter")), 6))
       .filter(col("jaccard") >= 0.3)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{byteStats, chunkSplit}
 import graft.model.Tables
 
 /** Multimodal-column plumbing: payloads as opaque `binary` columns with a
@@ -43,10 +44,9 @@ object MultimodalOps {
     */
   def extractFeatures(spark: SparkSession, dir: String): Dataset[MediaFeatures] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     withPayload(Tables.fanOut(Tables.documents(spark, dir)))
       .select(col("doc_id"),
-        call_function("byte_stats", col("payload")).as("bs"))
+        byteStats(col("payload")).as("bs"))
       .select(col("doc_id"), col("bs.n_bytes").as("n_bytes"),
         col("bs.mean_byte").as("mean_byte"), col("bs.max_byte").as("max_byte"),
         col("bs.min_byte").as("min_byte"))
@@ -120,13 +120,12 @@ object MultimodalOps {
     * shuffle, payload bytes never do.
     */
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the chunk table feeds the census AND the join back — one kernel
     // pass (feature-store pattern)
     val chunks = Tables.fanOut(
         Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"),
-        explode(call_function("chunk_split", col("text"))).as("chunk"))
+        explode(chunkSplit(col("text"))).as("chunk"))
       .localCheckpoint()
     val census = chunks.groupBy(col("chunk")).agg(count(lit(1)).as("n_occ"))
     chunks.join(census, Seq("chunk"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{dotProduct => dot}
 import graft.model.{SharedFrames, Tables}
 
 /** Similarity search over the embeddings table (Array[Float] vectors).
@@ -20,7 +21,6 @@ import graft.model.{SharedFrames, Tables}
 object SimilarityOps {
 
   private def embDouble(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.fanOut(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -35,14 +35,6 @@ object SimilarityOps {
       embDouble(spark, dir)
         .withColumn("nv", sqrt(dot(col("v"), col("v"))))
     }
-
-  /** Native codegen'd dot product (graft.expr.DotProduct) — replaces the
-    * interpreted aggregate(zip_with(...)) HOF pair in every pairwise
-    * kernel below; summation order (left-to-right) is identical so all
-    * oracle hashes are unchanged. */
-  private def dot(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("dot_product", a, b)
 
   /** Brute-force cosine top-3 neighbors for query vectors vec_id < 5.
     * The query side is broadcast; ranking is on the rounded score so

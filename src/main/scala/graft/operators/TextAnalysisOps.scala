@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{fingerprint, freqItems, ngramPos}
 import graft.model.Tables
 
 /** Corpus text analysis for training-data pipelines: language-ID
@@ -245,12 +246,11 @@ object TextAnalysisOps {
     * one row per language regardless).
     */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     MlOps.docTermsWide(spark, dir)
       .select(col("lang"), col("term"))
       .groupBy(col("lang"))
       .agg(array_join(
-        call_function("freq_items", col("term"), lit(10)), ",").as("heavy_hitters"))
+        freqItems(col("term"), 10), ",").as("heavy_hitters"))
       .orderBy(col("lang"))
   }
 
@@ -267,11 +267,10 @@ object TextAnalysisOps {
     * sample, the sketch path alone stays constant-memory.
     */
   def heavyHittersAudit(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the cached token stream feeds the sketch AND the exact census
     val terms = MlOps.docTermsWide(spark, dir).select(col("lang"), col("term"))
     val sk = terms.groupBy(col("lang"))
-      .agg(call_function("freq_items", col("term"), lit(k)).as("cands"),
+      .agg(freqItems(col("term"), k).as("cands"),
         count(lit(1)).as("n_tokens"))
     val guaranteed = terms.groupBy(col("lang"), col("term"))
       .agg(count(lit(1)).as("c"))
@@ -300,12 +299,11 @@ object TextAnalysisOps {
     * whose every `substring` re-scans the string to find char i.
     */
   def fingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // fanOut: the per-character walk below is the per-row CPU hot spot of
     // the whole text tier, and the single-split scan would run it in one
     // task
     Tables.fanOut(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .withColumn("fingerprint", call_function("fingerprint", col("text")))
+      .withColumn("fingerprint", fingerprint(col("text")))
       .select(col("doc_id"), col("fingerprint"))
       .orderBy(col("doc_id"))
   }
@@ -422,12 +420,11 @@ object TextAnalysisOps {
     * aggregates away.
     */
   def udtfNgramCensus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.fanOut(
         Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         expr("filter(split(text, ' '), x -> x != '')").as("toks"))
-      .select(col("doc_id"), expr("ngram_pos(toks, 3) AS (pos, gram)"))
+      .select(col("doc_id"), ngramPos(col("toks"), 3).as(Seq("pos", "gram")))
       .groupBy(col("gram"))
       .agg(
         count(lit(1)).as("n_occ"),

@@ -114,6 +114,18 @@ class SourceLintSpec extends AnyFunSuite {
       s"ad-hoc memo in an operator (use SharedFrames):\n${bad.mkString("\n")}")
   }
 
+  test("engine code calls graft's native expressions as typed Columns") {
+    // a by-name call resolves only on a session that ran register, and a
+    // SharedFrames frame is bound to the session that built it; the typed
+    // constructors in graft.functions.GraftFunctions need neither
+    val bad = offenders("""call_function\(|GraftFunctions\.register""".r)
+      .filter(_.startsWith("src/main/scala/graft/"))
+      .filterNot(_.startsWith("src/main/scala/graft/functions/"))
+    assert(bad.isEmpty,
+      s"by-name native function call (use the GraftFunctions constructor):\n" +
+        bad.mkString("\n"))
+  }
+
   // ---------------------------------------------------------------------
   // Oracle window-sum output-type lint.
   //

@@ -18,7 +18,8 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The risk histogram exercises scan → projection → the two signature
-    * scalar ops (clean/risk) → aggregation → join → sort: every layer.
+    * scalar ops (clean/risk) → aggregation → generator (`stack`): every
+    * layer.
     */
   def entry(spark: SparkSession): DataFrame =
     DashboardOps.riskHistogram(spark, "/root/testdata/sf0.001")

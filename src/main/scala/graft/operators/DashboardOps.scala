@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions.{riskScore, roundCents}
-import graft.functions.TextFunctions
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** The dashboard's hand-rolled Python statistics (reference:
   * dashboard/app.py:30-85), re-expressed as declarative aggregations over
@@ -16,23 +18,23 @@ import graft.model.Tables
   */
 object DashboardOps {
 
-  /** Risk-scored documents: the corpus stand-in for the processed-post
-    * stream. One narrow projection, fully codegen'd.
+  /** Risk-scored documents: the corpus stand-in for the posts the
+    * reference's streaming consumer scores once, at ingest. A session
+    * shared frame ([[graft.model.SharedFrames]]) holding only what the
+    * dashboard queries read, so a request is a small aggregate over it
+    * and never re-scores the corpus. `riskScore` is the native RiskScore
+    * expression: ~10 lines of Java per use vs the 16-way contains tree of
+    * the Column-algebra form.
     */
-  def scoredDocuments(spark: SparkSession, dir: String): DataFrame = {
-    // riskScore builds the native RiskScore expression on any session: ~10
-    // lines of Java per use vs the 16-way contains tree of the Column-algebra
-    // form (which, once a filter predicate duplicates it, dominates codegen
-    // compile time).
-    Tables.fanOut(Tables.documents(spark, dir))
-      .select(
+  def scoredDocuments(spark: SparkSession, dir: String): DataFrame =
+    SharedFrames.frame(spark, dir, "scoredDocuments") {
+      Tables.fanOut(Tables.documents(spark, dir)).select(
         col("doc_id"),
         col("lang"),
-        col("source"),
         col("n_chars"),
         riskScore(col("text")).as("risk_score"),
       )
-  }
+    }
 
   /** A-1 global count + A-2 global mean + A-3 conditional count
     * (reference: dashboard/app.py:43-45). One single-row aggregate.
@@ -90,22 +92,21 @@ object DashboardOps {
       .otherwise("30+")
 
   /** A-6 bucketed histogram with all four buckets always present even when
-    * empty (the reference pre-seeds the dict keys, dashboard/app.py:62) —
-    * realized as a right join against a literal bucket dimension.
+    * empty (the reference pre-seeds the dict keys, dashboard/app.py:62):
+    * one global aggregate of a conditional count per bucket, which
+    * `stack` turns into one row per bucket in label order. No join, no
+    * broadcast, no sort.
     */
   def riskHistogram(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val counts = scoredDocuments(spark, dir)
-      .groupBy(riskBucket(col("risk_score")).as("bucket"))
-      .agg(count(lit(1)).as("n"))
-    val buckets = riskBuckets.toDF("bucket")
-    // Left-outer from the 4-row literal bucket dim, broadcasting the
-    // (already ≤4-row) aggregated counts: no shuffle, and the preserved
-    // side is the streamed one so the broadcast hint is legal.
-    buckets
-      .join(broadcast(counts), Seq("bucket"), "left_outer")
-      .select(col("bucket"), coalesce(col("n"), lit(0L)).as("n"))
-      .orderBy(col("bucket"))
+    val labels = riskBuckets.indices.map(i => s"n$i")
+    val counts = riskBuckets.zip(labels).map { case (b, n) =>
+      count(when(col("bucket") === b, 1)).as(n)
+    }
+    val rows = riskBuckets.zip(labels).flatMap { case (b, n) => Seq(lit(b), col(n)) }
+    scoredDocuments(spark, dir)
+      .select(riskBucket(col("risk_score")).as("bucket"))
+      .agg(counts.head, counts.tail: _*)
+      .select(stack(lit(riskBuckets.size) +: rows: _*).as(Seq("bucket", "n")))
   }
 
   /** S-1 sort desc + limit (top-k recency; reference: dashboard/app.py:75).
@@ -121,8 +122,8 @@ object DashboardOps {
       .limit(k)
 
   /** F-1 high-risk filter (reference: kafka_consumer_simple.py:168,
-    * dashboard/app.py:45): the alert predicate as a standalone scan —
-    * pushed down into the parquet reader.
+    * dashboard/app.py:45): the alert predicate as a standalone filter
+    * over the scored frame.
     */
   def highRisk(spark: SparkSession, dir: String, threshold: Int = 30): DataFrame =
     scoredDocuments(spark, dir)
@@ -130,66 +131,53 @@ object DashboardOps {
       .select(col("doc_id"), col("risk_score"))
       .orderBy(col("doc_id"))
 
-  /** The `/api/stats` payload in ONE job (reference: dashboard/app.py:30-97
+  /** The `/api/stats` payload (reference: dashboard/app.py:30-97
     * assembles total/avg/high-risk/per-group/histogram/recent-10 into one
-    * response per request, each via its own Python rescan). Here the scored
-    * frame is computed ONCE and cached; every payload section reads the
-    * cache, so the corpus is scanned and risk-scored exactly once per
-    * refresh — at 100 TB the cache is the materialized serving view and
-    * each section is a small aggregate over it. The sections union into a
-    * tall (section, key, n, metric) frame so the whole payload is one
-    * hashable result set.
+    * response per request, each via its own Python rescan). Two bounded
+    * reads of the scored frame answer the whole request: one aggregate
+    * grouped by (lang, risk bucket), at most |lang| × 4 rows, and the top
+    * 10 by doc_id. The driver folds the first into the global, per-lang
+    * and histogram sections and numbers the second. Every sum is an exact
+    * integer, so each mean is the same double division `avg` performs.
+    * The rows come back as a tall (section, key, n, metric) local frame
+    * in (section, key) order, so the payload is one hashable result set.
+    * The request caches nothing and registers nothing on the session.
     */
   def dashboardPayload(spark: SparkSession, dir: String): DataFrame = {
-    val scored = scoredDocuments(spark, dir).cache()
-    scored.createOrReplaceTempView("graft_dashboard_scored")
-    val payload = spark.sql(
-      """SELECT 'stats' AS section, 'all' AS key,
-           CAST(count(*) AS BIGINT) AS n, avg(risk_score) AS metric
-         FROM graft_dashboard_scored
-         UNION ALL
-         SELECT 'stats', 'avg_chars', CAST(count(*) AS BIGINT), avg(n_chars)
-         FROM graft_dashboard_scored
-         UNION ALL
-         SELECT 'stats', 'high_risk',
-           CAST(sum(CASE WHEN risk_score >= 30 THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(NULL AS DOUBLE)
-         FROM graft_dashboard_scored
-         UNION ALL
-         SELECT 'lang', lang, CAST(count(*) AS BIGINT), avg(risk_score)
-         FROM graft_dashboard_scored GROUP BY lang
-         UNION ALL
-         SELECT 'hist', b.bucket, CAST(coalesce(c.n, 0) AS BIGINT), CAST(NULL AS DOUBLE)
-         FROM (VALUES ('0-9'), ('10-19'), ('20-29'), ('30+')) AS b(bucket)
-         LEFT JOIN (
-           SELECT CASE WHEN risk_score < 10 THEN '0-9'
-                       WHEN risk_score < 20 THEN '10-19'
-                       WHEN risk_score < 30 THEN '20-29'
-                       ELSE '30+' END AS bucket, count(*) AS n
-           FROM graft_dashboard_scored GROUP BY 1) c
-         ON b.bucket = c.bucket
-         UNION ALL
-         SELECT 'recent', CAST(doc_id AS STRING), CAST(rn AS BIGINT),
-           CAST(risk_score AS DOUBLE)
-         FROM (SELECT doc_id, risk_score,
-                 -- global window is SAFE here: its input is the 10-row
-                 -- TakeOrderedAndProject result, not the corpus (the
-                 -- WindowExec single-partition warning is about this
-                 -- bounded frame)
-                 row_number() OVER (ORDER BY doc_id DESC) AS rn
-               FROM (SELECT doc_id, risk_score FROM graft_dashboard_scored
-                     ORDER BY doc_id DESC LIMIT 10))
-         ORDER BY section, key""")
+    val scored = scoredDocuments(spark, dir)
+    val risk = col("risk_score")
+    // one row per (lang, bucket) cell; getAs[Long] reads a null sum as 0
+    val cells = scored
+      .groupBy(col("lang"), riskBucket(risk).as("bucket"))
+      .agg(count(lit(1)).as("n"), sum(risk).as("risk"), count(col("n_chars")).as("n_chars"),
+        sum(col("n_chars")).as("chars"), count(when(risk >= 30, 1)).as("high"))
+      .collect().toSeq
+    val recent = scored.select(col("doc_id"), risk)
+      .orderBy(col("doc_id").desc).limit(10).collect()
+
+    def total(rs: Seq[Row], c: String): Long = rs.map(_.getAs[Long](c)).sum
+    def mean(rs: Seq[Row], sumCol: String, nCol: String): Any = {
+      val n = total(rs, nCol)
+      if (n == 0) null else total(rs, sumCol).toDouble / n
+    }
+    val hist = riskBuckets.map(b =>
+      Row("hist", b, total(cells.filter(_.getAs[String]("bucket") == b), "n"), null))
+    val byLang = cells.groupBy(r => Option(r.getAs[String]("lang"))).toSeq.sortBy(_._1)
+      .map { case (lang, rs) => Row("lang", lang.orNull, total(rs, "n"), mean(rs, "risk", "n")) }
+    val top = recent.toSeq.zipWithIndex.map { case (r, i) =>
+      Row("recent", r.getLong(0).toString, i + 1L, r.getInt(1).toDouble)
+    }.sortBy(_.getString(1))
+    val stats = Seq(
+      Row("stats", "all", total(cells, "n"), mean(cells, "risk", "n")),
+      Row("stats", "avg_chars", total(cells, "n"), mean(cells, "chars", "n_chars")),
+      Row("stats", "high_risk", if (cells.isEmpty) null else total(cells, "high"), null))
+    val schema = StructType(Seq(
+      StructField("section", StringType, nullable = false),
+      StructField("key", StringType),
+      StructField("n", LongType),
+      StructField("metric", DoubleType)))
+    spark.createDataFrame((hist ++ byLang ++ top ++ stats).asJava, schema)
       // rounds the means; the identity on the other rows (NULL, integers)
       .withColumn("metric", roundCents(col("metric")))
-    // Materialize the (22-row) payload eagerly so neither the scored
-    // cache nor the temp view outlives the call in a shared session:
-    // localCheckpoint pins the tiny result, the corpus-sized cache is
-    // released, and the namespaced view is dropped. One corpus scan +
-    // risk pass per refresh, no session-level residue.
-    val out = payload.localCheckpoint(true)
-    scored.unpersist()
-    spark.catalog.dropTempView("graft_dashboard_scored")
-    out
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,14 +40,17 @@ class RiskScoreExprSpec extends AnyFunSuite {
   }
 
   test("sql extension class injects the function at session build time") {
-    // The extensions hook is exercised via the same builder on the running
-    // context: a cloned session with the extension applied.
-    val ext = new graft.functions.GraftExtensions
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .withExtensions(ext)
-    val s2 = builder.getOrCreate()
-    GraftFunctions.register(s2) // getOrCreate may reuse the base session
+    // create(), not getOrCreate(): the latter hands back the running test
+    // session, which never sees the extension. No register call either,
+    // so only the extension can make risk_score resolve.
+    val base = spark
+    val s2 = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
+      .create()
+    // create() makes the new session the default and active one
+    SparkSession.setDefaultSession(base)
+    SparkSession.setActiveSession(base)
+    assert(s2 ne base)
     assert(s2.sql("SELECT risk_score('panic and panic') AS r").head().getInt(0) === 10)
   }
 }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{BehaviorOps, MlOps}
+import graft.operators.{BehaviorOps, DashboardOps, MlOps}
 
 /** A query's result must not depend on which session built the shared
   * frames it reads. `SharedFrames` hands back a frame bound to the
@@ -38,6 +38,9 @@ class SessionIndependenceSpec extends AnyFunSuite {
     "q_cms_counts" -> ((s, d) => MlOps.docTermsWide(s, d)),
     "q_heavy_hitters" -> ((s, d) => MlOps.docTermsWide(s, d)),
     "q_prefix_join" -> ((s, d) => MlOps.docTermsDistinct(s, d)),
+    "q_dashboard_payload" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
+    "q_global_stats" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
+    "q_risk_histogram" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
   )
 
   for ((name, buildShared) <- queries)

@@ -114,6 +114,17 @@ class SourceLintSpec extends AnyFunSuite {
       s"ad-hoc memo in an operator (use SharedFrames):\n${bad.mkString("\n")}")
   }
 
+  test("no ad-hoc cache in the operators") {
+    // a frame several queries share is materialized once in
+    // graft.model.SharedFrames; a cache()/persist( in an operator pins
+    // blocks per call that the caller must remember to release, and an
+    // unpersist of a plan the caller had cached drops the caller's entry
+    val bad = offenders("""\.cache\(\)|\.persist\(""".r)
+      .filter(_.startsWith("src/main/scala/graft/operators/"))
+    assert(bad.isEmpty,
+      s"cache()/persist( in an operator (use SharedFrames):\n${bad.mkString("\n")}")
+  }
+
   test("engine code calls graft's native expressions as typed Columns") {
     // a by-name call resolves only on a session that ran register, and a
     // SharedFrames frame is bound to the session that built it; the typed

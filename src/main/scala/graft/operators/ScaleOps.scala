@@ -1070,20 +1070,6 @@ object ScaleOps {
       .orderBy(col("version"), col("source"))
   }
 
-  /** Change feed over the same versioned table ([[timeTravel]]'s
-    * artifact): the incremental-consumer read that replaces a full
-    * snapshot diff. The window (0, 2] spans the nightly append (v1) and
-    * the quality re-freeze overwrite (v2), so the feed exercises the
-    * full commit algebra: v1's files are added AND removed inside the
-    * window and cancel to nothing, v0's files surface as `delete` rows,
-    * v2's as `insert` rows — exactly the net state transition a
-    * downstream index/dedup/cache consumer must apply. The oracle
-    * recomputes both sides from the raw table and the same membership
-    * predicates, proving the log fold's net-change set is exact. Feed
-    * rows aggregate per (change_type, source) before leaving the scan —
-    * at 100 TB the consumer reads only the files named by the log
-    * window, never the table.
-    */
   /** Registry face of the DSv2 BATCH path ([[graft.sources.VersionedStreamProvider]]):
     * the quality re-freeze snapshot read back `versionAsOf=2` through the
     * provider with a doc_id range predicate — the comparison is PUSHED to
@@ -1386,16 +1372,15 @@ object ScaleOps {
       t.overwrite(spark, base                              // v1: bad freeze
         .filter(substring(col("pri"), 1, 1) <= "3")        // priorities 1-3
         .withColumn("cents", col("cents") + 7L))
-      t.restore(spark, 0L)                                 // v2: rollback
+      t.restore(0L)                                        // v2: rollback
       path
     }
 
   /** RESTORE under the hash gate: the registry face of
     * [[graft.sources.VersionedTable.restore]] and the last lake
-    * operation to get one (compact → `q_compaction_audit`, zorder →
-    * `q_zorder_compact`, delete+merge → `q_lake_upsert`, time travel →
-    * `q_time_travel`). The head census after good → corrupted → restore
-    * must hash-match the oracle's census of the RAW table — every
+    * operation to get one (zorder → `q_zorder_compact`, delete+merge →
+    * `q_lake_upsert`, time travel → `q_time_travel`). The head census
+    * after good → corrupted → restore must hash-match the oracle's census of the RAW table — every
     * corrupt row gone, every original row back exactly once, through
     * nothing but the metadata commit that re-references v0's files. */
   def lakeRestore(spark: SparkSession, dir: String): DataFrame = {
@@ -1406,6 +1391,20 @@ object ScaleOps {
       .orderBy(col("pri"))
   }
 
+  /** Change feed over the same versioned table ([[timeTravel]]'s
+    * artifact): the incremental-consumer read that replaces a full
+    * snapshot diff. The window (0, 2] spans the nightly append (v1) and
+    * the quality re-freeze overwrite (v2), so the feed exercises the
+    * full commit algebra: v1's files are added AND removed inside the
+    * window and cancel to nothing, v0's files surface as `delete` rows,
+    * v2's as `insert` rows — exactly the net state transition a
+    * downstream index/dedup/cache consumer must apply. The oracle
+    * recomputes both sides from the raw table and the same membership
+    * predicates, proving the log fold's net-change set is exact. Feed
+    * rows aggregate per (change_type, source) before leaving the scan —
+    * at 100 TB the consumer reads only the files named by the log
+    * window, never the table.
+    */
   def changeFeed(spark: SparkSession, dir: String): DataFrame = {
     val root = versionedDocs(spark, dir)
     val t = new graft.sources.VersionedTable(root)

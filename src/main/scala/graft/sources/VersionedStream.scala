@@ -13,59 +13,48 @@ import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Literal => V2Literal, NamedReference, NullOrdering, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
-import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Streaming read face of [[VersionedTable]]: a DataSource V2 micro-batch
-  * source that TAILS THE COMMIT LOG — the stream offset IS the table
-  * version, and each micro-batch serves exactly the files ADDED by the
-  * commits in the claimed window (append-mode change-data feed, the
-  * public Delta/Iceberg streaming-source pattern). Together with
-  * [[VersionedTable.appendBatch]] (exactly-once streaming ingest) this
-  * closes the lake loop: a pipeline can stream INTO the table and any
-  * number of downstream consumers can stream OUT of it, each resuming
-  * from its own checkpointed version, never seeing a partial commit
-  * (commits are atomic renames) and never rereading served data.
+/** Read-only DataSource V2 face of [[VersionedTable]], batch and
+  * streaming.
   *
-  * Scale shape: discovering a batch costs one log-directory listing plus
-  * the window's log files — never a data-directory listing, never a
-  * snapshot scan (the defect that makes file-watching streams O(table)
-  * per trigger). One input partition per added file preserves the
-  * writer's parallelism. Overwrite commits surface their ADD side (the
-  * re-frozen snapshot rows); their remove side is not streamable in an
-  * append feed and is served by the batch [[VersionedTable.changesBetween]]
-  * instead. Tailing a window whose files were [[VersionedTable.vacuum]]ed
-  * fails loudly rather than silently skipping history.
+  * Streaming: a micro-batch source that TAILS THE COMMIT LOG — the
+  * stream offset IS the table version, and each micro-batch serves
+  * exactly the files ADDED by the commits in the claimed window
+  * (append-mode change feed, the public Delta/Iceberg streaming-source
+  * pattern). A consumer starts at version 0, resumes from its own
+  * checkpointed version, never sees a partial commit (commits are
+  * atomic renames) and never rereads served data. Every trigger drains
+  * all outstanding commits; `Trigger.AvailableNow` pins the head at
+  * start. Discovering a batch costs one log-directory listing plus the
+  * window's log files — never a data-directory listing, never a
+  * snapshot scan. One input partition per served file. Overwrite
+  * commits surface their ADD side; their remove side is served only
+  * under `changeFeed`, or by the batch [[VersionedTable.changesBetween]].
+  * A window whose data files are gone from disk fails loudly rather
+  * than silently skipping history.
   *
-  * The same provider also serves BATCH reads with planner-integrated
-  * pruning (`versionAsOf` time travel, zone-map file skipping from
-  * pushed filters, physical column pruning down to the parquet chunks)
-  * — see [[VersionedScanBuilder]].
+  * Batch: `versionAsOf` time travel, zone-map file skipping from pushed
+  * filters, and physical column pruning down to the parquet chunks —
+  * see [[VersionedScanBuilder]].
+  *
+  * The source reads three options and refuses any other key, so a
+  * misspelled or unsupported option fails instead of being ignored. It
+  * has no write path.
   *
   * Usage:
   * {{{
   * spark.readStream.format("graft.sources.VersionedStreamProvider")
   *   .option("path", tableRoot)           // required
-  *   .option("startingVersion", "0")      // default 0 = full history
-  *   .option("maxFilesPerTrigger", "8")   // admission control: cap the
-  *   .option("maxRowsPerTrigger", "100000") // commits claimed per batch
-  *   .option("maxBytesPerTrigger", "134217728") // by file/row/byte budget
   *   .option("changeFeed", "true")        // CDC rows with _change_type/
   *                                        //   _commit_version columns
-  *   .option("failOnDataLoss", "false")   // skip vacuumed windows
-  *                                        //   instead of failing (the
-  *                                        //   Delta-shaped control;
-  *                                        //   default true = fail loud)
   *   .load()
   * spark.read.format("graft.sources.VersionedStreamProvider")
   *   .option("path", tableRoot)
@@ -75,6 +64,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class VersionedStreamProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    VersionedStreamProvider.checkOptions(options.asCaseSensitiveMap.keySet.asScala)
     val base = VersionedStreamProvider.tableSchema(options.get("path"))
     // the change feed widens the row with its CDC tag column — the
     // Delta readChangeFeed shape. The name is RESERVED under the
@@ -93,14 +83,16 @@ class VersionedStreamProvider extends TableProvider {
     } else base
   }
 
-  // writes hand us the frame's schema directly instead of forcing an
-  // inferSchema on a possibly-empty table
+  // a reader may supply the schema (spark.readStream.schema(...));
+  // getTable re-checks the changeFeed contract against it
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    val changeFeed = Option(properties.get("changeFeed")).exists(_.toBoolean)
+    VersionedStreamProvider.checkOptions(properties.keySet.asScala)
+    val options = new CaseInsensitiveStringMap(properties)
+    val path = options.get("path")
+    val changeFeed = options.getBoolean("changeFeed", false)
     // Re-validate the changeFeed schema contract HERE, where the FINAL
     // schema is known: a reader supplying an explicit schema via
     // spark.readStream.schema(...) bypasses inferSchema entirely, and
@@ -125,17 +117,8 @@ class VersionedStreamProvider extends TableProvider {
         }
       }
     }
-    new VersionedStreamTable(
-      path,
-      Option(properties.get("startingVersion")).map(_.toLong).getOrElse(0L),
-      Option(properties.get("versionAsOf")).map(_.toLong),
-      Option(properties.get("statsCol")),
-      Option(properties.get("maxFilesPerTrigger")).map(_.toInt),
-      Option(properties.get("maxRowsPerTrigger")).map(_.toLong),
-      Option(properties.get("maxBytesPerTrigger")).map(_.toLong),
-      changeFeed,
-      Option(properties.get("failOnDataLoss")).forall(_.toBoolean),
-      schema)
+    new VersionedStreamTable(path,
+      Option(options.get("versionAsOf")).map(_.toLong), changeFeed, schema)
   }
 }
 
@@ -152,13 +135,26 @@ object VersionedStreamProvider {
     * log records no wall-clock, so there is no timestamp twin). */
   val ChangeVersionCol = "_commit_version"
 
+  /** The option keys this source reads (lower-cased). */
+  private val Options = Set("path", "versionasof", "changefeed")
+
+  /** Refuse every option key the source does not read: an option it
+    * does not implement, such as a rate limit or a starting version,
+    * must fail, not be silently ignored. */
+  private def checkOptions(keys: Iterable[String]): Unit =
+    keys.find(k => !Options(k.toLowerCase(java.util.Locale.ROOT))).foreach { k =>
+      throw new IllegalArgumentException(
+        s"unsupported option '$k' for graft.sources.VersionedStreamProvider " +
+          "(it reads path, versionAsOf and changeFeed)")
+    }
+
   /** Table schema: the LOG-CARRIED schema of the head version when
     * recorded (so evolved columns appear even though old files lack
     * them), else straight from one parquet FOOTER — metadata only either
     * way. The supported lattice is the engine's primitive surface (the
     * versioned table stores columnar relational data, not nested
     * documents). */
-  def tableSchema(root: String): StructType = {
+  private[sources] def tableSchema(root: String): StructType = {
     val t = new VersionedTable(root)
     val head = t.version
     require(head >= 0, s"cannot infer a schema from empty table $root")
@@ -202,50 +198,33 @@ object VersionedStreamProvider {
   }
 }
 
-private[graft] class VersionedStreamTable(root: String, startingVersion: Long,
-    versionAsOf: Option[Long], statsCol: Option[String],
-    maxFilesPerTrigger: Option[Int], maxRowsPerTrigger: Option[Long],
-    maxBytesPerTrigger: Option[Long], changeFeed: Boolean,
-    failOnDataLoss: Boolean, schema0: StructType)
-    extends Table with SupportsRead with SupportsWrite {
+private[graft] class VersionedStreamTable(root: String,
+    versionAsOf: Option[Long], changeFeed: Boolean, schema0: StructType)
+    extends Table with SupportsRead {
   override def name(): String = s"graft_versioned($root)"
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VersionedScanBuilder(root, startingVersion, versionAsOf,
-      maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
-      changeFeed, failOnDataLoss, schema0)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new VersionedWriteBuilder(root, info, statsCol)
+    new VersionedScanBuilder(root, versionAsOf, changeFeed, schema0)
 }
 
 /** Planner-integrated pruning: column pruning reaches the parquet CHUNK
-  * reads (only projected columns' pages are decoded) and comparison
-  * filters on integer columns reach the commit log's zone maps (files
-  * whose recorded [min, max] cannot match are never opened). Both arrive
-  * through the standard DSv2 pushdown hooks, so `.explain` shows them on
-  * the scan — no out-of-band `readWhere` call needed. Filters are also
-  * kept as residuals (Spark re-evaluates row-level), so skipping only
-  * has to be SOUND, never complete. */
-private[graft] class VersionedScanBuilder(root: String, startingVersion: Long,
-    versionAsOf: Option[Long], maxFilesPerTrigger: Option[Int],
-    maxRowsPerTrigger: Option[Long], maxBytesPerTrigger: Option[Long],
-    changeFeed: Boolean, failOnDataLoss: Boolean, schema0: StructType)
+  * reads (only projected columns' pages are decoded) and comparison,
+  * IN and null filters reach the commit log's zone maps and null counts
+  * (files whose recorded stats cannot match are never opened). Both
+  * arrive through the standard DSv2 pushdown hooks, so `.explain` shows
+  * them on the scan — no out-of-band `readWhere` call needed. Filters
+  * are also kept as residuals (Spark re-evaluates row-level), so
+  * skipping only has to be SOUND, never complete. */
+private[graft] class VersionedScanBuilder(root: String,
+    versionAsOf: Option[Long], changeFeed: Boolean, schema0: StructType)
     extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates with SupportsPushDownLimit
-    with SupportsPushDownTopN {
+    with SupportsPushDownRequiredColumns {
 
   private var requested: StructType = schema0
   private var skipping: Array[Filter] = Array.empty
-  private var limitN: Option[Int] = None
-  private var topN: Option[TopNSpec] = None
-  private var aggServed: Option[(StructType, Array[Any])] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     skipping = filters.filter(VersionedScan.statsUsable)
@@ -256,229 +235,13 @@ private[graft] class VersionedScanBuilder(root: String, startingVersion: Long,
 
   override def pruneColumns(required: StructType): Unit = requested = required
 
-  /** LIMIT pushdown: serve only enough FILES to cover `n` rows
-    * ([[VersionedScan.planInputPartitions]] caps the candidate list by
-    * the log's recorded visible-row counts). Always partial — Spark
-    * keeps its own Limit on top, so over-serving is trimmed and a
-    * stats-less candidate (unknown rows) never under-delivers (it
-    * counts as zero known rows, so the cap keeps admitting files).
-    * Spark only pushes a limit when every filter above the scan was
-    * FULLY pushed; this source keeps all filters as residuals, so the
-    * pushdown fires exactly on bare `table.limit(n)` scans — where a
-    * 10-row peek at a 10k-file table plans one partition, not 10k. */
-  override def pushLimit(n: Int): Boolean = { limitN = Some(n); true }
-
-  override def isPartiallyPushed(): Boolean = true
-
-  /** TopN (ORDER BY + LIMIT) pushdown, the ordered twin of
-    * [[pushLimit]]: when the LEADING sort key is an integer column,
-    * the scan serves only the files whose recorded interval can hold
-    * one of the n extreme rows ([[VersionedScan.planInputPartitions]]
-    * runs the coverage proof against the zone maps). Pruning on the
-    * first key alone is sound for a multi-key order — any row whose
-    * leading value lies beyond n provably-covered rows can never enter
-    * the lexicographic top-n — and the pushdown is always PARTIAL
-    * (Spark keeps the full Sort+Limit), so the scan only has to serve
-    * a SUPERSET of the true top-n. This is the "newest 100 events of a
-    * time-ordered 100-TB table" shape: the plan reads the tail files,
-    * not the table. */
-  override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
-    if (changeFeed || skipping.nonEmpty || orders.isEmpty) return false
-    val head = orders.head
-    val col = head.expression() match {
-      case f: NamedReference if f.fieldNames().length == 1 =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    col.filter(c => schema0.find(_.name == c).map(_.dataType)
-        .exists(t => t == LongType || t == IntegerType)) match {
-      case Some(c) =>
-        topN = Some(TopNSpec(c,
-          head.direction() == SortDirection.DESCENDING,
-          head.nullOrdering() == NullOrdering.NULLS_FIRST, n))
-        true
-      case None => false
-    }
-  }
-
-  /** Aggregate pushdown: answer a global aggregate STRAIGHT FROM THE
-    * COMMIT LOG when the recorded stats prove the exact result — the
-    * lake engines' metadata-only `SELECT count(*)` (zero data files
-    * opened at any table size). Complete pushdown only, and only when
-    * provably exact:
-    *   - `count(*)` = Σ(recorded rows − deletion-vector cardinality):
-    *     exact even under merge-on-read deletes;
-    *   - `count(col)` = Σ(rows − recorded null count of col), only on
-    *     DV-free files (a vector could have removed null or non-null
-    *     rows — unknowable from metadata);
-    *   - `min/max(col)` from the INTEGER zone maps, only on DV-free
-    *     files (a vector could have removed the extreme row) and never
-    *     from string bounds (those are truncated — sound for pruning,
-    *     not exact for answers); recorded all-null files contribute
-    *     nothing, exactly like the aggregate semantics.
-    * Any file missing the needed stat refuses the WHOLE pushdown and
-    * the ordinary scan runs — exactness is proven, never assumed. A
-    * grouped, filtered (residuals pending — Spark never offers those),
-    * distinct, or changeFeed aggregation always refuses. */
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    serveAggregation(agg)
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    serveAggregation(agg)
-
-  private def serveAggregation(agg: Aggregation): Boolean = {
-    if (aggServed.isDefined) return true // supportCompletePushDown ran
-    if (changeFeed || skipping.nonEmpty || limitN.isDefined ||
-        topN.isDefined || agg.groupByExpressions().nonEmpty) return false
-    val table = new VersionedTable(root)
-    val head = versionAsOf.getOrElse(table.version)
-    if (head < 0) return false // empty table: nothing provable to serve
-    val st = table.stateAt(head)
-    val cand = st.adds.toSeq
-    def colName(e: V2Expression): Option[String] = e match {
-      case f: NamedReference if f.fieldNames().length == 1 =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    def dvCard(f: String): Long = st.dv.get(f).map(_.cardinality).getOrElse(0L)
-    def intType(c: String): Option[DataType] =
-      schema0.find(_.name == c).map(_.dataType)
-        .filter(t => t == LongType || t == IntegerType)
-    def retyped(v: Long, dt: DataType): Any =
-      if (dt == IntegerType) Int.box(v.toInt) else Long.box(v)
-    val out = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar =>
-        val rows = cand.map { case (f, line) =>
-          VersionedTable.nullStatsOf(line).map(_._1 - dvCard(f))
-        }
-        if (rows.exists(_.isEmpty)) return false
-        Some((StructField("count_star", LongType, nullable = false),
-          Long.box(math.max(0L, rows.flatten.sum)): Any))
-      case c: Count if !c.isDistinct =>
-        colName(c.column()).flatMap { col =>
-          // a deletion vector makes the null-ness of the removed rows
-          // unknowable — EXCEPT when the file records zero nulls on the
-          // column, where every removed row was provably non-null and
-          // the visible count is rows − cardinality exactly
-          val counts = cand.map { case (f, line) =>
-            VersionedTable.nullStatsOf(line).collect {
-              case (r, nulls) if nulls.contains(col) &&
-                  (dvCard(f) == 0L || nulls(col) == 0L) =>
-                r - nulls(col) - dvCard(f)
-            }
-          }
-          if (counts.exists(_.isEmpty)) None
-          else Some((StructField(s"count_$col", LongType, nullable = false),
-            Long.box(math.max(0L, counts.flatten.sum)): Any))
-        }
-      case m: Min =>
-        colName(m.column()).flatMap(col => intType(col).flatMap { dt =>
-          boundSide(cand, st, col, isMax = false).map(b =>
-            (StructField(s"min_$col", dt, nullable = true),
-              b.map(x => retyped(x, dt)).orNull: Any))
-        })
-      case m: Max =>
-        colName(m.column()).flatMap(col => intType(col).flatMap { dt =>
-          boundSide(cand, st, col, isMax = true).map(b =>
-            (StructField(s"max_$col", dt, nullable = true),
-              b.map(x => retyped(x, dt)).orNull: Any))
-        })
-      case _ => None
-    }
-    if (out.exists(_.isEmpty)) return false
-    val fields = out.flatten
-    aggServed = Some((StructType(fields.map(_._1)), fields.map(_._2).toArray))
-    true
-  }
-
-  /** One PROVABLE extreme of `col` over the candidate files, from the
-    * integer zone maps. A DV-FREE file ATTAINS its recorded bound (the
-    * footer min/max is exact and all its rows are live); a DV'd file's
-    * live rows merely lie WITHIN its interval — they may attain
-    * neither end, or all be deleted. So the global extreme is provable
-    * exactly when the best DV-free bound DOMINATES every DV'd file's
-    * interval on that side: the answer is attained by a live row and
-    * nothing vectored could exceed it. A vector on a NON-extreme file
-    * never blocks the answer, and min can stay provable while max is
-    * not. Some(None) = every file is provably all-null/empty (the
-    * aggregate is NULL); None = unprovable (missing bounds on a
-    * non-all-null file, or a DV'd interval past the free bound). */
-  private def boundSide(cand: Seq[(String, String)], st: TableState,
-      col: String, isMax: Boolean): Option[Option[Long]] = {
-    def better(a: Long, b: Long): Long = if (isMax) math.max(a, b) else math.min(a, b)
-    var free: Option[Long] = None
-    var dvd: Option[Long] = None
-    cand.foreach { case (f, line) =>
-      val zm = VersionedTable.longStatsOf(line).toMap.get(col)
-      val allNull =
-        VersionedTable.allNullOn(line, col) ||
-          VersionedTable.nullStatsOf(line).exists(_._1 == 0L)
-      if (!allNull) {
-        if (zm.isEmpty) return None
-        val v = if (isMax) zm.get._2 else zm.get._1
-        if (st.dv.get(f).exists(_.cardinality > 0L))
-          dvd = Some(dvd.fold(v)(better(_, v)))
-        else free = Some(free.fold(v)(better(_, v)))
-      }
-    }
-    free match {
-      case None => if (dvd.isEmpty) Some(None) else None
-      case Some(fv) =>
-        if (dvd.exists(dv => better(dv, fv) != fv)) None else Some(Some(fv))
-    }
-  }
-
-  override def build(): Scan = aggServed match {
-    case Some((schema, row)) => new VersionedAggScan(root, schema, row)
-    case None =>
-      new VersionedScan(root, startingVersion, versionAsOf,
-        maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
-        changeFeed, failOnDataLoss, requested, skipping, limitN, topN)
-  }
+  override def build(): Scan =
+    new VersionedScan(root, versionAsOf, changeFeed, requested, skipping)
 }
 
-/** One pushed ORDER BY <col> [DESC] [NULLS FIRST] LIMIT n — only the
-  * LEADING sort key, which is all file-level pruning needs. */
-private[graft] case class TopNSpec(col: String, desc: Boolean,
-    nullsFirst: Boolean, n: Int)
-
-/** The metadata-answered aggregate scan: ONE input partition carrying
-  * the already-proven values ([[VersionedScanBuilder.pushAggregation]]),
-  * one emitted row, zero data files opened. */
-private[graft] class VersionedAggScan(root: String, schema: StructType,
-    row: Array[Any]) extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft_versioned($root, metadata-aggregate ${schema.fieldNames.mkString(",")})"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(VersionedAggPartition(row))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private var served = false
-          override def next(): Boolean =
-            if (served) false else { served = true; true }
-          override def get(): InternalRow =
-            new GenericInternalRow(
-              p.asInstanceOf[VersionedAggPartition].values.clone())
-          override def close(): Unit = ()
-        }
-    }
-}
-
-private[graft] case class VersionedAggPartition(values: Array[Any])
-    extends InputPartition
-
-private[graft] class VersionedScan(root: String, startingVersion: Long,
-    versionAsOf: Option[Long], maxFilesPerTrigger: Option[Int],
-    maxRowsPerTrigger: Option[Long], maxBytesPerTrigger: Option[Long],
-    changeFeed: Boolean, failOnDataLoss: Boolean,
-    requested: StructType, skipping: Array[Filter],
-    limitN: Option[Int] = None, topN: Option[TopNSpec] = None)
-    extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeV2Filtering {
+private[graft] class VersionedScan(root: String, versionAsOf: Option[Long],
+    changeFeed: Boolean, requested: StructType, skipping: Array[Filter])
+    extends Scan with Batch with SupportsReportStatistics {
   private val table = new VersionedTable(root)
 
   override def readSchema(): StructType = requested
@@ -504,59 +267,15 @@ private[graft] class VersionedScan(root: String, startingVersion: Long,
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     streamingMode = true
-    new VersionedMicroBatchStream(root, startingVersion,
-      maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
-      changeFeed, failOnDataLoss, requested)
+    new VersionedMicroBatchStream(root, changeFeed, requested)
   }
-
-  /** Runtime filters Catalyst delivered AFTER planning started —
-    * dynamic file pruning (the DSv2 twin of dynamic partition
-    * pruning): when a selective dimension filter feeds a join's build
-    * side, Spark executes the build side first, collects the join-key
-    * values, and hands them here as an IN-set; [[planInputPartitions]]
-    * then re-prunes the candidate files against the SAME zone maps the
-    * static pushed filters used. Arrives at most once per scan, before
-    * partition planning (the BatchScanExec contract). */
-  @volatile private var runtime: Array[Filter] = Array.empty
-
-  /** Every projected column is runtime-filterable: the pruning is
-    * sound on any column (files without stats on it just stay
-    * candidates), and a join key is by construction in the scan's
-    * output. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    requested.fieldNames.map(
-      org.apache.spark.sql.connector.expressions.Expressions.column)
-
-  /** The NATIVE V2 runtime-filter face ([[SupportsRuntimeV2Filtering]]
-    * — implemented directly rather than riding the interface's default
-    * `PredicateUtils.toV1` bridge): V2 predicates translate straight
-    * into the probe shapes the shared prune engine consumes, which
-    * keeps filter shapes the V1 detour loses — a conjunction FLATTENS
-    * into independent file probes (the bridge yields one
-    * `sources.And`, which no zone-map probe consumes), null-safe
-    * equality prunes through its null-rejecting twin, and a literal on
-    * either side of a comparison normalizes to the column-first form.
-    * Untranslatable shapes contribute no probe — sound, the residual
-    * row filter keeps results exact. */
-  override def filter(predicates: Array[V2Predicate]): Unit =
-    filter(predicates.flatMap(VersionedScan.v2Probes))
-
-  /** The V1-shaped probe sink the V2 face feeds (and specs drive
-    * directly): keep only what the zone maps can act on. */
-  private[graft] def filter(filters: Array[Filter]): Unit =
-    runtime = filters.filter(VersionedScan.statsUsable)
 
   /** The candidate (file name, add line) set the pushed filters leave,
     * plus the folded state (for DV descriptors) — a LAZY SNAPSHOT
     * shared by partition planning and statistics reporting, so the two
     * resolve the SAME head version (a concurrent commit between stats
     * and planning cannot invalidate a broadcast decision) and a query
-    * pays the log fold + per-line stats parse once, not per consumer.
-    * Runtime filters do NOT enter the snapshot: they re-prune this
-    * list at partition-planning time ([[planInputPartitions]]), so the
-    * statistics Catalyst already planned on stay those of the static
-    * scan, and the same head version serves both passes. */
+    * pays the log fold + per-line stats parse once, not per consumer. */
   private lazy val candidates: (TableState, Seq[(String, String)]) = {
     val v = versionAsOf.getOrElse(table.version)
     val st = table.stateAt(v)
@@ -565,37 +284,9 @@ private[graft] class VersionedScan(root: String, startingVersion: Long,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (st, cand) = candidates
-    // dynamic file pruning: the runtime IN-set (if any) re-prunes the
-    // statically-pruned snapshot — always a SUBSET of the planned
-    // candidates, as BatchScanExec's re-planning contract requires
-    val pruned =
-      if (runtime.isEmpty) cand else VersionedScan.prune(cand, runtime)
-    // pushed LIMIT: stop admitting files once the log-recorded visible
-    // rows (add-time count minus DV cardinality) PROVABLY cover n —
-    // a stats-less file counts as zero known rows, so the cap can only
-    // over-serve (Spark's retained Limit trims), never under-deliver.
-    // Only reachable filter-free (Spark's pushdown contract; the
-    // runtime guard is belt-and-braces — a join on top of a Limit
-    // never re-plans this scan). A pushed TOP-N instead keeps exactly
-    // the files whose interval can hold one of the n extreme rows.
-    val served = (topN, limitN) match {
-      case (Some(t), _) if skipping.isEmpty && runtime.isEmpty =>
-        topNServe(st, pruned, t)
-      case (_, Some(n)) if skipping.isEmpty && runtime.isEmpty =>
-        var known = 0L
-        pruned.takeWhile { case (name, line) =>
-          val take = known < n
-          if (take) known += math.max(0L,
-            VersionedTable.nullStatsOf(line).map(_._1).getOrElse(0L) -
-              st.dv.get(name).map(_.cardinality).getOrElse(0L))
-          take
-        }
-      case _ => pruned
-    }
-    VersionedScan.recordPlanned(root, served.size)
     // Each partition carries the file's deletion vector so the reader
     // subtracts merge-on-read deletes positionally.
-    served.map { case (name, _) =>
+    cand.map { case (name, _) =>
       (st.dv.get(name) match {
         case Some(DvInline(pos)) =>
           VersionedFilePartition(table.dataDir.resolve(name).toString, pos)
@@ -665,100 +356,11 @@ private[graft] class VersionedScan(root: String, startingVersion: Long,
     }
   }
 
-  /** The TOP-N file cap: serve exactly the candidate files that can
-    * hold one of the n extreme rows under ORDER BY col [DESC]
-    * [NULLS FIRST]. The coverage proof: walk the value-bounded files
-    * from the extreme end (ascending lo / descending hi), accumulating
-    * each file's PROVABLE non-null visible rows (recorded rows − null
-    * count − DV cardinality — a deletion vector conservatively eats
-    * non-nulls); once ≥ n rows are covered, the prefix's far bound B
-    * bounds the n-th value (n rows exist at-or-inside B, so no row
-    * beyond B can enter the top-n on the leading key). Kept: files
-    * whose interval reaches B, files with no bounds and no all-null
-    * proof (unknowable — always served), and, when nulls sort FIRST,
-    * every file that may hold a null on the column (nulls are the
-    * top-n's prefix). NULLS FIRST also SHRINKS the value target: each
-    * file's recorded null count minus its DV cardinality proves that
-    * many surviving nulls, and those provably occupy the prefix, so
-    * only n − provenNulls value slots need covering — down to zero,
-    * where provably-null-free files drop no matter their values. When
-    * nulls sort LAST the proven n non-null rows all precede every
-    * null, so all-null files drop. If coverage can't be proven
-    * (stats-less history, tiny table), every candidate serves — the
-    * cap only ever removes provably-irrelevant files. */
-  private def topNServe(st: TableState, cand: Seq[(String, String)],
-      t: TopNSpec): Seq[(String, String)] = {
-    final case class F(name: String, zm: Option[(Long, Long)],
-        nn: Option[Long], rows: Option[Long], allNull: Boolean)
-    val fs = cand.map { case (name, line) =>
-      val ns = VersionedTable.nullStatsOf(line)
-      F(name, VersionedTable.longStatsOf(line).toMap.get(t.col),
-        ns.flatMap(_._2.get(t.col)), ns.map(_._1),
-        VersionedTable.allNullIn(ns, t.col))
-    }
-    def dvCard(f: F): Long = st.dv.get(f.name).map(_.cardinality).getOrElse(0L)
-    def contrib(f: F): Long = (f.rows, f.nn) match {
-      case (Some(r), Some(nn)) => math.max(0L, r - nn - dvCard(f))
-      case _ => 0L
-    }
-    // unknown null count counts as may-hold-nulls; Some(0) does not
-    def nullSuspect(f: F): Boolean = f.allNull || f.nn.forall(_ > 0L)
-    // When nulls sort FIRST they occupy the top-n's prefix, so only
-    // n − (provable surviving nulls) value slots remain: each file
-    // proves nn − |DV| nulls (a deletion vector conservatively eats
-    // NULLS on this side — the opposite of `contrib`, and each bound is
-    // independently sound). With the whole top-n provably null, files
-    // that provably hold no nulls drop regardless of their values.
-    val need =
-      if (t.nullsFirst)
-        t.n - math.min(t.n.toLong, fs.map(f =>
-          f.nn.map(nn => math.max(0L, nn - dvCard(f))).getOrElse(0L)).sum)
-      else t.n.toLong
-    if (need == 0L)
-      return cand.filter { case (name, _) =>
-        fs.exists(f => f.name == name && nullSuspect(f)) }
-    val valueFiles = fs.filter(_.zm.isDefined)
-    val sorted =
-      if (t.desc) valueFiles.sortBy(_.zm.get._2)(Ordering[Long].reverse)
-      else valueFiles.sortBy(_.zm.get._1)
-    var acc = 0L
-    val prefix = sorted.takeWhile { f =>
-      val take = acc < need
-      if (take) acc += contrib(f)
-      take
-    }
-    if (acc < need) return cand // coverage unprovable: serve everything
-    val bound =
-      if (t.desc) prefix.map(_.zm.get._1).min else prefix.map(_.zm.get._2).max
-    val keep = fs.filter { f =>
-      (f.zm.isEmpty && !f.allNull) ||
-        f.zm.exists(z => if (t.desc) z._2 >= bound else z._1 <= bound) ||
-        (t.nullsFirst && nullSuspect(f))
-    }.map(_.name).toSet
-    cand.filter { case (name, _) => keep(name) }
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
     new VersionedReaderFactory(requested)
 }
 
 private[graft] object VersionedScan {
-  /** File partitions planned by the LAST `planInputPartitions` call
-    * per table root — the observability seam the dynamic-file-pruning
-    * spec reads: after runtime filters land, BatchScanExec re-plans
-    * THROUGH the scan, so the post-filter partition count is not
-    * otherwise visible from outside the physical plan. Bounded: a
-    * long-lived session scanning ephemeral roots must not grow JVM
-    * state without limit, so the map resets past a small cap (it is
-    * diagnostics, not correctness state). */
-  private[graft] val lastPlanned =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]
-
-  private def recordPlanned(root: String, n: Int): Unit = {
-    if (lastPlanned.size > 1024) lastPlanned.clear()
-    lastPlanned.put(root, Integer.valueOf(n))
-  }
-
   private def intBound(v: Any): Boolean =
     v.isInstanceOf[Long] || v.isInstanceOf[Int]
   private def strBound(v: Any): Boolean = v.isInstanceOf[String]
@@ -768,85 +370,10 @@ private[graft] object VersionedScan {
     case other => throw new IllegalStateException(s"non-integer bound $other")
   }
 
-  /** Translate one V2 runtime predicate into the V1 probe shapes the
-    * shared prune engine consumes — the native
-    * [[SupportsRuntimeV2Filtering]] leg. Soundness contract: a probe is
-    * emitted only when it is IMPLIED by the predicate (so skipping a
-    * file the probe rejects can never drop a matching row), and any
-    * shape that doesn't translate emits NO probe. Per shape:
-    *   - `AND` flattens to both sides' probes (each conjunct must hold,
-    *     so each prunes independently);
-    *   - `IN` keeps its non-null values (a NULL in the list matches no
-    *     row, so the narrowed list is equivalent for pruning); an
-    *     all-null list emits nothing;
-    *   - comparisons accept the literal on EITHER side (`5 >= id`
-    *     normalizes to `id <= 5`); a null literal emits nothing (the
-    *     predicate matches no row — no probe is trivially sound);
-    *   - `<=>` (null-safe equality) against a non-null literal prunes
-    *     exactly like `=` (null rows can't match a non-null literal);
-    *     against NULL it IS the `IS NULL` probe.
-    * String literals arrive as catalyst `UTF8String` and convert to the
-    * external form the probe engine's byte-bound compares expect. */
-  private[sources] def v2Probes(p: V2Predicate): Seq[Filter] = {
-    def ref(e: V2Expression): Option[String] = e match {
-      case f: NamedReference if f.fieldNames().length == 1 =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    def lit(e: V2Expression): Option[Any] = e match {
-      case l: V2Literal[_] => Some(l.value() match {
-        case u: UTF8String => u.toString
-        case other => other
-      })
-      case _ => None
-    }
-    def cmp(op: String, c: String, v: Any): Seq[Filter] =
-      if (v == null) { if (op == "<=>") Seq(IsNull(c)) else Nil }
-      else op match {
-        case "=" | "<=>" => Seq(EqualTo(c, v))
-        case ">" => Seq(GreaterThan(c, v))
-        case ">=" => Seq(GreaterThanOrEqual(c, v))
-        case "<" => Seq(LessThan(c, v))
-        case "<=" => Seq(LessThanOrEqual(c, v))
-        case _ => Nil
-      }
-    def flip(op: String): String = op match {
-      case ">" => "<"
-      case ">=" => "<="
-      case "<" => ">"
-      case "<=" => ">="
-      case other => other // = and <=> are symmetric
-    }
-    val kids = p.children()
-    p.name() match {
-      case "AND" =>
-        kids.toSeq.collect { case q: V2Predicate => v2Probes(q) }.flatten
-      case "IN" if kids.length >= 2 =>
-        (ref(kids.head), kids.tail.toSeq.map(lit)) match {
-          case (Some(c), vs) if vs.forall(_.isDefined) =>
-            val nonNull = vs.flatten.filter(_ != null)
-            if (nonNull.isEmpty) Nil else Seq(In(c, nonNull.toArray))
-          case _ => Nil
-        }
-      case "IS_NULL" if kids.length == 1 => ref(kids(0)).map(IsNull(_)).toSeq
-      case "IS_NOT_NULL" if kids.length == 1 =>
-        ref(kids(0)).map(IsNotNull(_)).toSeq
-      case op @ ("=" | "<=>" | ">" | ">=" | "<" | "<=") if kids.length == 2 =>
-        (ref(kids(0)), lit(kids(1)), ref(kids(1)), lit(kids(0))) match {
-          case (Some(c), Some(v), _, _) => cmp(op, c, v)
-          case (_, _, Some(c), Some(v)) => cmp(flip(op), c, v)
-          case _ => Nil
-        }
-      case _ => Nil
-    }
-  }
-
-  /** Filters the zone maps / null counts can act on — ONE gate shared
-    * by the static pushdown ([[VersionedScanBuilder.pushFilters]]) and
-    * the runtime-filter face ([[VersionedScan.filter]]). IN lists
-    * prune for BOTH string values (recorded truncated byte bounds)
-    * and integer values (recorded [min, max] intervals) — the integer
-    * shape is exactly what a runtime join-key filter arrives in. */
+  /** Filters the zone maps / null counts can act on — the gate of
+    * [[VersionedScanBuilder.pushFilters]]. IN lists prune for BOTH
+    * string values (recorded truncated byte bounds) and integer values
+    * (recorded [min, max] intervals). */
   private[sources] def statsUsable(f: Filter): Boolean = f match {
     case EqualTo(_, v) => intBound(v) || strBound(v)
     case In(_, vs) =>
@@ -864,17 +391,15 @@ private[graft] object VersionedScan {
   }
 
   /** First index in `sorted` holding a value >= x (sorted.length when
-    * none) — the binary-search probe a large runtime IN-set needs so a
-    * 10⁵-key dynamic filter tests each file in O(log n), not O(n). */
+    * none) — the binary-search probe a large IN-set needs so a 10⁵-key
+    * list tests each file in O(log n), not O(n). */
   private def lowerBound(sorted: Array[Long], x: Long): Int = {
     val i = java.util.Arrays.binarySearch(sorted, x)
     if (i >= 0) i else -(i + 1)
   }
 
   /** Apply one filter array's FILE-LEVEL probes to a candidate (file
-    * name, add line) list — the single pruning pass both the static
-    * snapshot and the runtime re-prune run, so the two can never
-    * diverge on soundness. A file survives only if EVERY probed column
+    * name, add line) list. A file survives only if EVERY probed column
     * it has stats for can intersect its probe: integer bounds and
     * integer IN-sets test the recorded [min, max] intervals
     * (multi-column zone maps — z-ordered layouts — prune on all
@@ -900,8 +425,7 @@ private[graft] object VersionedScan {
       val (l0, h0) = acc.getOrElse(c, (Long.MinValue, Long.MaxValue))
       acc.updated(c, (math.max(l0, lo), math.min(h0, hi)))
     }
-    // per-column SORTED integer IN-sets — intersected across
-    // predicates; the runtime join-key shape
+    // per-column SORTED integer IN-sets — intersected across predicates
     val ivs = filters.collect {
       case In(c, vs) if vs.nonEmpty && vs.forall(intBound) =>
         (c, vs.map(num).toSet)
@@ -1009,10 +533,7 @@ private[graft] case class VersionOffset(v: Long) extends Offset {
   * restore-style vector SHRINKS serve nothing (changesBetween emits
   * restore re-inserts; the streaming feed is delete-observing). */
 private[graft] class VersionedMicroBatchStream(root: String,
-    startingVersion: Long, maxFilesPerTrigger: Option[Int],
-    maxRowsPerTrigger: Option[Long], maxBytesPerTrigger: Option[Long],
-    changeFeed: Boolean, failOnDataLoss: Boolean,
-    schema: StructType)
+    changeFeed: Boolean, schema: StructType)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private[graft] val table = new VersionedTable(root)
 
@@ -1024,84 +545,19 @@ private[graft] class VersionedMicroBatchStream(root: String,
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(table.version)
 
-  override def initialOffset(): Offset = VersionOffset(startingVersion - 1)
+  override def initialOffset(): Offset = VersionOffset(-1L)
 
   // One log listing per trigger; a new commit is a new offset. Serving
   // lags the head by zero — the atomic rename IS publication.
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "admission-control source: use latestOffset(start, limit)")
-
-  /** The engine's requested rate limit, from the source options. With
-    * no option set every trigger drains all outstanding commits. */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxFilesPerTrigger.map(ReadLimit.maxFiles).toSeq ++
-      maxRowsPerTrigger.map(ReadLimit.maxRows).toSeq ++
-      maxBytesPerTrigger.map(ReadLimit.maxBytes).toSeq
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
+  override def latestOffset(): Offset = {
+    val head = table.version
+    VersionOffset(availableNowCap.fold(head)(math.min(head, _)))
   }
 
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[VersionOffset].v
-    val head = availableNowCap.fold(table.version)(math.min(table.version, _))
-    VersionOffset(admitUpTo(s, head, limit))
-  }
-
-  /** Admission control: walk the commits in (s, head] and stop BEFORE
-    * the commit that would overflow the limit. A commit is the atomic
-    * publication unit (offset = version), so the first outstanding
-    * commit is always admitted whole even when it alone exceeds the
-    * cap — rate limiting bounds batches, it cannot split a commit.
-    * Costs one log-file read per considered commit, METADATA ONLY:
-    * ReadMaxRows serves each add's recorded `rows` stat straight from
-    * the log line (a parquet footer opens only as the fallback for
-    * stats-less adds — see [[VersionedTable.rowsAddedAt]]), and
-    * ReadMaxBytes is one `Files.size` per added file. Never a data
-    * scan.
-    *
-    * Under `changeFeed` a commit is costed AS THE FEED SERVES IT
-    * ([[VersionedTable.cdcCostsAt]]): a CoW delete's removed files and
-    * a MoR delete's dvset partitions count toward files/rows/bytes —
-    * the add-only accessors would let a pure-delete commit admit as
-    * zero cost, unbounding a paced CDC drain over delete-heavy
-    * history. Still one log read per commit, stats served from the
-    * remove/dvset lines' carried fields. */
-  private def admitUpTo(s: Long, head: Long, limit: ReadLimit): Long =
-    limit match {
-      case _: ReadAllAvailable => head
-      case mf: ReadMaxFiles =>
-        admitWhile(s, head, mf.maxFiles())(v =>
-          if (changeFeed) table.cdcCostsAt(v, failOnDataLoss)._1
-          else table.filesAddedAt(v, failOnDataLoss).size.toLong)
-      case mr: ReadMaxRows =>
-        admitWhile(s, head, mr.maxRows())(v =>
-          if (changeFeed) table.cdcCostsAt(v, failOnDataLoss)._2
-          else table.rowsAddedAt(v, failOnDataLoss))
-      case mb: ReadMaxBytes =>
-        admitWhile(s, head, mb.maxBytes())(v =>
-          if (changeFeed) table.cdcCostsAt(v, failOnDataLoss)._3
-          else table.bytesAddedAt(v, failOnDataLoss))
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(admitUpTo(s, head, _)).min
-      case _ => head // ReadMinRows etc.: this source has no rate floor
-    }
-
-  private def admitWhile(s: Long, head: Long, cap: Long)(
-      cost: Long => Long): Long = {
-    var v = s
-    var used = 0L
-    var stop = false
-    while (!stop && v < head) {
-      val c = cost(v + 1)
-      if (v > s && used + c > cap) stop = true
-      else { v += 1; used += c }
-    }
-    v
-  }
+  // the form the engine calls (an AvailableNow source is an
+  // admission-control source); every trigger admits up to the head
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    latestOffset()
 
   override def deserializeOffset(json: String): Offset = VersionOffset(json.toLong)
 
@@ -1123,7 +579,7 @@ private[graft] class VersionedMicroBatchStream(root: String,
     val s = start.asInstanceOf[VersionOffset].v
     val e = end.asInstanceOf[VersionOffset].v
     if (!changeFeed)
-      ((s + 1) to e).flatMap(v => table.filesAddedAt(v, failOnDataLoss))
+      ((s + 1) to e).flatMap(table.filesAddedAt)
         .map(f => VersionedFilePartition(f): InputPartition).toArray
     else {
       // ONE incremental fold for the whole drain window — seeded from
@@ -1134,7 +590,7 @@ private[graft] class VersionedMicroBatchStream(root: String,
           case Some((v, st)) if v == s => st
           case _ => table.stateAtOrEmpty(s)
         }
-        val ws = table.changeWindowsFrom(seed, s, e, failOnDataLoss)
+        val ws = table.changeWindowsFrom(seed, s, e)
         carriedFold = Some((e, seed)) // seed was MUTATED forward to e
         ws
       }

@@ -33,7 +33,7 @@ private[sources] final case class DvSidecar(name: String,
     cardinality: Long) extends DvDesc
 
 /** One commit's contribution to the STREAMING change feed
-  * ([[VersionedTable.changeWindowsBetween]]): the commit version (the
+  * ([[VersionedTable.changeWindowsFrom]]): the commit version (the
   * feed's `_commit_version` ordering column), file paths the commit
   * added (insert rows), files it removed with their PRIOR deletion
   * vector in task-shippable descForm (delete rows = the file minus
@@ -46,16 +46,13 @@ private[sources] final case class ChangeWindow(version: Long, op: String,
 
 /** The folded table state at one version: the governing add action per
   * live file (zone maps ride along verbatim), the live deletion-vector
-  * DESCRIPTOR per file (inline positions or a sidecar reference), the
-  * active CHECK constraints, the newest recorded schema, and the
-  * complete micro-batch ledger. This is exactly what a log checkpoint
+  * DESCRIPTOR per file (inline positions or a sidecar reference), and
+  * the newest recorded schema. This is exactly what a log checkpoint
   * serializes and what every snapshot read folds. */
 private[sources] final class TableState {
   val adds = scala.collection.mutable.LinkedHashMap.empty[String, String]
   val dv = scala.collection.mutable.LinkedHashMap.empty[String, DvDesc]
-  val constraints = scala.collection.mutable.LinkedHashMap.empty[String, String]
   var schemaB64: Option[String] = None
-  val batchIds = scala.collection.mutable.Set.empty[Long]
 }
 
 /** Snapshot-isolated versioned parquet table — the transactional-lake
@@ -89,9 +86,8 @@ private[sources] final class TableState {
   *     (no `.checkpoint` files at all) fold from version 0 unchanged —
   *     the `fmt` field in the checkpoint header versions the format
   *     itself.
-  *   - Nothing is ever rewritten in place; old versions stay readable
-  *     until an explicit [[vacuum]] ends their time-travel guarantee (a
-  *     deliberate operator call, never a side effect).
+  *   - Nothing is ever rewritten in place; every old version stays
+  *     readable.
   *
   * This composes with the rest of the engine: the incremental dedup/
   * admission jobs (`q_incremental_dedup`/`_neardup`) read "history" —
@@ -112,11 +108,10 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       try s.iterator().asScala.toList finally s.close()
     }
 
-  /** Depth-first recursive delete — what staging-dir reclaim needs: a
-    * crashed `df.write.parquet` leaves a NESTED `_temporary/...` tree
-    * inside its `_tmp-*` dir, and a single-level sweep would throw
-    * DirectoryNotEmptyException on it (aborting a vacuum mid-reclaim,
-    * after data victims were already deleted). Idempotent. */
+  /** Depth-first recursive delete of a staging dir: `df.write.parquet`
+    * can leave a NESTED `_temporary/...` tree inside its `_tmp-*` dir,
+    * on which a single-level delete would throw
+    * DirectoryNotEmptyException. Idempotent. */
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
@@ -142,18 +137,13 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       .foldLeft(-1L)(math.max)
 
   /** (version, operation, filesAdded, filesRemoved) per commit — the
-    * per-commit audit record, deliberately O(versions): it reads every
-    * commit because it REPORTS every commit. Snapshot reads never come
-    * through here. */
-  def history: Seq[(Long, String, Int, Int)] =
+    * per-commit audit record the specs assert on, deliberately
+    * O(versions): it reads every commit because it REPORTS every
+    * commit. Snapshot reads never come through here. */
+  private[graft] def history: Seq[(Long, String, Int, Int)] =
     (0L to version).map { v =>
-      val lines = Files.readAllLines(logDir.resolve(logName(v))).asScala
-      val op = lines.collectFirst {
-        case l if l.contains("\"op\":\"meta\"") =>
-          "\"operation\":\"([a-z_]+)\"".r.findFirstMatchIn(l).map(_.group(1))
-            .getOrElse("?")
-      }.getOrElse("?")
-      (v, op,
+      val lines = Files.readAllLines(logDir.resolve(logName(v))).asScala.toSeq
+      (v, commitOp(lines),
         lines.count(_.contains("\"op\":\"add\"")),
         lines.count(_.contains("\"op\":\"remove\"")))
     }
@@ -178,15 +168,8 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
           else st.dv(f) = DvInline(pos.split(',').map(_.toLong))
       }
     }
-    if (l.contains("constraint")) {
-      AddConstraintRe.findFirstMatchIn(l).foreach(m => st.constraints(m.group(1)) =
-        new String(java.util.Base64.getDecoder.decode(m.group(2)), "UTF-8"))
-      DropConstraintRe.findFirstMatchIn(l).foreach(m => st.constraints -= m.group(1))
-    }
     if (l.contains("schemaB64"))
       SchemaRe.findFirstMatchIn(l).foreach(m => st.schemaB64 = Some(m.group(1)))
-    if (l.contains("batchId"))
-      BatchIdRe.findFirstMatchIn(l).foreach(m => st.batchIds += m.group(1).toLong)
   }
 
   /** Newest readable checkpoint ≤ v: candidates newest-first, each
@@ -263,10 +246,9 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   /** Write `_log/%012d.checkpoint` for version v when v is a multiple of
     * [[checkpointInterval]] — the folded state to v in the binary
     * `fmt:2` layout (magic header; add actions as length-prefixed UTF-8
-    * verbatim so zone maps survive by reference; the batch ledger and
-    * inline DV positions as PACKED LONGS, not parsed text — the two
-    * components that grow without bound on a streaming table and made
-    * the r12 text checkpoint the fold bottleneck), landed with the same
+    * verbatim so zone maps survive by reference; inline DV positions as
+    * PACKED LONGS, not parsed text — the component that made the r12
+    * text checkpoint the fold bottleneck), landed with the same
     * tmp + atomic-rename discipline as a commit. Runs OFF the commit
     * path (see [[commit]]): the interval-th commit returns as fast as
     * any other, and a reader racing the writer just folds a longer
@@ -326,10 +308,12 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   }
 
   /** fmt:2 binary checkpoint layout (all big-endian via DataOutput):
-    * magic, version, optional schemaB64, constraints, the batch ledger
-    * as packed longs, add actions as length-prefixed UTF-8 (verbatim —
-    * zone maps and restore-by-reference need the original line), and
-    * DV descriptors (inline positions packed, sidecars by name+card).
+    * magic, version, optional schemaB64, two retired sections written
+    * empty (CHECK constraints as string pairs, a micro-batch ledger as
+    * longs — kept as zero counts so the layout stays fmt:2), add
+    * actions as length-prefixed UTF-8 (verbatim — zone maps and
+    * restore-by-reference need the original line), and DV descriptors
+    * (inline positions packed, sidecars by name+card).
     */
   private def serializeCheckpoint(st: TableState, v: Long): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream(1 << 16)
@@ -343,11 +327,8 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       case Some(s) => writeStr(s)
       case None => out.writeInt(-1)
     }
-    out.writeInt(st.constraints.size)
-    st.constraints.foreach { case (n, sql) => writeStr(n); writeStr(sql) }
-    val ids = st.batchIds.toArray.sorted
-    out.writeInt(ids.length)
-    ids.foreach(out.writeLong)
+    out.writeInt(0) // retired: constraints
+    out.writeInt(0) // retired: batch ledger
     out.writeInt(st.adds.size)
     st.adds.values.foreach(writeStr)
     out.writeInt(st.dv.size)
@@ -389,10 +370,9 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
         val b = new Array[Byte](boundedLen(schemaLen, 1)); in.readFully(b)
         st.schemaB64 = Some(new String(b, "UTF-8"))
       }
-      (0 until boundedLen(in.readInt(), 1)).foreach { _ =>
-        val n = readStr(); st.constraints(n) = readStr()
-      }
-      (0 until boundedLen(in.readInt(), 8)).foreach(_ => st.batchIds += in.readLong())
+      // retired sections (older checkpoints may carry entries): skip
+      (0 until boundedLen(in.readInt(), 1)).foreach { _ => readStr(); readStr() }
+      (0 until boundedLen(in.readInt(), 8)).foreach(_ => in.readLong())
       (0 until boundedLen(in.readInt(), 1)).foreach { _ =>
         val line = readStr()
         fileOf(line).foreach(f => st.adds(f) = line)
@@ -420,117 +400,22 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   def filesAt(v: Long): Seq[String] =
     stateAt(v).adds.keys.toSeq.map(n => dataDir.resolve(n).toString)
 
-  /** Live deletion vector per file at v (file name → sorted deleted row
-    * positions) — the merge-on-read state a snapshot read subtracts.
-    * An AUDIT accessor: it materializes sidecar vectors on the caller's
-    * side; the read/write paths never do (descriptors flow to the
-    * executors, which load sidecars task-side). */
-  def dvAt(v: Long): Map[String, Seq[Long]] =
-    stateAt(v).dv.map { case (f, d) => (f, loadDv(d).toSeq) }.toMap
-
-  /** Materialize one DV descriptor's positions — inline directly,
-    * sidecar by reading its range-run-encoded file. */
-  private[sources] def loadDv(d: DvDesc): Array[Long] = d match {
-    case DvInline(p) => p
-    case DvSidecar(n, _) => readDvSidecar(dataDir.resolve(n))
-  }
-
   /** Files ADDED by commit v alone — the micro-batch a log-tailing
     * streaming consumer ([[VersionedStreamProvider]]) serves for that
-    * version. Fails loudly when the window's files were vacuumed:
+    * version. Fails loudly when a window's file is gone from disk:
     * silently skipping history would break the consumer's exactly-once
-    * story. */
-  def filesAddedAt(v: Long): Seq[String] =
-    filesAddedAt(v, failOnMissing = true)
-
-  /** [[filesAddedAt]] with the vacuumed-window contract made explicit:
-    * `failOnMissing = false` is the stream's opt-in `failOnDataLoss`
-    * escape hatch (the Delta-shaped control) — a vacuumed file is
-    * SKIPPED instead of killing the drain, re-baselining the consumer
-    * past history an operator already chose to reclaim. Fail-loud stays
-    * the default everywhere. */
-  private[graft] def filesAddedAt(v: Long, failOnMissing: Boolean): Seq[String] = {
+    * story. One log-file read, counted in [[logFileReads]]. */
+  def filesAddedAt(v: Long): Seq[String] = {
     require(v >= 0 && v <= version, s"version $v outside [0, $version]")
-    addActionsAt(v)
-      .flatMap(l => fileOf(l))
-      .flatMap { n =>
+    readLog(logDir.resolve(logName(v)))
+      .filter(_.contains("\"op\":\"add\""))
+      .flatMap(fileOf)
+      .map { n =>
         val p = dataDir.resolve(n)
-        if (Files.exists(p)) Some(p.toString)
-        else if (failOnMissing) throw new IllegalArgumentException(
-          s"commit $v data file $n was vacuumed; this window is no longer " +
-            "streamable (set failOnDataLoss=false to skip reclaimed history)")
-        else None
+        require(Files.exists(p),
+          s"commit $v data file $n is missing; this window is no longer streamable")
+        p.toString
       }
-  }
-
-  /** The add-action lines of commit v alone — one log-file read
-    * (counted in [[logFileReads]]), the shared base of the streaming
-    * admission accessors. */
-  private def addActionsAt(v: Long): Seq[String] =
-    readLog(logDir.resolve(logName(v))).filter(_.contains("\"op\":\"add\""))
-
-  /** Parquet footers opened by the admission accessors — the
-    * observable for the stats-first contract: a drain over
-    * stats-carrying commits must cost ZERO footer opens on the driver
-    * (asserted in spec), because the log already recorded each add's
-    * row count. */
-  private[graft] val footerReads = new AtomicLong(0L)
-
-  /** Total rows the adds of commit v carry — the ReadMaxRows admission
-    * cost. Served from each add action's recorded `rows` stats (the
-    * r14 field) whenever present — METADATA ONLY, zero file opens; a
-    * stats-less add (pre-r14 logs, writers outside the stats path)
-    * falls back to ONE parquet footer open, counted in
-    * [[footerReads]]. On a wide stats-carrying commit this turns the
-    * per-trigger O(files) driver-side footer sweep into one log-line
-    * parse. The fallback honors the same vacuumed-window contract as
-    * [[filesAddedAt]]. */
-  private[graft] def rowsAddedAt(v: Long, failOnMissing: Boolean): Long = {
-    require(v >= 0 && v <= version, s"version $v outside [0, $version]")
-    addActionsAt(v).map { line =>
-      nullStatsOf(line).map(_._1).getOrElse(
-        admissionFile(line, v, failOnMissing).fold(0L)(footerRowCount))
-    }.sum
-  }
-
-  /** One COUNTED parquet footer open for an admission fallback — the
-    * row count of a stats-less add or remove line's file. */
-  private def footerRowCount(p: Path): Long = {
-    footerReads.incrementAndGet()
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString),
-        new org.apache.hadoop.conf.Configuration()))
-    try r.getRecordCount finally r.close()
-  }
-
-  /** Total on-disk bytes the adds of commit v carry — the ReadMaxBytes
-    * admission cost and the [[footerStats]] twin of [[rowsAddedAt]]:
-    * served from each add action's recorded `bytes` stat whenever
-    * present (zero file-system calls), falling back to one `Files.size`
-    * per stats-less add under the same vacuumed-window contract. */
-  private[graft] def bytesAddedAt(v: Long, failOnMissing: Boolean): Long = {
-    require(v >= 0 && v <= version, s"version $v outside [0, $version]")
-    addActionsAt(v).map { line =>
-      byteStatsOf(line).getOrElse(
-        admissionFile(line, v, failOnMissing).fold(0L)(Files.size))
-    }.sum
-  }
-
-  /** Resolve one add action's data file for an admission fallback:
-    * Some(path) when on disk, None (skip) when vacuumed and the caller
-    * opted out of fail-loud, an exception otherwise — the
-    * [[filesAddedAt]] contract shared by both fallbacks. */
-  private def admissionFile(line: String, v: Long,
-      failOnMissing: Boolean): Option[Path] = {
-    val n = fileOf(line).getOrElse(throw new IllegalStateException(
-      s"add action without a file field in commit $v"))
-    val p = dataDir.resolve(n)
-    if (Files.exists(p)) Some(p)
-    else if (failOnMissing) throw new IllegalArgumentException(
-      s"commit $v data file $n was vacuumed; this window is no longer " +
-        "streamable (set failOnDataLoss=false to skip reclaimed history)")
-    else None
   }
 
   /** The meta line's recorded operation for one commit's log lines —
@@ -542,61 +427,14 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
           .getOrElse("?")
     }.getOrElse("?")
 
-  /** Admission costs of commit v AS THE CHANGE FEED SERVES IT:
-    * (pieces, rows, bytes), where pieces is exactly the input-partition
-    * count the changeFeed's `planInputPartitions` will create for the
-    * window (adds + removes + dvsets), rows is what those partitions
-    * will emit (adds' recorded rows + remove lines' carried
-    * visible-row counts + dvsets' recorded grown counts), and bytes is
-    * the on-disk data the tasks can touch (recorded sizes; a dvset
-    * piece costs its DATA file's recorded size — the include-mode
-    * reader's upper bound). The plain-feed accessors
-    * ([[filesAddedAt]]/[[rowsAddedAt]]/[[bytesAddedAt]]) count only
-    * ADD actions, which under `changeFeed` lets a pure-dvset or
-    * CoW-delete commit admit as zero cost — this is their CDC twin.
-    *
-    * MAINTENANCE commits (compact/zorder) serve NOTHING in the feed
-    * and cost zero — Delta's dataChange=false discipline carried into
-    * rate limiting. Metadata-only on stats-carrying logs (ONE log read,
-    * zero file opens); stats-less lines take counted fallbacks under
-    * the same vacuumed-window contract as the plain accessors: a
-    * remove without carried rows opens its file's footer (counted in
-    * [[footerReads]]), a dvset without `grown` costs its new
-    * CARDINALITY (still from the line — the sound upper bound), and
-    * missing byte stats fall back to `Files.size`. */
-  private[graft] def cdcCostsAt(v: Long,
-      failOnMissing: Boolean): (Long, Long, Long) = {
-    require(v >= 0 && v <= version, s"version $v outside [0, $version]")
-    val lines = readLog(logDir.resolve(logName(v)))
-    val op = commitOp(lines)
-    if (op == "compact" || op == "zorder") return (0L, 0L, 0L)
-    val adds = lines.filter(_.contains("\"op\":\"add\""))
-    val removes = lines.filter(_.contains("\"op\":\"remove\""))
-    val dvsets = lines.filter(_.contains("\"op\":\"dvset\""))
-    val pieces = (adds.size + removes.size + dvsets.size).toLong
-    def rowsOf(line: String): Long =
-      nullStatsOf(line).map(_._1).getOrElse(
-        admissionFile(line, v, failOnMissing).fold(0L)(footerRowCount))
-    def sizeOf(line: String): Long =
-      admissionFile(line, v, failOnMissing).fold(0L)(Files.size)
-    val rows = (adds ++ removes).map(rowsOf).sum +
-      dvsets.map(l => grownStatsOf(l).getOrElse(dvCardOf(l))).sum
-    val bytes = (adds ++ removes).map(l => byteStatsOf(l).getOrElse(sizeOf(l))).sum +
-      dvsets.map(l => fbytesStatsOf(l).getOrElse(sizeOf(l))).sum
-    (pieces, rows, bytes)
-  }
-
-  /** The live (file, recorded on-disk bytes) set at v — None for adds
-    * from before byte recording. The audit face of byte stats. */
-  def filesWithByteStatsAt(v: Long): Seq[(String, Option[Long])] =
-    stateAt(v).adds.toSeq.map { case (n, line) =>
-      (dataDir.resolve(n).toString, byteStatsOf(line))
-    }
-
   /** Per-commit change windows for the STREAMING change feed
-    * ([[VersionedMicroBatchStream]] under `changeFeed`) over (s, e] —
-    * ONE incremental fold for the whole drain (seed at s, advance per
-    * commit), never a fold per version. Each window carries:
+    * ([[VersionedMicroBatchStream]] under `changeFeed`) over (s, e].
+    * `st` MUST be the folded state at version s, and it is MUTATED
+    * forward to e — the streaming change feed caches the advanced state
+    * across triggers keyed by the last served version, so a
+    * long-running CDC tail folds each commit EXACTLY ONCE per stream
+    * lifetime (O(window) log reads per trigger, never O(history)).
+    * Each window carries:
     *   - `added`: the file paths the commit ADDED (served as `insert`
     *     rows);
     *   - `removed`: (path, prior-DV descForm) per file the commit
@@ -614,29 +452,11 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * the snapshot's rows are identical before and after — and serve an
     * EMPTY window (Delta's dataChange=false discipline) instead of
     * spraying full-table delete+insert churn at every consumer.
-    * Same vacuumed-window contract as [[filesAddedAt]]: any served
-    * file missing on disk fails loudly, never skips history. */
-  private[graft] def changeWindowsBetween(s: Long, e: Long): Seq[ChangeWindow] =
-    changeWindowsFrom(stateAtOrEmpty(s), s, e, failOnMissing = true)
-
-  /** The carried-fold form of [[changeWindowsBetween]]: `st` MUST be
-    * the folded state at version s, and it is MUTATED forward to e —
-    * the streaming change feed caches the advanced state across
-    * triggers keyed by the last served version, so a long-running CDC
-    * tail folds each commit EXACTLY ONCE per stream lifetime instead
-    * of re-folding from the batch start every trigger (O(window) log
-    * reads per trigger, never O(history)).
-    *
-    * `failOnMissing = false` is the opt-in `failOnDataLoss` escape
-    * hatch (the Delta CDF retention-control shape): window pieces whose
-    * data files or DV sidecars were vacuumed are SKIPPED — the
-    * ignore-missing-files discipline, so an overwrite whose remove side
-    * was reclaimed still serves its intact insert side — re-baselining
-    * the consumer past history an operator already chose to reclaim,
-    * while the fold still advances and later intact windows stay
-    * exact. Fail-loud remains the default. */
-  private[graft] def changeWindowsFrom(st: TableState, s: Long, e: Long,
-      failOnMissing: Boolean): Seq[ChangeWindow] = {
+    * Same contract as [[filesAddedAt]]: any data file or DV sidecar a
+    * window's tasks would open that is missing on disk fails loudly,
+    * never skips history. */
+  private[sources] def changeWindowsFrom(st: TableState, s: Long,
+      e: Long): Seq[ChangeWindow] = {
     require(s <= e && e <= version, s"window ($s, $e] outside history [0, $version]")
     ((s + 1) to e).map { v =>
       val lines = readLog(logDir.resolve(logName(v)))
@@ -660,32 +480,20 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
               tmp.dv.toSeq.map { case (f, d) => (f, d, st.dv.get(f)) }
             }
           // every data file AND DV sidecar the window's tasks will open
-          // — a vacuumed sidecar breaks a read exactly like a data file
+          // — a missing sidecar breaks a read exactly like a data file
           val needed = addedN ++ removedN ++ grownRaw.map(_._1) ++
             (removedN.flatMap(n => st.dv.get(n)) ++
               grownRaw.flatMap { case (_, d, p) => d +: p.toSeq }).collect {
               case DvSidecar(sc, _) => sc
             }
-          val missing = needed.filterNot(n => Files.exists(dataDir.resolve(n))).toSet
-          if (missing.nonEmpty && failOnMissing)
+          needed.find(n => !Files.exists(dataDir.resolve(n))).foreach { n =>
             throw new IllegalArgumentException(
-              s"commit $v data file ${missing.head} was vacuumed; this window " +
-                "is no longer streamable (set failOnDataLoss=false to skip " +
-                "reclaimed history)")
-          // a removed/grown piece is servable only when its data file
-          // AND every sidecar its read needs are still on disk
-          def dvLive(d: Option[DvDesc]): Boolean = d.forall {
-            case DvSidecar(sc, _) => !missing(sc)
-            case _ => true
+              s"commit $v data file $n is missing; this window is no longer streamable")
           }
           ChangeWindow(v, op,
-            addedN.filterNot(missing)
-              .map(n => dataDir.resolve(n).toString),
-            removedN.filter(n => !missing(n) && dvLive(st.dv.get(n)))
-              .map(n => (dataDir.resolve(n).toString, descForm(st.dv.get(n)))),
-            grownRaw.filter { case (f, d, p) =>
-              !missing(f) && dvLive(Some(d)) && dvLive(p)
-            }.map { case (f, d, p) => (dataDir.resolve(f).toString, d, p) })
+            addedN.map(n => dataDir.resolve(n).toString),
+            removedN.map(n => (dataDir.resolve(n).toString, descForm(st.dv.get(n)))),
+            grownRaw.map { case (f, d, p) => (dataDir.resolve(f).toString, d, p) })
         }
       lines.foreach(foldLine(st, _)) // advance the running state to v
       window
@@ -708,8 +516,8 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
 
   /** Snapshot read from an ALREADY-FOLDED state — the single-fold core
     * of [[readAsOf]], shared by the write paths so a commit attempt
-    * folds the log exactly once (head state → constraints + schema +
-    * remove set + snapshot read all from the same [[TableState]]). */
+    * folds the log exactly once (head state → schema + remove set +
+    * snapshot read all from the same [[TableState]]). */
   private def readState(spark: SparkSession, st: TableState,
       what: => String): DataFrame = {
     val files = st.adds.keys.toSeq.map(n => dataDir.resolve(n).toString)
@@ -760,83 +568,6 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
         StructType(cur.fields ++
           incoming.fields.filterNot(f => cur.exists(_.name == f.name)))
     }
-
-  /** Active CHECK constraints as of version v (name → SQL predicate),
-    * folded add/drop over the log — the Delta-style table-level write
-    * contract: once registered, EVERY writer validates incoming rows
-    * against every active constraint before its commit can land. */
-  def constraintsAt(v: Long): Map[String, String] = {
-    if (v < 0) return Map.empty
-    stateAt(v).constraints.toMap
-  }
-
-  /** Register a CHECK constraint (a boolean SQL expression over the
-    * table's columns). The CURRENT snapshot must already satisfy it —
-    * registering a constraint the data violates would make the contract
-    * a lie — and every subsequent append/appendBatch/merge/overwrite
-    * validates its incoming rows in ONE aggregate scan before
-    * committing. Committed as a meta-only version, so the registration
-    * itself is time-travelable and race-safe like any other commit.
-    *
-    * NULL semantics — STRICTER than SQL/Delta CHECK, deliberately: a
-    * row where the predicate evaluates to NULL is REJECTED here, where
-    * SQL's three-valued CHECK (and Delta Lake's) lets the maybe pass.
-    * A write gate means provably true; if migrating a Delta constraint
-    * that relies on NULL-passes, spell the tolerance out —
-    * `col IS NULL OR <predicate>`. */
-  def addConstraint(spark: SparkSession, name: String, sqlExpr: String): Long = {
-    require(name.matches("[A-Za-z0-9_]+"),
-      s"constraint name '$name' must be [A-Za-z0-9_]+")
-    val b64 = java.util.Base64.getEncoder.encodeToString(sqlExpr.getBytes("UTF-8"))
-    var committed = -1L
-    while (committed < 0) {
-      val head = version
-      if (head >= 0) {
-        val st = stateAt(head) // one fold: live set + snapshot read
-        if (st.adds.nonEmpty)
-          enforce(readState(spark, st, s"version $head"),
-            Map(name -> sqlExpr), "existing snapshot")
-      }
-      val line = s"""{"op":"meta","operation":"add_constraint","cname":"$name","exprB64":"$b64"}"""
-      if (commit(head + 1, Seq(line))) committed = head + 1
-    }
-    committed
-  }
-
-  /** Drop a CHECK constraint by name (meta-only commit). */
-  def dropConstraint(name: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val head = version
-      require(constraintsAt(head).contains(name), s"no constraint '$name'")
-      val line = s"""{"op":"meta","operation":"drop_constraint","cname":"$name"}"""
-      if (commit(head + 1, Seq(line))) committed = head + 1
-    }
-    committed
-  }
-
-  /** Validate `df` against every constraint in ONE aggregate pass (a
-    * conditional violation count per constraint); throws naming every
-    * violated constraint. A row where the predicate is NULL counts as a
-    * violation — CHECK means provably true, three-valued maybes don't
-    * pass a write gate. */
-  private[sources] def enforce(df: DataFrame, cs: Map[String, String],
-      what: String = "incoming rows"): Unit = {
-    if (cs.isEmpty) return
-    import org.apache.spark.sql.functions.{expr, sum, when}
-    val names = cs.keys.toSeq
-    val aggs = names.map { n =>
-      val p = expr(cs(n))
-      sum(when(p.isNull || !p, 1L).otherwise(0L)).as(s"_viol_$n")
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val violated = names.zipWithIndex.collect {
-      case (n, i) if !row.isNullAt(i) && row.getLong(i) > 0 =>
-        s"'$n' (${cs(n)}): ${row.getLong(i)} row(s)"
-    }
-    require(violated.isEmpty,
-      s"CHECK constraint(s) violated by $what: ${violated.mkString("; ")}")
-  }
 
   /** Atomic PUT-IF-ABSENT publish of a fully-written temp file. POSIX
     * rename() silently REPLACES an existing target, and `Files.move`
@@ -1017,11 +748,10 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     val actions = parts.zipWithIndex.map { case (p, i) =>
       val name = s"${UUID.randomUUID().toString.take(8)}-$i.parquet"
       // EVERY add records its row count and on-disk bytes (one footer
-      // open + one stat at stage time, off the read path): `rows`
-      // serves ReadMaxRows admission and exact planner row counts,
-      // `bytes` serves ReadMaxBytes admission and the reported scan
-      // size — with zero per-query file-system calls on tables whose
-      // whole live set carries them. Column null counts still need a
+      // open + one stat at stage time, off the read path): they serve
+      // the DSv2 scan's exact row counts and reported scan size — with
+      // zero per-query file-system calls on tables whose whole live set
+      // carries them. Column null counts still need a
       // stats column set (the harvest is per-column).
       val (rows, stats, nulls) = footerStats(p, statsCols)
       val bytes = Files.size(p)
@@ -1061,63 +791,15 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * the rename). Returns the committed version. */
   def append(spark: SparkSession, df: DataFrame,
       statsCol: Option[String] = None): Long = {
-    var validated = constraintsAt(version)
-    enforce(df, validated) // before staging: a violating write costs no IO
     val adds = stage(spark, df, statsCol)
     var committed = -1L
     while (committed < 0) {
       val head = version
       val st = stateAtOrEmpty(head) // ONE fold per attempt
-      // a constraint registered while we retried must still gate us
-      val cs = st.constraints.toMap
-      if (cs != validated) { enforce(df, cs); validated = cs }
       val s = unionSchema(st.schemaB64.map(decodeSchema), df.schema)
       if (commit(head + 1, metaLine("append", s) +: adds)) committed = head + 1
     }
     committed
-  }
-
-  /** Micro-batch ids already committed — the dedup ledger for
-    * [[appendBatch]]. Checkpoints carry the FULL ledger forward
-    * (`cpbatch` lines), so this too is O(interval) log reads. */
-  def committedBatchIds: Set[Long] = {
-    val head = version
-    if (head < 0) Set.empty else stateAt(head).batchIds.toSet
-  }
-
-  /** Exactly-once streaming ingest: append one micro-batch under its
-    * batchId, skipping if that id is already in the log — the
-    * foreachBatch idempotence contract that turns Structured Streaming's
-    * at-least-once batch re-delivery into exactly-once TABLE state. The
-    * id re-check sits INSIDE the commit retry loop, so even two racing
-    * deliveries of the same batch commit it exactly once (the rename
-    * loser re-reads the ledger and finds the winner's id). Returns the
-    * committed version, or None when the batch was already in.
-    */
-  def appendBatch(spark: SparkSession, df: DataFrame,
-      batchId: Long): Option[Long] = {
-    if (committedBatchIds.contains(batchId)) return None
-    var validated = constraintsAt(version)
-    enforce(df, validated)
-    val adds = stage(spark, df, None)
-    while (true) {
-      val head = version
-      val st = stateAtOrEmpty(head) // ONE fold per attempt
-      // the ledger recheck rides the same fold: a rename loser finds the
-      // winner's batchId here on its next pass — and drops its own
-      // staged copy instead of leaking it to vacuum (the DSv2 sink's
-      // dropStaged discipline)
-      if (st.batchIds.contains(batchId)) {
-        adds.flatMap(fileOf).foreach(n => Files.deleteIfExists(dataDir.resolve(n)))
-        return None
-      }
-      val cs = st.constraints.toMap
-      if (cs != validated) { enforce(df, cs); validated = cs }
-      val s = unionSchema(st.schemaB64.map(decodeSchema), df.schema)
-      val actions = metaLine("append", s, s""","batchId":$batchId""") +: adds
-      if (commit(head + 1, actions)) return Some(head + 1)
-    }
-    None // unreachable
   }
 
   /** Overwrite: stage once; the remove set is REBASED against the head
@@ -1125,20 +807,16 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * overwrite means "the table becomes exactly this frame". */
   def overwrite(spark: SparkSession, df: DataFrame,
       statsCol: Option[String] = None): Long = {
-    var validated = constraintsAt(version)
-    enforce(df, validated)
     val adds = stage(spark, df, statsCol)
     var committed = -1L
     while (committed < 0) {
       val head = version
       val st = stateAtOrEmpty(head) // ONE fold per attempt
-      val cs = st.constraints.toMap
-      if (cs != validated) { enforce(df, cs); validated = cs }
       val removes = st.adds.keys.toSeq
       // overwrite REPLACES the state, so the schema resets to the frame's
       // (earlier versions keep reading under their own recorded schema)
       val actions = metaLine("overwrite", df.schema) +:
-        (removes.map(f => removeLine(f, st)) ++ adds)
+        (removes.map(removeLine) ++ adds)
       if (commit(head + 1, actions)) committed = head + 1
     }
     committed
@@ -1169,9 +847,6 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   def merge(spark: SparkSession, updates: DataFrame, key: String,
       statsCol: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, max, min}
-    // survivors were validated when THEY were written; only the updates
-    // bring new values past the gate
-    var validated: Map[String, String] = null
     // the updates' key interval, computed lazily on the first lost race
     // (one tiny agg); inner None = key not integer-typed → never rebase
     var updRange: Option[Option[(Long, Long)]] = None
@@ -1195,8 +870,6 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     while (committed < 0) {
       val head = version
       val st = stateAtOrEmpty(head) // ONE fold per attempt
-      val cs = st.constraints.toMap
-      if (cs != validated) { enforce(updates, cs); validated = cs }
       val rebasable = staged.filter { case (base, removes, _) =>
         untouchedBetween(base, st, removes) && {
           val newFiles = st.adds.filterNot { case (f, _) => base.adds.contains(f) }
@@ -1226,7 +899,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       }
       val s = unionSchema(st.schemaB64.map(decodeSchema), updates.schema)
       val actions = metaLine("merge", s) +:
-        (removes.map(f => removeLine(f, st)) ++ adds)
+        (removes.map(removeLine) ++ adds)
       onCowCommitAttempt()
       if (commit(head + 1, actions)) committed = head + 1
     }
@@ -1247,24 +920,13 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * of the snapshot. NULLs survive (the predicate is three-valued:
     * only rows provably inside the range are removed). Returns the new
     * version, or the current head when no file can match. The deleted
-    * rows stay time-travelable until [[vacuum]] — an explicit,
-    * operator-visible retention decision, exactly like the lake
-    * engines' vacuum-completes-the-delete contract. For a
-    * needle-in-haystack delete that would rewrite whole files for a
-    * handful of rows, prefer [[deleteRowsWhere]] (merge-on-read).
+    * rows stay time-travelable. For a needle-in-haystack delete that
+    * would rewrite whole files for a handful of rows, prefer
+    * [[deleteRowsWhere]] (merge-on-read).
     */
   def deleteWhere(spark: SparkSession, column: String, lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.col
-    deleteCoW(spark, "delete",
-      touched = st => st.adds.toSeq.collect {
-        // a file dodges the rewrite only when it has stats ON THE
-        // PREDICATE COLUMN and the interval provably misses — or when
-        // its null counts record the column as ALL NULL (no bounds
-        // exist, but no value can match either)
-        case (n, line) if longStatsOf(line).toMap.get(column)
-          .map { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-          .getOrElse(!allNullOn(line, column)) => n
-      },
+    deleteCoW(spark, longCandidate(_, column, lo, hi),
       survivors = df => df.filter(!col(column).between(lo, hi) || col(column).isNull),
       statsCols = Seq(column))
   }
@@ -1275,18 +937,12 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * on `column` can contain at least one of the values — the corpus
     * shape ("drop these sources / langs") where the predicate column is
     * text, not a key range. Same carry-by-reference, NULL-survives,
-    * time-travel-until-vacuum contract as [[deleteWhere]]. */
+    * time-travel contract as [[deleteWhere]]. */
   def deleteWhereIn(spark: SparkSession, column: String, values: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
     require(values.nonEmpty, "deleteWhereIn needs at least one value")
     val vb = values.map(_.getBytes("UTF-8"))
-    deleteCoW(spark, "delete",
-      touched = st => st.adds.toSeq.collect {
-        case (n, line) if strStatsOf(line).toMap.get(column)
-          .map { case (mn, mx) =>
-            vb.exists(v => ucmp(mn, v) <= 0 && ucmp(v, mx) <= 0)
-          }.getOrElse(!allNullOn(line, column)) => n
-      },
+    deleteCoW(spark, inCandidate(_, column, vb),
       survivors = df => df.filter(!col(column).isin(values: _*) || col(column).isNull),
       statsCols = Seq(column))
   }
@@ -1302,8 +958,8 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     files.forall(f =>
       head.adds.get(f) == base.adds.get(f) && head.dv.get(f) == base.dv.get(f))
 
-  /** Spark rewrite jobs the rewrite paths (the deleteWhere family, the
-    * compact family, and merge) have executed on this instance — the
+  /** Spark rewrite jobs the rewrite paths (the deleteWhere family,
+    * compaction, and merge) have executed on this instance — the
     * OCC-rebase observable, the [[dvDeleteJobRuns]] twin. */
   private[graft] val cowJobRuns = new AtomicLong(0L)
 
@@ -1311,21 +967,21 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   private[graft] var onCowCommitAttempt: () => Unit = () => ()
 
   /** Drop a staged-but-never-committed rewrite's files instead of
-    * leaking them to vacuum (the appendBatch dropStaged discipline). */
+    * leaking them as unreferenced orphans. */
   private def dropStaged(adds: Seq[String]): Unit =
     adds.flatMap(fileOf).foreach(n => Files.deleteIfExists(dataDir.resolve(n)))
 
   /** Shared copy-on-write delete skeleton: prune the implicated file set
-    * from the log's zone maps, read ONLY those files (DV-aware — rows a
+    * from the log's zone maps (`candidate` tests one add line), read
+    * ONLY those files (DV-aware — rows a
     * prior merge-on-read delete removed must not resurrect), rewrite the
     * survivors, carry everything else by reference.
     *
     * Lost commit races first attempt a LOGICAL REBASE, under TWO
     * proofs: every implicated file is untouched at the new head (a
     * delete/rewrite of other files), AND every file the interleave
-    * ADDED provably misses the predicate — its zone maps put it
-    * outside the `touched` set (the same pruning test the delete
-    * itself ran; a stats-less appended file always fails it). The
+    * ADDED provably misses the predicate — `candidate` rejects it
+    * (the same pruning test the delete itself ran; a stats-less appended file always fails it). The
     * second proof is what merge's key-range test is for merge: without
     * it, rows appended BEFORE the delete's commit version would
     * silently survive a predicate that matches them. When the appended
@@ -1333,8 +989,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * recomputes against the new head — serializable by proof, not by
     * stance. The meta line re-reads the head's schema so a concurrent
     * evolution is never regressed. */
-  private def deleteCoW(spark: SparkSession, op: String,
-      touched: TableState => Seq[String],
+  private def deleteCoW(spark: SparkSession, candidate: String => Boolean,
       survivors: DataFrame => DataFrame,
       statsCols: Seq[String]): Long = {
     // staged = (state the rewrite was computed against, implicated
@@ -1346,20 +1001,16 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       require(head >= 0, "nothing to delete from")
       val st = stateAt(head)
       val (hit, adds) = staged match {
-        case Some((base, h, a)) if untouchedBetween(base, st, h) && {
-          // appended-file guard: run the SAME zone-map pruning over
-          // just the interleave's new files — empty means no appended
-          // row can match the predicate, so the rebase is serializable
-          val fresh = new TableState
-          st.adds.foreach { case (f, line) =>
-            if (!base.adds.contains(f)) fresh.adds(f) = line
-          }
-          fresh.adds.isEmpty || touched(fresh).isEmpty
-        } => (h, a)
+        // appended-file guard: run the SAME zone-map pruning over just
+        // the interleave's new files — none surviving means no appended
+        // row can match the predicate, so the rebase is serializable
+        case Some((base, h, a)) if untouchedBetween(base, st, h) &&
+            !st.adds.exists { case (f, line) => !base.adds.contains(f) && candidate(line) } =>
+          (h, a)
         case _ =>
           staged.foreach { case (_, _, a) => dropStaged(a) }
           staged = None
-          val h = touched(st)
+          val h = candidates(st, candidate)
           if (h.isEmpty) return head
           cowJobRuns.incrementAndGet()
           val sch = st.schemaB64.map(decodeSchema)
@@ -1369,10 +1020,9 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
           staged = Some((st, h, a))
           (h, a)
       }
-      val metaL = st.schemaB64.map(s => metaLine(op, decodeSchema(s)))
-        .getOrElse(s"""{"op":"meta","operation":"$op"}""")
-      val actions = metaL +:
-        (hit.map(f => removeLine(f, st)) ++ adds)
+      val metaL = st.schemaB64.map(s => metaLine("delete", decodeSchema(s)))
+        .getOrElse("""{"op":"meta","operation":"delete"}""")
+      val actions = metaL +: (hit.map(removeLine) ++ adds)
       onCowCommitAttempt()
       if (commit(head + 1, actions)) committed = head + 1
     }
@@ -1402,12 +1052,12 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * is unbounded — a bulk MoR delete needs no copy-on-write fallback
     * and the log line stays O(1) per file. Speculative or retried
     * tasks can orphan a sidecar under a different unique name; orphans
-    * are invisible (never referenced by a commit) and fall to
-    * [[vacuum]], the same staging discipline data files use.
+    * are invisible (never referenced by a commit), the same staging
+    * discipline data files use.
     *
     * Read-time cost: DV'd files are served through a positional
-    * anti-join / task-side skip; [[compact]] folds DVs back into clean
-    * files — the maintenance step that bounds the CUMULATIVE vector
+    * anti-join / task-side skip; compaction ([[compactZOrder]]) folds
+    * DVs back into clean files — the maintenance step that bounds the CUMULATIVE vector
     * size across repeated deletes. NULL predicate rows survive
     * (three-valued, same as deleteWhere).
     *
@@ -1429,8 +1079,8 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     import spark.implicits._
     val dataDirStr = dataDir.toString
     // the staged Spark-job result: (head state it was computed against,
-    // per-file (sidecar descriptor, exact grown-position count))
-    var staged: Option[(TableState, Seq[(String, DvSidecar, Long)])] = None
+    // per-file sidecar descriptor)
+    var staged: Option[(TableState, Seq[(String, DvSidecar)])] = None
     var committed = -1L
     while (committed < 0) {
       val head = version
@@ -1438,17 +1088,17 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       val st = stateAt(head)
       if (st.adds.isEmpty) return head
       val rebasable = staged.filter { case (base, descs) =>
-        descs.forall { case (f, _, _) =>
+        descs.forall { case (f, _) =>
           st.adds.get(f) == base.adds.get(f) && st.dv.get(f) == base.dv.get(f)
         }
       }
-      val dvsets: Seq[(String, DvSidecar, Long)] = rebasable match {
+      val dvsets: Seq[(String, DvSidecar)] = rebasable match {
         case Some((_, descs)) => descs // disjoint interleave: pure re-rename
         case None =>
           // conflicting rebase (or first pass): drop any staled sidecars
-          // instead of leaking them to vacuum, then (re)run the job
+          // instead of leaking them, then (re)run the job
           staged.foreach { case (_, descs) =>
-            descs.foreach { case (_, sc, _) =>
+            descs.foreach { case (_, sc) =>
               Files.deleteIfExists(dataDir.resolve(sc.name))
             }
           }
@@ -1479,13 +1129,11 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
               val merged = mergeSorted(old, fresh)
               val name = s"${UUID.randomUUID().toString.take(12)}.dv"
               writeDvSidecar(Paths.get(dataDirStr).resolve(name), merged)
-              // fresh ∩ prior = ∅, so fresh.length IS the exact grown
-              // count this commit's dvset records for admission
-              (f, name, merged.length.toLong, fresh.length.toLong)
+              (f, name, merged.length.toLong)
             }
             .collect()
             .toSeq.sortBy(_._1)
-            .map { case (f, n, c, g) => (f, DvSidecar(n, c), g) }
+            .map { case (f, n, c) => (f, DvSidecar(n, c)) }
           if (descs.isEmpty) return head
           staged = Some((st, descs))
           descs
@@ -1494,8 +1142,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
         .map(s => s"""{"op":"meta","operation":"delete_mor","schemaB64":"$s"}""")
         .getOrElse("""{"op":"meta","operation":"delete_mor"}""")
       onDvCommitAttempt()
-      if (commit(head + 1,
-          metaL +: dvsets.map { case (f, d, g) => dvsetLine(f, d, st, Some(g)) }))
+      if (commit(head + 1, metaL +: dvsets.map { case (f, d) => dvsetLine(f, d) }))
         committed = head + 1
     }
     committed
@@ -1503,46 +1150,14 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
 
   /** The `dvset` action line for one descriptor — inline vectors keep
     * the r12 spelling (restore/checkpoint carry legacy state verbatim),
-    * sidecars are referenced by name + cardinality, with two additive
-    * admission-stats fields AFTER `card` (the [[DvRefRe]] fold regex
-    * anchors on `dvref`+`card`, so the order is load-bearing):
-    * `grown` = exactly how many positions this commit ADDED to the
-    * vector (recorded only where the writer knows it — [[deleteRowsWhere]]
-    * merges disjoint sets, so fresh-count is exact; a restore's
-    * reconciliation omits it), and `fbytes` = the DATA file's recorded
-    * size — what changeFeed admission costs the piece at
-    * ([[cdcCostsAt]]), metadata-only. Pre-r15 lines fall back. */
-  private def dvsetLine(f: String, d: DvDesc, st: TableState,
-      grown: Option[Long] = None): String = d match {
+    * sidecars are referenced by name + cardinality. */
+  private def dvsetLine(f: String, d: DvDesc): String = d match {
     case DvInline(p) =>
       s"""{"op":"dvset","file":"$f","positions":"${p.mkString(",")}"}"""
-    case DvSidecar(n, c) =>
-      val g = grown.map(x => s""","grown":$x""").getOrElse("")
-      val fb = st.adds.get(f).flatMap(byteStatsOf)
-        .map(b => s""","fbytes":$b""").getOrElse("")
-      s"""{"op":"dvset","file":"$f","dvref":"$n","card":$c$g$fb}"""
+    case DvSidecar(n, c) => s"""{"op":"dvset","file":"$f","dvref":"$n","card":$c}"""
   }
 
-  /** The `remove` action line for one file, carrying the removed
-    * file's recorded stats FORWARD: `rows` is what the change feed
-    * will serve for this file (the rows visible before the commit —
-    * the add-time count minus the prior deletion vector's
-    * cardinality), `bytes` its recorded on-disk size. This is what
-    * lets changeFeed admission cost a commit's delete side from its
-    * own log lines with zero file opens ([[cdcCostsAt]]). Additive
-    * fields — pre-r15 remove lines (and removes of stats-less adds)
-    * simply omit them and consumers fall back. `st` must hold the
-    * pre-commit state whose `adds` map carries the file's add line. */
-  private[sources] def removeLine(f: String, st: TableState): String = {
-    val add = st.adds.get(f)
-    val rows = add.flatMap(nullStatsOf).map { case (r, _) =>
-      math.max(0L, r - st.dv.get(f).map(_.cardinality).getOrElse(0L))
-    }
-    val bytes = add.flatMap(byteStatsOf)
-    s"""{"op":"remove","file":"$f"""" +
-      rows.map(r => s""","rows":$r""").getOrElse("") +
-      bytes.map(b => s""","bytes":$b""").getOrElse("") + "}"
-  }
+  private def removeLine(f: String): String = s"""{"op":"remove","file":"$f"}"""
 
   // ------------------------------------------------------------------
   // DV-aware file readers
@@ -1557,7 +1172,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * set on the parquet reader's `_metadata` columns. The broadcast side
     * is the files' CUMULATIVE live vector — sidecar positions expand on
     * the executors before the broadcast collects them — and its size is
-    * bounded by the [[compact]] discipline (compaction folds DV debt
+    * bounded by the compaction discipline ([[compactZOrder]] folds DV debt
     * into clean files), not by any single delete: a table that deletes
     * merge-on-read forever without compacting pays an ever-growing
     * read-side join, exactly the documented Delta/Iceberg DV trade. */
@@ -1612,7 +1227,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       // vectors broadcast (one hash per executor, no shuffle of `base`);
       // a bulk-delete table past the threshold takes a SHUFFLED anti-join
       // instead — the pair expansion stays on the executors end to end
-      // and nothing rides the driver, so even compact() (the mitigation
+      // and nothing rides the driver, so even compaction (the mitigation
       // that retires the vectors) works on the table that most needs it.
       val totalCard = dv.collect {
         case (f, d) if names(f) => d.cardinality
@@ -1671,298 +1286,113 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
   }
 
   // ------------------------------------------------------------------
-  // Zone-map accessors and pruned reads
+  // Zone-map pruned reads
   // ------------------------------------------------------------------
 
-  /** The live (file, stats) set at v: the same log fold as [[filesAt]]
-    * but keeping each add's recorded skipping interval (first recorded
-    * Long column when several exist — the legacy single-column view). */
-  def filesWithStatsAt(v: Long): Seq[(String, Option[(String, Long, Long)])] =
-    filesWithMultiStatsAt(v).map { case (p, st) =>
-      (p, st.headOption.map { case (c, (lo, hi)) => (c, lo, hi) })
-    }
+  /** Live file NAMES whose add line `keep` accepts — one zone-map or
+    * null-count candidate test applied to a folded state. */
+  private def candidates(st: TableState, keep: String => Boolean): Seq[String] =
+    st.adds.toSeq.collect { case (n, line) if keep(line) => n }
 
-  /** The live (file, per-column Long zone map) set at v — every recorded
-    * integer (col → [min, max]) interval per file, in recording order.
-    * Single-column adds (the legacy action form) parse as a one-entry
-    * map; string intervals are served by [[filesWithStringStatsAt]]. */
-  def filesWithMultiStatsAt(v: Long): Seq[(String, Seq[(String, (Long, Long))])] =
-    stateAt(v).adds.toSeq.map { case (n, line) =>
-      (dataDir.resolve(n).toString, longStatsOf(line))
-    }
-
-  /** The live (file, per-column STRING zone map) set at v — recorded
-    * truncated byte bounds per file, base64-encoded (col → (minB64,
-    * maxB64)). The audit face of string skipping. */
-  def filesWithStringStatsAt(v: Long): Seq[(String, Seq[(String, (String, String))])] =
-    stateAt(v).adds.toSeq.map { case (n, line) =>
-      (dataDir.resolve(n).toString,
-        strStatsOf(line).map { case (c, (mn, mx)) => (c, (b64(mn), b64(mx))) })
-    }
-
-  /** Data-skipping read: files whose recorded [min, max] interval on
-    * `column` cannot intersect [lo, hi] are never opened, and so are
-    * files whose null counts record the column as ALL NULL (bounds-less
-    * but provably value-free); files with no recorded stats at all are
-    * always read — skipping must be sound, not complete. The residual
-    * filter still applies row-level, so the result is exact regardless
-    * of how coarse the file intervals are. A probe the zone maps FULLY
-    * prune returns an empty frame under the log-carried schema.
-    */
-  def readWhere(spark: SparkSession, v: Long, column: String,
-      lo: Long, hi: Long): DataFrame = {
-    val st = stateAt(v) // ONE fold: prune and DV-subtract from the same state
-    val files = st.adds.toSeq.collect {
-      case (n, line) if longStatsOf(line).toMap.get(column)
-        .map { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-        .getOrElse(!allNullOn(line, column)) =>
-        dataDir.resolve(n).toString
-    }
-    if (files.isEmpty) return emptyFrame(spark, st, s"probe [$lo, $hi] at version $v")
-    // the LOG-CARRIED schema, like readAsOf: a pruned candidate set may
-    // predate an evolved column, which must null-fill, not vanish
-    readFiles(spark, files, st.schemaB64.map(decodeSchema), st.dv)
-      .filter(org.apache.spark.sql.functions.col(column).between(lo, hi))
+  /** The core every data-skipping read shares: ONE fold (prune and
+    * DV-subtract from the same state), open only the candidate files,
+    * then apply the `residual` row filter — skipping must be sound, not
+    * complete, and the residual keeps the result exact however coarse
+    * the recorded stats are. Files are read under the LOG-CARRIED
+    * schema, like [[readAsOf]]: a pruned candidate set may predate an
+    * evolved column, which must null-fill, not vanish. A probe the
+    * stats FULLY prune returns an empty frame under that schema. */
+  private def prunedRead(spark: SparkSession, v: Long, probe: => String,
+      keep: String => Boolean, residual: org.apache.spark.sql.Column): DataFrame = {
+    val st = stateAt(v)
+    val files = candidates(st, keep).map(n => dataDir.resolve(n).toString)
+    if (files.isEmpty) emptyFrame(spark, st, s"probe $probe at version $v")
+    else readFiles(spark, files, st.schemaB64.map(decodeSchema), st.dv).filter(residual)
   }
 
-  /** The candidate file list [[readWhere]] would open — exposed so the
-    * skipping ratio is testable and auditable. Multi-column zone maps
-    * prune on whichever recorded column the probe names; a file whose
-    * null counts record the column as ALL NULL is pruned even though
-    * it has no bounds (no value can match). */
-  def prunedFiles(v: Long, column: String, lo: Long, hi: Long): Seq[String] =
-    stateAt(v).adds.toSeq.collect {
-      case (n, line) if longStatsOf(line).toMap.get(column)
-        .map { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-        .getOrElse(!allNullOn(line, column)) => dataDir.resolve(n).toString
-    }
-
-  /** Live file NAMES that can satisfy an IS NULL / IS NOT NULL probe on
-    * `column` under the recorded per-file null counts: IS NULL skips
-    * zero-null files, IS NOT NULL skips all-null files; files with no
-    * recorded null stats (pre-r14 logs, or columns outside the stats
-    * set) are always candidates — sound, never complete. The ONE
-    * candidate test the null faces share (audit accessor + pruned
-    * read), the same shared-expression discipline
-    * [[betweenCandidates]] established for the BETWEEN family. */
-  private def nullCandidates(st: TableState, column: String,
-      isNull: Boolean): Seq[String] =
-    st.adds.toSeq.collect {
-      case (n, line) if nullCandidate(line, column, isNull) => n
-    }
-
-  /** Candidate files for an IS NULL / IS NOT NULL probe on `column` —
-    * the audit face of null-count skipping (see [[nullCandidates]]). */
-  def prunedFilesNull(v: Long, column: String, isNull: Boolean): Seq[String] =
-    nullCandidates(stateAt(v), column, isNull)
-      .map(n => dataDir.resolve(n).toString)
+  /** Data-skipping read of `column BETWEEN lo AND hi` on an integer
+    * column: files whose recorded [min, max] interval cannot intersect
+    * [lo, hi] are never opened, and so are files whose null counts
+    * record the column as ALL NULL (bounds-less but provably
+    * value-free); files with no recorded stats are always read.
+    * Multi-column zone maps prune on whichever recorded column the
+    * probe names. */
+  def readWhere(spark: SparkSession, v: Long, column: String,
+      lo: Long, hi: Long): DataFrame =
+    prunedRead(spark, v, s"$column in [$lo, $hi]", longCandidate(_, column, lo, hi),
+      org.apache.spark.sql.functions.col(column).between(lo, hi))
 
   /** Data-skipping read on a NULLNESS predicate — `column IS NULL`
     * (isNull = true) or `column IS NOT NULL` — served from the per-file
     * null counts the stats harvest records: a null census never opens
     * the null-free files, a completeness scan never opens the all-null
-    * ones. Same sound-not-complete contract as [[readWhere]] (the
-    * residual filter keeps the result exact), same log-carried schema,
-    * and a fully-pruned probe returns an EMPTY frame under that schema. */
+    * ones. Files with no recorded null stats (pre-r14 logs, or columns
+    * outside the stats set) are always read. */
   def readWhereNull(spark: SparkSession, v: Long, column: String,
       isNull: Boolean): DataFrame = {
-    val st = stateAt(v) // ONE fold: prune and DV-subtract from the same state
-    val files = nullCandidates(st, column, isNull)
-      .map(n => dataDir.resolve(n).toString)
-    val probe = if (isNull) "IS NULL" else "IS NOT NULL"
-    if (files.isEmpty)
-      return emptyFrame(spark, st, s"probe $column $probe at version $v")
     val c = org.apache.spark.sql.functions.col(column)
-    readFiles(spark, files, st.schemaB64.map(decodeSchema), st.dv)
-      .filter(if (isNull) c.isNull else c.isNotNull)
-  }
-
-  /** The live (file, null stats) set at v — each add's recorded (row
-    * count, column → null count), None for stats-less adds. The audit
-    * face of null-count skipping. */
-  def filesWithNullStatsAt(v: Long)
-      : Seq[(String, Option[(Long, Map[String, Long])])] =
-    stateAt(v).adds.toSeq.map { case (n, line) =>
-      (dataDir.resolve(n).toString, nullStatsOf(line))
-    }
-
-  /** String-predicate skipping: candidate files for `column IN (values)`
-    * under the recorded truncated byte bounds (unsigned lexicographic,
-    * the parquet BINARY stats order). No stats on the column → always a
-    * candidate (sound). */
-  def prunedFilesIn(v: Long, column: String, values: Seq[String]): Seq[String] = {
-    val vb = values.map(_.getBytes("UTF-8"))
-    stateAt(v).adds.toSeq.collect {
-      case (n, line) if strStatsOf(line).toMap.get(column)
-        .map { case (mn, mx) =>
-          vb.exists(x => ucmp(mn, x) <= 0 && ucmp(x, mx) <= 0)
-        }.getOrElse(!allNullOn(line, column)) => dataDir.resolve(n).toString
-    }
+    prunedRead(spark, v, s"$column ${if (isNull) "IS NULL" else "IS NOT NULL"}",
+      nullCandidate(_, column, isNull), if (isNull) c.isNull else c.isNotNull)
   }
 
   /** Data-skipping read on a STRING equality/IN predicate — the
-    * `lang = 'en'` shape a corpus table actually filters on. Same
-    * sound-not-complete contract as [[readWhere]]: the residual filter
-    * keeps the result exact however coarse the truncated bounds are. */
+    * `lang = 'en'` shape a corpus table actually filters on — under the
+    * recorded truncated byte bounds (unsigned lexicographic, the
+    * parquet BINARY stats order). */
   def readWhereIn(spark: SparkSession, v: Long, column: String,
       values: Seq[String]): DataFrame = {
-    val st = stateAt(v) // ONE fold: prune and DV-subtract from the same state
     val vb = values.map(_.getBytes("UTF-8"))
-    val files = st.adds.toSeq.collect {
-      case (n, line) if strStatsOf(line).toMap.get(column)
-        .map { case (mn, mx) =>
-          vb.exists(x => ucmp(mn, x) <= 0 && ucmp(x, mx) <= 0)
-        }.getOrElse(!allNullOn(line, column)) => dataDir.resolve(n).toString
-    }
-    if (files.isEmpty)
-      return emptyFrame(spark, st,
-        s"probe $column IN (${values.mkString(", ")}) at version $v")
-    // log-carried schema, like readAsOf (see readWhere)
-    readFiles(spark, files, st.schemaB64.map(decodeSchema), st.dv)
-      .filter(org.apache.spark.sql.functions.col(column).isin(values: _*))
+    prunedRead(spark, v, s"$column IN (${values.mkString(", ")})",
+      inCandidate(_, column, vb),
+      org.apache.spark.sql.functions.col(column).isin(values: _*))
   }
-
-  /** String-RANGE skipping: candidate files for `column BETWEEN lo AND
-    * hi` under the recorded truncated byte bounds — a file survives
-    * when its [min, max] interval can OVERLAP the probe range
-    * (unsigned-lexicographic, the parquet BINARY stats order; truncated
-    * bounds are sound, so overlap-by-bounds is sound). No stats on the
-    * column → always a candidate. */
-  def prunedFilesBetween(v: Long, column: String, lo: String,
-      hi: String): Seq[String] =
-    betweenCandidates(stateAt(v), column,
-      lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
-      .map(n => dataDir.resolve(n).toString)
-
-  /** Live file NAMES whose recorded string interval on `column` can
-    * OVERLAP [loB, hiB] under unsigned-lex order (no stats → always a
-    * candidate). The ONE overlap test every BETWEEN face shares — the
-    * audit accessor, the pruned read, and the CoW delete must never
-    * diverge on it. */
-  private def betweenCandidates(st: TableState, column: String,
-      loB: Array[Byte], hiB: Array[Byte]): Seq[String] =
-    st.adds.toSeq.collect {
-      case (n, line) if strStatsOf(line).toMap.get(column)
-        .map { case (mn, mx) =>
-          ucmp(mn, hiB) <= 0 && ucmp(loB, mx) <= 0
-        }.getOrElse(!allNullOn(line, column)) => n
-    }
 
   /** Data-skipping read on a STRING range predicate — the
     * `source BETWEEN 'a' AND 'b'` / prefix-scan shape over a table
-    * clustered on the predicate column. Same sound-not-complete
-    * contract as [[readWhere]]: the residual filter keeps the result
-    * exact however coarse the truncated bounds are. */
+    * clustered on the predicate column: a file is read when its
+    * recorded truncated byte interval can OVERLAP the range (truncated
+    * bounds are sound, so overlap-by-bounds is sound). */
   def readWhereBetween(spark: SparkSession, v: Long, column: String,
       lo: String, hi: String): DataFrame = {
-    val st = stateAt(v) // ONE fold: prune and DV-subtract from the same state
     val loB = lo.getBytes("UTF-8")
     val hiB = hi.getBytes("UTF-8")
     require(ucmp(loB, hiB) <= 0, s"empty range ['$lo', '$hi']")
-    val files = betweenCandidates(st, column, loB, hiB)
-      .map(n => dataDir.resolve(n).toString)
-    if (files.isEmpty)
-      return emptyFrame(spark, st, s"probe $column in ['$lo', '$hi'] at version $v")
-    readFiles(spark, files, st.schemaB64.map(decodeSchema), st.dv)
-      .filter(org.apache.spark.sql.functions.col(column).between(lo, hi))
-  }
-
-  /** Row-level DELETE of `column BETWEEN lo AND hi` for a STRING
-    * column, copy-on-write with string-RANGE zone-map pruning: only
-    * live files whose recorded byte interval can overlap the range are
-    * rewritten — the partition-drop shape ("retire sources k1 through
-    * k2") on a table clustered by the predicate column. Same
-    * carry-by-reference, NULL-survives, time-travel-until-vacuum
-    * contract as [[deleteWhere]]/[[deleteWhereIn]]. */
-  def deleteWhereBetween(spark: SparkSession, column: String,
-      lo: String, hi: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val loB = lo.getBytes("UTF-8")
-    val hiB = hi.getBytes("UTF-8")
-    require(ucmp(loB, hiB) <= 0, s"empty range ['$lo', '$hi']")
-    deleteCoW(spark, "delete",
-      touched = st => betweenCandidates(st, column, loB, hiB),
-      survivors = df =>
-        df.filter(!col(column).between(lo, hi) || col(column).isNull),
-      statsCols = Seq(column))
+    prunedRead(spark, v, s"$column in ['$lo', '$hi']",
+      rangeCandidate(_, column, loB, hiB),
+      org.apache.spark.sql.functions.col(column).between(lo, hi))
   }
 
   // ------------------------------------------------------------------
-  // Maintenance: compaction, z-order, restore, vacuum
+  // Maintenance: z-order compaction and restore
   // ------------------------------------------------------------------
-
-  /** Compaction (the OPTIMIZE step): rewrite the current snapshot's
-    * files into `targetFiles` larger ones and commit remove-all/add-all
-    * — logically a no-op (the snapshot's rows are identical before and
-    * after, which the spec asserts), physically the small-files repair
-    * every streaming-ingested table needs. Deletion vectors FOLD IN:
-    * the rewrite reads the DV-subtracted snapshot and the new files
-    * start DV-clean, so compaction is also the maintenance step that
-    * retires merge-on-read debt. Older versions still resolve to the
-    * ORIGINAL files, so time travel survives compaction until an
-    * explicit [[vacuum]] reclaims them.
-    *
-    * Concurrency: a lost commit race against a commit that touched any
-    * compacted file (deleteWhere/overwrite/merge — re-committing our
-    * rewrite would resurrect rows the winner removed and duplicate its
-    * survivors) recomputes both sides against the new head, dropping
-    * the staged files. A DISJOINT interleave — the common case, a
-    * concurrent APPEND — logically rebases instead: the staged rewrite
-    * re-commits removing exactly the files it compacted, the appended
-    * files stay live untouched (they are simply not in the remove
-    * set), and no Spark job re-runs. That is the Delta
-    * OPTIMIZE-does-not-conflict-with-appends rule; the appended files
-    * are picked up by the NEXT compaction.
-    */
-  def compact(spark: SparkSession, targetFiles: Int = 1): Long =
-    compactWith("compact", df => df.repartition(targetFiles),
-      df => stage(spark, df, None), spark)
-
-  /** Shared compaction skeleton: rewrite the CURRENT snapshot through
-    * `layout`, stage via `stager` (which decides the recorded stats),
-    * commit remove-compacted/add-rewrite with the disjoint-interleave
-    * rebase described on [[compact]]. */
-  private def compactWith(op: String, layout: DataFrame => DataFrame,
-      stager: DataFrame => Seq[String], spark: SparkSession): Long = {
-    var staged: Option[(TableState, Seq[String], Seq[String])] = None
-    var committed = -1L
-    while (committed < 0) {
-      val head = version
-      require(head >= 0, "nothing to compact")
-      val st = stateAt(head) // ONE fold per attempt
-      val (removes, adds) = staged match {
-        case Some((base, r, a)) if untouchedBetween(base, st, r) => (r, a)
-        case _ =>
-          staged.foreach { case (_, _, a) => dropStaged(a) }
-          staged = None
-          cowJobRuns.incrementAndGet()
-          val r = st.adds.keys.toSeq
-          val a = stager(layout(readState(spark, st, s"version $head")))
-          staged = Some((st, r, a))
-          (r, a)
-      }
-      val metaL = st.schemaB64.map(s => metaLine(op, decodeSchema(s)))
-        .getOrElse(s"""{"op":"meta","operation":"$op"}""")
-      val actions = metaL +:
-        (removes.map(f => removeLine(f, st)) ++ adds)
-      onCowCommitAttempt()
-      if (commit(head + 1, actions)) committed = head + 1
-    }
-    committed
-  }
 
   /** OPTIMIZE ZORDER BY: rewrite the current snapshot clustered on the
     * Morton interleave of two integer columns, recording BOTH columns'
-    * per-file min/max in the commit log — after which
-    * [[prunedFiles]]/[[readWhere]]/the DSv2 scan skip files on EITHER
-    * dimension, where a linear clustering prunes only its sort key
-    * (`q_cluster_compare` measures exactly this trade; this operation
-    * is the maintenance job that buys it). Buckets are equal-width over
-    * each column's observed range (swap in rank buckets for heavily
-    * skewed keys); the rewrite is one range repartition on the morton
-    * key. Logically a no-op like [[compact]] (DVs fold in the same
-    * way), with the same lost-race rebase discipline and time-travel
-    * guarantee.
+    * per-file min/max in the commit log — after which [[readWhere]] and
+    * the DSv2 scan skip files on EITHER dimension, where a linear
+    * clustering prunes only its sort key (`q_cluster_compare` measures
+    * exactly this trade; this operation is the maintenance job that
+    * buys it). Buckets are equal-width over each column's observed
+    * range (swap in rank buckets for heavily skewed keys); the rewrite
+    * is one range repartition on the morton key.
+    *
+    * Logically a no-op: the snapshot's rows are identical before and
+    * after. Deletion vectors FOLD IN — the rewrite reads the
+    * DV-subtracted snapshot and the new files start DV-clean, so
+    * compaction is also the maintenance step that retires
+    * merge-on-read debt. Older versions still resolve to the ORIGINAL
+    * files, so time travel survives compaction.
+    *
+    * Concurrency: a lost commit race against a commit that touched any
+    * compacted file (deleteWhere/overwrite/merge — re-committing the
+    * rewrite would resurrect rows the winner removed and duplicate its
+    * survivors) recomputes against the new head, dropping the staged
+    * files. A DISJOINT interleave — the common case, a concurrent
+    * APPEND — logically rebases instead: the staged rewrite re-commits
+    * removing exactly the files it compacted, the appended files stay
+    * live untouched, and no Spark job re-runs. That is the Delta
+    * OPTIMIZE-does-not-conflict-with-appends rule; the appended files
+    * are picked up by the NEXT compaction.
     *
     * Documented limitation: a clustering column whose OBSERVED span
     * exceeds the BIGINT range (lo near Long.MinValue AND hi near
@@ -1976,7 +1406,7 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
       targetFiles: Int = 8, bits: Int = 8): Long = {
     import org.apache.spark.sql.functions.{col, expr, min, max}
     require(bits >= 1 && bits <= 16, s"bits $bits outside [1, 16]")
-    compactWith("zorder", snap => {
+    def layout(snap: DataFrame): DataFrame = {
       val r = snap.agg(
         min(col(colA).cast("long")), max(col(colA).cast("long")),
         min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
@@ -2016,7 +1446,31 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
         .withColumn("_mz", expr(s"(${spread("_bx")}) | ((${spread("_by")}) * 2)"))
         .repartitionByRange(targetFiles, col("_mz"))
         .drop("_bx", "_by", "_mz")
-    }, df => stageMulti(spark, df, Seq(colA, colB)), spark)
+    }
+    var staged: Option[(TableState, Seq[String], Seq[String])] = None
+    var committed = -1L
+    while (committed < 0) {
+      val head = version
+      require(head >= 0, "nothing to compact")
+      val st = stateAt(head) // ONE fold per attempt
+      val (removes, adds) = staged match {
+        case Some((base, r, a)) if untouchedBetween(base, st, r) => (r, a)
+        case _ =>
+          staged.foreach { case (_, _, a) => dropStaged(a) }
+          staged = None
+          cowJobRuns.incrementAndGet()
+          val r = st.adds.keys.toSeq
+          val a = stageMulti(spark, layout(readState(spark, st, s"version $head")),
+            Seq(colA, colB))
+          staged = Some((st, r, a))
+          (r, a)
+      }
+      val metaL = st.schemaB64.map(s => metaLine("zorder", decodeSchema(s)))
+        .getOrElse("""{"op":"meta","operation":"zorder"}""")
+      onCowCommitAttempt()
+      if (commit(head + 1, metaL +: (removes.map(removeLine) ++ adds))) committed = head + 1
+    }
+    committed
   }
 
   /** RESTORE TO VERSION AS OF: roll the head back to exactly version
@@ -2031,42 +1485,31 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
     * roll back and forward exactly like file-level state. No data file
     * is moved or rewritten — O(log) work at any table size — and the
     * undone window remains time-travelable (the restore is itself a
-    * commit) until an explicit [[vacuum]]. CHECK constraints registered
-    * SINCE `toVersion` re-validate the restored snapshot: a rollback may
-    * not resurrect rows the table's CURRENT contract forbids. Lost
-    * commit races rebase — the remove set is recomputed against the new
-    * head while the restore target stays pinned. Fails if the target's
-    * files were vacuumed. A legitimately-EMPTY snapshot (e.g. right
-    * after a delete-all) is restorable, matching Delta's RESTORE: every
-    * head file becomes a remove and the constraint re-validation scan
-    * is skipped (no rows, nothing to violate). */
-  def restore(spark: SparkSession, toVersion: Long): Long = {
+    * commit). Lost commit races rebase — the remove set is recomputed
+    * against the new head while the restore target stays pinned. Fails
+    * if the target's files are missing on disk. A legitimately-EMPTY
+    * snapshot (e.g. right after a delete-all) is restorable, matching
+    * Delta's RESTORE: every head file becomes a remove. */
+  def restore(toVersion: Long): Long = {
     val target = stateAt(toVersion)
     val adds = target.adds
     adds.keys.foreach { n =>
       require(Files.exists(dataDir.resolve(n)),
-        s"version $toVersion data file $n was vacuumed; cannot restore")
+        s"version $toVersion data file $n is missing; cannot restore")
     }
     target.dv.values.foreach {
       case DvSidecar(n, _) =>
         require(Files.exists(dataDir.resolve(n)),
-          s"version $toVersion DV sidecar $n was vacuumed; cannot restore")
+          s"version $toVersion DV sidecar $n is missing; cannot restore")
       case _ => ()
     }
     val metaL = target.schemaB64.map(s => metaLine("restore", decodeSchema(s)))
       .getOrElse("""{"op":"meta","operation":"restore"}""")
-    var validated: Option[Map[String, String]] = None
     var committed = -1L
     while (committed < 0) {
       val head = version
       require(toVersion <= head, s"version $toVersion outside [0, $head]")
       val headSt = stateAt(head)
-      val cs = headSt.constraints.toMap
-      if (adds.nonEmpty && !validated.contains(cs)) {
-        enforce(readState(spark, target, s"version $toVersion"), cs,
-          s"restored snapshot v$toVersion")
-        validated = Some(cs)
-      }
       val headNames = headSt.adds.keySet
       val removes = headNames.toSeq.filterNot(adds.contains)
       val readds = adds.filterNot { case (n, _) => headNames.contains(n) }
@@ -2080,86 +1523,15 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
         val want = target.dv.get(f)
         val have = if (headNames.contains(f)) headSt.dv.get(f) else None
         if (want == have) None
-        else Some(want.map(d => dvsetLine(f, d, target))
+        else Some(want.map(dvsetLine(f, _))
           .getOrElse(s"""{"op":"dvset","file":"$f","positions":""}"""))
       }
       val actions = metaL +:
-        (removes.map(f => removeLine(f, headSt)) ++
+        (removes.map(removeLine) ++
           readds.values ++ dvFixes)
       if (commit(head + 1, actions)) committed = head + 1
     }
     committed
-  }
-
-  /** Physical cleanup: delete every data file not live in ANY version
-    * >= `keepFrom` (and not referenced by the head), plus any
-    * ABANDONED STAGING directory (`_tmp-*` — a crashed writer's
-    * half-staged rewrite; invisible to every read, pure disk leak)
-    * past the same age gate. Versions before the horizon stop being
-    * readable — vacuum is the explicit, operator-chosen end of their
-    * time-travel guarantee; the log itself stays intact as the audit
-    * record. Returns the deleted file/directory names.
-    *
-    * Concurrent-writer safety is `minAgeMs` (the Delta retention
-    * contract): a writer's staged-but-uncommitted files — and files a
-    * commit lands AFTER the head was pinned here — are indistinguishable
-    * from garbage by liveness alone, so vacuum only collects files older
-    * than `minAgeMs`. Set it above the longest plausible stage-to-commit
-    * duration on a table with live writers; the default 0 collects
-    * everything dead and is only safe on a QUIESCED table (which is what
-    * every spec and registry artifact here is).
-    *
-    * `dryRun = true` (the lake engines' VACUUM DRY RUN) reports the
-    * victims WITHOUT deleting anything — the operator preview before a
-    * retention decision that is, by design, irreversible. Same walk,
-    * same age gate, zero mutations.
-    */
-  def vacuum(keepFrom: Long, minAgeMs: Long = 0L,
-      dryRun: Boolean = false): Seq[String] = {
-    val head = version
-    require(keepFrom >= 0 && keepFrom <= head,
-      s"horizon $keepFrom outside [0, $head]")
-    // ONE incremental fold over the window: seed at the horizon, apply
-    // each commit's lines, and union the live set after every version —
-    // O(head - keepFrom) log reads, not a full refold per version
-    val st = stateAt(keepFrom)
-    val live = scala.collection.mutable.Set.empty[String]
-    def markLive(): Unit = {
-      live ++= st.adds.keys
-      // DV sidecars referenced by any in-window version stay — a vacuumed
-      // sidecar would break that version's read exactly like a data file
-      st.dv.values.foreach {
-        case DvSidecar(n, _) => live += n
-        case _ => ()
-      }
-    }
-    markLive()
-    ((keepFrom + 1) to head).foreach { i =>
-      readLog(logDir.resolve(logName(i))).foreach(foldLine(st, _))
-      markLive()
-    }
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    val victims = listDir(dataDir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        (n.endsWith(".parquet") || n.endsWith(".dv")) && !live.contains(n) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff
-      }
-      .map(_.getFileName.toString)
-    // abandoned staging dirs: stage() removes its own on every path
-    // (success, lost race, dropStaged), so any survivor is a crashed
-    // writer's leak — reclaim under the same minAge contract that
-    // protects an in-flight writer's young staging
-    val tmpVictims = listDir(Paths.get(root))
-      .filter { p =>
-        p.getFileName.toString.startsWith("_tmp-") &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff
-      }
-    if (!dryRun) {
-      victims.foreach(n => Files.deleteIfExists(dataDir.resolve(n)))
-      tmpVictims.foreach(deleteRecursively)
-    }
-    victims ++ tmpVictims.map(_.getFileName.toString)
   }
 
   /** Change feed between two snapshots — the incremental-consumer read
@@ -2261,10 +1633,6 @@ class VersionedTable(val root: String, val checkpointInterval: Int = 10) {
 private[sources] object VersionedTable {
   private val FileRe = "\"file\":\"([^\"]+)\"".r
   private val SchemaRe = "\"schemaB64\":\"([^\"]+)\"".r
-  private val BatchIdRe = "\"batchId\":(-?\\d+)".r
-  private val AddConstraintRe =
-    "\"operation\":\"add_constraint\",\"cname\":\"([^\"]+)\",\"exprB64\":\"([^\"]+)\"".r
-  private val DropConstraintRe = "\"operation\":\"drop_constraint\",\"cname\":\"([^\"]+)\"".r
   private val DvPosRe = "\"positions\":\"([^\"]*)\"".r
   private val DvRefRe = "\"dvref\":\"([^\"]+)\",\"card\":(\\d+)".r
 
@@ -2338,8 +1706,7 @@ private[sources] object VersionedTable {
 
   /** Read one DV sidecar back into sorted positions. Called task-side
     * by the readers (DSv2 partition reader, the broadcast-pair
-    * expansion, deleteRowsWhere's merge tasks); on the driver only by
-    * audit accessors ([[VersionedTable.dvAt]]) and change-feed diffs. */
+    * expansion, deleteRowsWhere's merge tasks). */
   private[sources] def readDvSidecar(path: Path): Array[Long] = {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       Files.newInputStream(path)))
@@ -2461,29 +1828,6 @@ private[sources] object VersionedTable {
   private val RowsRe = "\"rows\":(\\d+)".r
   private val NullsRe = "\"nulls\":\"([^\"]*)\"".r
   private val BytesRe = "\"bytes\":(\\d+)".r
-  private val GrownRe = "\"grown\":(\\d+)".r
-  private val FbytesRe = "\"fbytes\":(\\d+)".r
-
-  /** Exact grown-position count recorded on a dvset action (the r15
-    * changeFeed-admission field) — None for pre-recording lines, whose
-    * admission falls back to [[dvCardOf]]'s upper bound. */
-  private[sources] def grownStatsOf(line: String): Option[Long] =
-    GrownRe.findFirstMatchIn(line).map(_.group(1).toLong)
-
-  /** The data file's recorded on-disk size carried on a dvset action —
-    * what changeFeed admission costs the piece at (the include-mode
-    * reader's upper bound). */
-  private[sources] def fbytesStatsOf(line: String): Option[Long] =
-    FbytesRe.findFirstMatchIn(line).map(_.group(1).toLong)
-
-  /** The NEW vector's cardinality straight from a dvset line — sidecar
-    * `card` field or inline position count; the metadata-only upper
-    * bound on the positions the commit can have grown. */
-  private[sources] def dvCardOf(line: String): Long =
-    DvRefRe.findFirstMatchIn(line).map(_.group(2).toLong).getOrElse {
-      val pos = DvPosRe.findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-      if (pos.isEmpty) 0L else (pos.count(_ == ',') + 1).toLong
-    }
 
   /** On-disk byte size recorded on an add action (the r15 additive
     * field — pre-r15 logs read unchanged and fall back to per-file
@@ -2521,6 +1865,34 @@ private[sources] object VersionedTable {
     ns.exists { case (rows, nulls) =>
       rows > 0 && nulls.get(column).contains(rows)
     }
+
+  /** Zone-map candidate test for `column BETWEEN lo AND hi` on an
+    * integer column: a file is skipped only when its recorded interval
+    * provably misses, or its null counts record the column as ALL NULL
+    * (no bounds exist, but no value can match either). No stats on the
+    * column → always a candidate (sound). */
+  private[sources] def longCandidate(line: String, column: String,
+      lo: Long, hi: Long): Boolean =
+    longStatsOf(line).toMap.get(column)
+      .map { case (fLo, fHi) => fHi >= lo && fLo <= hi }
+      .getOrElse(!allNullOn(line, column))
+
+  /** String zone-map candidate test for `column IN (values)` (values as
+    * UTF-8 bytes): the recorded truncated byte interval must be able to
+    * contain one of them, unsigned lexicographic. */
+  private[sources] def inCandidate(line: String, column: String,
+      values: Seq[Array[Byte]]): Boolean =
+    strStatsOf(line).toMap.get(column)
+      .map { case (mn, mx) => values.exists(x => ucmp(mn, x) <= 0 && ucmp(x, mx) <= 0) }
+      .getOrElse(!allNullOn(line, column))
+
+  /** String zone-map candidate test for `column BETWEEN lo AND hi`: the
+    * recorded truncated byte interval must OVERLAP [loB, hiB]. */
+  private[sources] def rangeCandidate(line: String, column: String,
+      loB: Array[Byte], hiB: Array[Byte]): Boolean =
+    strStatsOf(line).toMap.get(column)
+      .map { case (mn, mx) => ucmp(mn, hiB) <= 0 && ucmp(loB, mx) <= 0 }
+      .getOrElse(!allNullOn(line, column))
 
   /** Candidate test for an IS NULL / IS NOT NULL probe on `column`,
     * from RECORDED null counts only (absent stats → candidate, sound):

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +19,15 @@ class LakeScaleSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(): String = Files.createTempDirectory("lake").toString
+
+  /** The action lines commit v wrote to the log. */
+  private def logLines(t: VersionedTable, v: Long): Seq[String] =
+    Files.readAllLines(Paths.get(t.root, "_log", f"$v%012d.json")).asScala.toSeq
+
+  /** Summed `card` of the deletion-vector sidecars commit v set. */
+  private def dvCard(t: VersionedTable, v: Long): Long =
+    logLines(t, v).flatMap("\"card\":(\\d+)".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong).sum
 
   // ------------------------------------------------------------------
   // Log checkpoints
@@ -72,14 +83,13 @@ class LakeScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("checkpoints carry schema, constraints, batch ledger and zone maps forward") {
+  test("checkpoints carry schema and zone maps forward") {
     val root = dir()
     val t = new VersionedTable(root, checkpointInterval = 4)
     t.append(spark, spark.range(0, 100).toDF("id").repartition(1),
       statsCol = Some("id"))                                        // v0
-    t.addConstraint(spark, "id_nonneg", "id >= 0")                  // v1
-    assert(t.appendBatch(spark,
-      spark.range(100, 150).toDF("id"), batchId = 7L).contains(2L)) // v2
+    t.append(spark, spark.range(100, 120).toDF("id"))               // v1
+    t.append(spark, spark.range(120, 150).toDF("id"))               // v2
     t.append(spark, spark.range(150, 200).toDF("id")
       .withColumn("tag", org.apache.spark.sql.functions.lit("x"))) // v3: evolve
     t.append(spark, spark.range(200, 210).toDF("id"))               // v4 → checkpoint
@@ -91,15 +101,10 @@ class LakeScaleSpec extends AnyFunSuite {
     // schema (evolved at v3) rides the checkpoint
     assert(fresh.read(spark).schema.fieldNames === Array("id", "tag"))
     assert(fresh.read(spark).count() === 220)
-    // constraint still gates writers post-checkpoint
-    assertThrows[IllegalArgumentException](
-      fresh.append(spark, Seq(-5L).toDF("id")))
-    // the batch ledger survives: batch 7 re-delivery is skipped
-    assert(fresh.appendBatch(spark, Seq(999L).toDF("id"), 7L) === None)
     // v0's zone map is served from the checkpointed add action: a probe
     // outside its [0, 99] interval skips that file (the stats-free later
     // files are always candidates — skipping is sound, not complete)
-    assert(fresh.prunedFiles(5L, "id", 500L, 600L).size ===
+    assert(fresh.readWhere(spark, 5L, "id", 500L, 600L).inputFiles.length ===
       fresh.filesAt(5L).size - 1)
   }
 
@@ -109,9 +114,8 @@ class LakeScaleSpec extends AnyFunSuite {
     (0 until 12).foreach(i => t.append(spark, Seq((i, "x")).toDF("id", "v")))
     t.awaitCheckpoints()
     // head = 11, checkpoint at 10 → one fold costs 2 file reads (cp +
-    // log 11). An append is exactly two folds: the pre-stage constraint
-    // check and the commit attempt. The old regime (constraintsAt +
-    // schemaAt + filesAt each refolding) read 6+.
+    // log 11). An append folds once per commit attempt; refolding per
+    // accessor (schema, live files) would read 4+.
     val fresh = new VersionedTable(root, checkpointInterval = 5)
     fresh.logFileReads.set(0L)
     fresh.append(spark, Seq((99, "y")).toDF("id", "v"))
@@ -195,7 +199,7 @@ class LakeScaleSpec extends AnyFunSuite {
     // ZERO data files changed — the delete is pure metadata
     assert(t.filesAt(v).toSet === before,
       "merge-on-read delete must not rewrite or add any data file")
-    assert(t.dvAt(v).values.map(_.size).sum === 3)
+    assert(dvCard(t, v) === 3)
     // the read subtracts exactly the matches
     assert(t.read(spark).count() === 147)
     assert(t.read(spark).filter("id % 50 = 7").count() === 0)
@@ -223,57 +227,6 @@ class LakeScaleSpec extends AnyFunSuite {
     val head = t.version
     assert(t.deleteRowsWhere(spark, "id > 100000") === head)
     assert(t.version === head)
-  }
-
-  test("vacuum minAge protects young files; a duplicate appendBatch drops its staging") {
-    val t = new VersionedTable(dir())
-    t.append(spark, spark.range(0, 10).toDF("id"))          // v0
-    t.overwrite(spark, spark.range(10, 20).toDF("id"))      // v1: v0's files die
-    // a retention window longer than the files' age collects NOTHING —
-    // the guard that keeps vacuum from eating a concurrent writer's
-    // staged-or-just-committed files (they are always young)
-    assert(t.vacuum(keepFrom = 1L, minAgeMs = 3600000L).isEmpty)
-    assert(t.readAsOf(spark, 0L).count() === 10, "protected files still serve")
-    // an ABANDONED staging dir (crashed writer) is reclaimed by vacuum
-    // under the same minAge contract — young staging survives
-    val orphan = Paths.get(t.root, "_tmp-orphaned-by-crash")
-    Files.createDirectories(orphan)
-    Files.write(orphan.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
-    assert(t.vacuum(keepFrom = 1L, minAgeMs = 3600000L).isEmpty,
-      "a young staging dir must be protected like any young file")
-    // the quiesced-table default still collects the dead files AND the
-    // orphaned staging dir
-    val collected = t.vacuum(keepFrom = 1L)
-    assert(collected.nonEmpty)
-    assert(collected.contains("_tmp-orphaned-by-crash"))
-    assert(!Files.exists(orphan))
-    intercept[Exception] { t.readAsOf(spark, 0L).count() }
-
-    // duplicate appendBatch: the loser must not leak its staged copy.
-    // The fast pre-stage ledger check is blinded (a stale read, as a
-    // racing writer would see), forcing the IN-LOOP detection that runs
-    // after staging — the path that must clean up after itself.
-    val t2 = new VersionedTable(dir())
-    assert(t2.appendBatch(spark, spark.range(0, 5).toDF("id"), 7L).contains(0L))
-    def dataFiles(): Int = {
-      val s = Files.list(Paths.get(t2.root, "data"))
-      try {
-        var c = 0
-        val it = s.iterator()
-        while (it.hasNext) {
-          if (it.next().getFileName.toString.endsWith(".parquet")) c += 1
-        }
-        c
-      } finally s.close()
-    }
-    val before = dataFiles()
-    val stale = new VersionedTable(t2.root) {
-      override def committedBatchIds: Set[Long] = Set.empty
-    }
-    assert(stale.appendBatch(spark, spark.range(0, 5).toDF("id"), 7L) === None)
-    assert(dataFiles() === before,
-      "a skipped duplicate batch must drop its staged files, not leak them")
-    assert(t2.read(spark).count() === 5)
   }
 
   test("deletion vectors stay position-exact under schema evolution") {
@@ -357,7 +310,7 @@ class LakeScaleSpec extends AnyFunSuite {
     t.deleteRowsWhere(spark, "id = 5")
     assert(t.read(spark).select("id").as[Long].collect().sorted ===
       Array(0L, 2L, 4L, 6L, 7L, 8L, 9L))
-    assert(t.dvAt(2L)(file) === Seq(1L, 3L, 5L),
+    assert(dvCard(t, 2L) === 3L,
       "the merged vector must carry the inline positions forward")
   }
 
@@ -409,11 +362,17 @@ class LakeScaleSpec extends AnyFunSuite {
 
   test("compact folds deletion vectors into clean files") {
     val t = new VersionedTable(dir())
-    t.append(spark, spark.range(0, 100).toDF("id").repartition(2))
+    t.append(spark, spark.range(0, 100).toDF("id")
+      .withColumn("b", org.apache.spark.sql.functions.col("id") % 7)
+      .repartition(2))
     t.deleteRowsWhere(spark, "id IN (3, 97)")
-    assert(t.dvAt(t.version).nonEmpty)
-    val cv = t.compact(spark, targetFiles = 1)
-    assert(t.dvAt(cv).isEmpty, "compaction must retire the DV debt")
+    assert(dvCard(t, t.version) === 2L)
+    val cv = t.compactZOrder(spark, "id", "b", targetFiles = 1)
+    // the rewrite replaces every DV'd file with clean ones: no live file
+    // is carried over and the compaction commit sets no vector
+    assert((t.filesAt(cv).toSet & t.filesAt(1L).toSet).isEmpty,
+      "compaction must retire the DV debt")
+    assert(!logLines(t, cv).exists(_.contains("\"op\":\"dvset\"")))
     assert(t.read(spark).count() === 98)
     assert(t.read(spark).filter("id IN (3, 97)").count() === 0)
     // pre-compaction state still time-travels WITH its DV applied
@@ -445,13 +404,14 @@ class LakeScaleSpec extends AnyFunSuite {
 
     // back to the pre-delete state: the DV reset is pure metadata
     val filesBefore = t.filesAt(dv2).toSet
-    t.restore(spark, 0L)                                           // v3
+    t.restore(0L)                                                  // v3
     assert(t.read(spark).count() === 100)
-    assert(t.dvAt(t.version).isEmpty)
+    assert(logLines(t, t.version).exists(_.contains("\"positions\":\"\"")),
+      "the restore must clear the file's vector")
     assert(t.filesAt(t.version).toSet === filesBefore, "no data file moved")
 
     // forward again to the mid-delete state
-    t.restore(spark, dv1)                                          // v4
+    t.restore(dv1)                                                 // v4
     assert(t.read(spark).select("id").as[Long].collect().sorted ===
       (0L until 100L).filterNot(i => i == 10 || i == 20).toArray)
     assert(t.readAsOf(spark, dv2).count() === 97, "history intact throughout")
@@ -466,7 +426,7 @@ class LakeScaleSpec extends AnyFunSuite {
       .select("_change_type", "id").as[(String, Int)].collect().sorted
     assert(w01 === Array(("delete", 2)),
       "a merge-on-read delete must surface as a positional delete row")
-    t.restore(spark, 0L)                                               // v2
+    t.restore(0L)                                                      // v2
     val w12 = t.changesBetween(spark, 1L, 2L)
       .select("_change_type", "id").as[(String, Int)].collect().sorted
     assert(w12 === Array(("insert", 2)),
@@ -489,28 +449,27 @@ class LakeScaleSpec extends AnyFunSuite {
       .repartitionByRange(5, org.apache.spark.sql.functions.col("lang"))
     t.append(spark, df, statsCol = Some("lang"))
     val all = t.filesAt(0L)
-    assert(t.filesWithStringStatsAt(0L).forall(_._2.nonEmpty),
-      "every add must carry string footer stats")
-    val candidates = t.prunedFilesIn(0L, "lang", Seq("en"))
-    assert(candidates.size < all.size,
-      s"no skipping happened: ${candidates.size} of ${all.size}")
-    val got = t.readWhereIn(spark, 0L, "lang", Seq("en"))
-      .select("id").as[Long].collect().sorted
+    val probe = t.readWhereIn(spark, 0L, "lang", Seq("en"))
+    val candidates = probe.inputFiles.length
+    assert(candidates < all.size,
+      s"no skipping happened: $candidates of ${all.size}")
+    val got = probe.select("id").as[Long].collect().sorted
     assert(got === (0L until 1000L).filter(_ % 5 == 1).toArray)
-    // a column with no recorded string stats always reads everything (sound)
-    assert(t.prunedFilesIn(0L, "missing", Seq("x")).size === all.size)
+    // a column with no recorded string stats always reads everything
+    // (sound): `id` carries no string bounds
+    assert(t.readWhereIn(spark, 0L, "id", Seq("1")).inputFiles.length === all.size)
 
     // the DSv2 batch face prunes its input partitions on the same maps
     val dsv2 = spark.read.format("graft.sources.VersionedStreamProvider")
       .option("path", t.root).load()
     val en = dsv2.filter("lang = 'en'")
     assert(en.count() === 200)
-    assert(en.rdd.getNumPartitions === candidates.size,
+    assert(en.rdd.getNumPartitions === candidates,
       "pushed string equality must plan only the zone-map candidates")
     val inTwo = dsv2.filter("lang IN ('en', 'zh')")
     assert(inTwo.count() === 400)
     assert(inTwo.rdd.getNumPartitions ===
-      t.prunedFilesIn(0L, "lang", Seq("en", "zh")).size)
+      t.readWhereIn(spark, 0L, "lang", Seq("en", "zh")).inputFiles.length)
   }
 
   test("string bounds use sound truncation: 64-byte cap never loses a candidate") {
@@ -522,34 +481,22 @@ class LakeScaleSpec extends AnyFunSuite {
     t.append(spark, Seq((2L, longB)).toDF("id", "s").repartition(1),
       statsCol = Some("s"))
     // recorded bounds are capped, not full values
-    t.filesWithStringStatsAt(1L).foreach { case (_, st) =>
-      st.foreach { case (_, (mnB64, mxB64)) =>
-        assert(java.util.Base64.getDecoder.decode(mnB64).length <= 64)
-        assert(java.util.Base64.getDecoder.decode(mxB64).length <= 64)
-      }
+    val bounds = (0L to 1L).flatMap(logLines(t, _))
+      .flatMap("\"smin\":\"([^\"]*)\",\"smax\":\"([^\"]*)\"".r.findFirstMatchIn(_))
+    assert(bounds.size === 2)
+    bounds.foreach { m =>
+      assert(java.util.Base64.getDecoder.decode(m.group(1)).length <= 64)
+      assert(java.util.Base64.getDecoder.decode(m.group(2)).length <= 64)
     }
     // probing the full long value still finds its file (sound bounds)...
-    val hitA = t.prunedFilesIn(1L, "s", Seq(longA))
-    assert(hitA.size === 1)
-    assert(t.readWhereIn(spark, 1L, "s", Seq(longA)).count() === 1)
+    val readA = t.readWhereIn(spark, 1L, "s", Seq(longA))
+    val hitA = readA.inputFiles
+    assert(hitA.length === 1)
+    assert(readA.count() === 1)
     // ...and skips the provably-foreign file
-    val hitB = t.prunedFilesIn(1L, "s", Seq(longB))
-    assert(hitB.size === 1)
+    val hitB = t.readWhereIn(spark, 1L, "s", Seq(longB)).inputFiles
+    assert(hitB.length === 1)
     assert(hitA.head !== hitB.head)
-  }
-
-  test("DSv2 writer harvests string stats through the statsCol option") {
-    val root = dir()
-    val df = spark.range(0, 100).toDF("id")
-      .withColumn("lang", org.apache.spark.sql.functions
-        .when(org.apache.spark.sql.functions.col("id") < 50, "en")
-        .otherwise("zh"))
-      .repartitionByRange(2, org.apache.spark.sql.functions.col("lang"))
-    df.write.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("statsCol", "lang").mode("append").save()
-    val t = new VersionedTable(root)
-    assert(t.filesWithStringStatsAt(0L).count(_._2.nonEmpty) >= 2)
-    assert(t.prunedFilesIn(0L, "lang", Seq("en")).size < t.filesAt(0L).size)
   }
 
   test("deleteWhereIn rewrites only the files the string zone maps implicate") {
@@ -631,7 +578,6 @@ class LakeScaleSpec extends AnyFunSuite {
     t.append(spark, spark.range(100, 120).toDF("id"))               // v2
     // hand-write the checkpoint EXACTLY as an r12 writer would have at
     // v1: the fmt:1 header plus the add actions verbatim from the log
-    import scala.jdk.CollectionConverters._
     val adds = (0L to 1L).flatMap { v =>
       Files.readAllLines(Paths.get(root, "_log", f"$v%012d.json")).asScala
         .filter(_.contains("\"op\":\"add\""))
@@ -651,7 +597,7 @@ class LakeScaleSpec extends AnyFunSuite {
     // v0's zone map survives the text checkpoint seed: a probe above
     // its recorded interval skips that file (v1/v2 wrote no stats —
     // always candidates; skipping is sound, not complete)
-    assert(fresh.prunedFiles(2L, "id", 500L, 600L).size ===
+    assert(fresh.readWhere(spark, 2L, "id", 500L, 600L).inputFiles.length ===
       fresh.filesAt(2L).size - 1)
   }
 
@@ -666,14 +612,15 @@ class LakeScaleSpec extends AnyFunSuite {
     t.append(spark, df, statsCol = Some("lang"))
     val all = t.filesAt(0L)
     // [de, es] overlaps the de/en/es files, provably misses fr/zh
-    val candidates = t.prunedFilesBetween(0L, "lang", "de", "es")
-    assert(candidates.size < all.size,
-      s"no skipping happened: ${candidates.size} of ${all.size}")
-    val got = t.readWhereBetween(spark, 0L, "lang", "de", "es")
-      .select("id").as[Long].collect().sorted
+    val probe = t.readWhereBetween(spark, 0L, "lang", "de", "es")
+    val candidates = probe.inputFiles.length
+    assert(candidates < all.size,
+      s"no skipping happened: $candidates of ${all.size}")
+    val got = probe.select("id").as[Long].collect().sorted
     assert(got === (0L until 1000L).filter(i => i % 5 <= 2).toArray)
-    // a no-stats column always reads everything (sound)
-    assert(t.prunedFilesBetween(0L, "missing", "a", "b").size === all.size)
+    // a column with no recorded string stats always reads everything
+    // (sound): `id` carries no string bounds
+    assert(t.readWhereBetween(spark, 0L, "id", "1", "2").inputFiles.length === all.size)
     // an empty range is refused, not silently empty
     assertThrows[IllegalArgumentException](
       t.readWhereBetween(spark, 0L, "lang", "zz", "aa"))
@@ -683,22 +630,8 @@ class LakeScaleSpec extends AnyFunSuite {
       .option("path", t.root).load()
     val ranged = dsv2.filter("lang >= 'de' AND lang <= 'es'")
     assert(ranged.count() === 600)
-    assert(ranged.rdd.getNumPartitions === candidates.size,
+    assert(ranged.rdd.getNumPartitions === candidates,
       "pushed string comparisons must plan only the zone-map candidates")
-
-    // deleteWhereBetween rewrites ONLY the implicated files
-    val before = t.filesAt(0L).toSet
-    val v = t.deleteWhereBetween(spark, "lang", "es", "fr")
-    assert(t.read(spark).count() === 600)
-    assert(t.read(spark).filter("lang IN ('es', 'fr')").count() === 0)
-    assert((before & t.filesAt(v).toSet).nonEmpty,
-      "files outside ['es','fr'] must carry by reference")
-    // NULLs survive a BETWEEN delete (three-valued)
-    val t2 = new VersionedTable(dir())
-    t2.append(spark, Seq((1L, Some("aa")), (2L, None), (3L, Some("mm")))
-      .toDF("id", "source"))
-    t2.deleteWhereBetween(spark, "source", "m", "n")
-    assert(t2.read(spark).select("id").as[Long].collect().sorted === Array(1L, 2L))
   }
 
   test("copy-on-write paths rebase lost races against disjoint commits") {
@@ -727,34 +660,38 @@ class LakeScaleSpec extends AnyFunSuite {
     // the untouched file (50-99) and the appended file carried by reference
     assert((t.filesAt(1L).toSet & t.filesAt(v).toSet).size === 1)
 
-    // compact vs a concurrent APPEND: Delta's OPTIMIZE-vs-append
+    // compaction vs a concurrent APPEND: Delta's OPTIMIZE-vs-append
     // non-conflict — the rebase removes exactly the compacted files,
     // the appended file stays live for the NEXT compaction
+    def withB(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("b", org.apache.spark.sql.functions.col("id") % 3)
     val t2 = new VersionedTable(dir())
-    t2.append(spark, spark.range(0, 60).toDF("id").repartition(3))
+    t2.append(spark, withB(spark.range(0, 60).toDF("id")).repartition(3))
     t2.deleteRowsWhere(spark, "id = 5") // a DV the compaction must fold
+    val dvFiles = t2.filesAt(t2.version).toSet
     var fired2 = false
     t2.onCowCommitAttempt = () => {
       if (!fired2) {
         fired2 = true
-        t2.append(spark, spark.range(60, 70).toDF("id").repartition(1))
+        t2.append(spark, withB(spark.range(60, 70).toDF("id")).repartition(1))
       }
     }
     t2.cowJobRuns.set(0L)
-    val cv = t2.compact(spark, targetFiles = 1)
+    val cv = t2.compactZOrder(spark, "id", "b", targetFiles = 1)
     t2.onCowCommitAttempt = () => ()
     assert(t2.cowJobRuns.get() === 1L,
-      "compact must rebase over a concurrent append, not re-run the rewrite")
+      "compaction must rebase over a concurrent append, not re-run the rewrite")
     assert(t2.read(spark).select("id").as[Long].collect().sorted ===
       (0L until 70L).filterNot(_ == 5).toArray,
       "compacted rows (DV folded) AND the appended rows must both survive")
-    assert(t2.dvAt(cv).isEmpty, "the compacted files' DV debt is retired")
+    assert((t2.filesAt(cv).toSet & dvFiles).isEmpty,
+      "the compacted files' DV debt is retired")
 
     // a CONFLICTING interleave (a delete touching a compacted file)
     // must recompute — re-committing the stale rewrite would resurrect
     // the deleted rows
     val t3 = new VersionedTable(dir())
-    t3.append(spark, spark.range(0, 40).toDF("id").repartition(2),
+    t3.append(spark, withB(spark.range(0, 40).toDF("id")).repartition(2),
       statsCol = Some("id"))
     var fired3 = false
     t3.onCowCommitAttempt = () => {
@@ -765,7 +702,7 @@ class LakeScaleSpec extends AnyFunSuite {
       }
     }
     t3.cowJobRuns.set(0L)
-    t3.compact(spark, targetFiles = 1)
+    t3.compactZOrder(spark, "id", "b", targetFiles = 1)
     t3.onCowCommitAttempt = () => ()
     assert(t3.cowJobRuns.get() === 2L,
       "a conflicting interleave must recompute the compaction")
@@ -872,10 +809,6 @@ class LakeScaleSpec extends AnyFunSuite {
     val ops = t.history.map(_._2)
     assert(ops.count(_ == "append") === 5 && ops.count(_ == "delete_mor") === 1,
       s"unexpected op mix: $ops")
-    // compaction on top retires the DV and preserves the state exactly
-    val cv = t.compact(spark, targetFiles = 1)
-    assert(t.dvAt(cv).isEmpty)
-    assert(t.read(spark).select("id").as[Long].collect().sorted === expect)
   }
 
   test("commit publish is put-if-absent: a raw 8-thread rename race loses no version") {
@@ -906,7 +839,6 @@ class LakeScaleSpec extends AnyFunSuite {
       tasks.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
     } finally pool.shutdown()
     assert(t.version === 399L, "400 commits must take versions 0..399")
-    import scala.jdk.CollectionConverters._
     assert(landed.asScala.toSeq.sorted === (0L to 399L),
       "every version must be won by exactly one writer — none lost, none doubled")
   }
@@ -954,23 +886,23 @@ class LakeScaleSpec extends AnyFunSuite {
     val t = nullShapedTable()
     val v = t.version
     // every add recorded (rows, v → nulls) from the footer
-    val ns = t.filesWithNullStatsAt(v).toMap
-    assert(ns.size === 3 && ns.values.forall(_.isDefined))
-    assert(ns.values.flatMap(_.map { case (r, m) => (r, m("v")) }).toSet ===
-      Set((2L, 2L), (2L, 1L), (2L, 0L)))
+    val ns = (0L to v).flatMap(logLines(t, _))
+      .flatMap("\"rows\":(\\d+),\"bytes\":\\d+,\"nulls\":\"v:(\\d+)\"".r.findFirstMatchIn(_))
+      .map(m => (m.group(1).toLong, m.group(2).toLong))
+    assert(ns.toSet === Set((2L, 2L), (2L, 1L), (2L, 0L)))
     // IS NULL skips the null-free file; IS NOT NULL skips the all-null one
-    assert(t.prunedFilesNull(v, "v", isNull = true).size === 2)
-    assert(t.prunedFilesNull(v, "v", isNull = false).size === 2)
-    // unrecorded column: always a candidate (sound)
-    assert(t.prunedFilesNull(v, "missing", isNull = true).size === 3)
+    val isNull = t.readWhereNull(spark, v, "v", isNull = true)
+    val notNull = t.readWhereNull(spark, v, "v", isNull = false)
+    assert(isNull.inputFiles.length === 2)
+    assert(notNull.inputFiles.length === 2)
+    // unrecorded column (`id` has no null counts): always a candidate
+    assert(t.readWhereNull(spark, v, "id", isNull = true).inputFiles.length === 3)
     // the pruned reads stay exact
-    assert(t.readWhereNull(spark, v, "v", isNull = true)
-      .select("id").as[Long].collect().sorted === Array(0L, 1L, 3L))
-    assert(t.readWhereNull(spark, v, "v", isNull = false)
-      .select("id").as[Long].collect().sorted === Array(2L, 4L, 5L))
+    assert(isNull.select("id").as[Long].collect().sorted === Array(0L, 1L, 3L))
+    assert(notNull.select("id").as[Long].collect().sorted === Array(2L, 4L, 5L))
     // the BLIND SPOT: the all-null file records no bounds, but its null
     // count proves no VALUE can match — value probes now skip it too
-    assert(t.prunedFiles(v, "v", 0L, 100L).size === 2,
+    assert(t.readWhere(spark, v, "v", 0L, 100L).inputFiles.length === 2,
       "an all-null file must not survive a value probe")
     assert(t.readWhere(spark, v, "v", 10L, 20L)
       .select("id").as[Long].collect().sorted === Array(2L, 4L))
@@ -990,7 +922,6 @@ class LakeScaleSpec extends AnyFunSuite {
     // r13-era add lines (no rows/nulls fields) keep reading: strip the
     // fields from the log in place and re-probe — no pruning anywhere
     // (sound), results unchanged
-    import scala.jdk.CollectionConverters._
     (0L to 2L).foreach { i =>
       val p = Paths.get(t.root, "_log", f"$i%012d.json")
       val stripped = Files.readAllLines(p).asScala
@@ -999,9 +930,8 @@ class LakeScaleSpec extends AnyFunSuite {
       Files.write(p, stripped.mkString("\n").getBytes("UTF-8"))
     }
     val t2 = new VersionedTable(t.root)
-    assert(t2.filesWithNullStatsAt(v).forall(_._2.isEmpty))
-    assert(t2.prunedFilesNull(v, "v", isNull = true).size === 3)
-    assert(t2.prunedFiles(v, "v", 0L, 100L).size === 3,
+    assert(t2.readWhereNull(spark, v, "v", isNull = true).inputFiles.length === 3)
+    assert(t2.readWhere(spark, v, "v", 0L, 100L).inputFiles.length === 3,
       "without null counts the all-null file is back to always-a-candidate")
     assert(t2.readWhereNull(spark, v, "v", isNull = true)
       .select("id").as[Long].collect().sorted === Array(0L, 1L, 3L))

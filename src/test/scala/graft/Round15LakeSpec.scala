@@ -2,19 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{Filter, In}
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{VersionOffset, VersionedMicroBatchStream, VersionedScan, VersionedScanBuilder, VersionedTable}
+import graft.sources.{VersionOffset, VersionedMicroBatchStream, VersionedTable}
 
-/** Round-15 lake-layer invariants: dynamic file pruning
-  * (SupportsRuntimeFiltering), stats-served admission control,
-  * maxBytesPerTrigger, the carried change-feed fold, the failOnDataLoss
-  * escape hatch, recursive staging reclaim, and the explicit-schema
-  * changeFeed contract. */
+/** Round-15 lake-layer invariants: pushed IN filters over deletion
+  * vectors, log-served planner byte stats, the carried change-feed
+  * fold, and the explicit-schema changeFeed contract. */
 class Round15LakeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -38,96 +33,19 @@ class Round15LakeSpec extends AnyFunSuite {
     .format("graft.sources.VersionedStreamProvider")
     .option("path", root).load()
 
-  test("runtime filter() re-prunes the candidate files against the zone maps") {
-    val (root, _) = threeFileTable("rtf-unit")
-    def scan(): VersionedScan = {
-      val b = new VersionedScanBuilder(root, 0L, None, None, None, None,
-        false, true, dsv2(root).schema)
-      b.build().asInstanceOf[VersionedScan]
-    }
-    // static plan: all three files
-    assert(scan().planInputPartitions().length === 3)
-    // a runtime IN-set landing in one file's interval prunes to ONE
-    val s1 = scan()
-    s1.filter(Array[Filter](In("id", Array[Any](120L))))
-    assert(s1.planInputPartitions().length === 1,
-      "the runtime IN-set must prune through the recorded intervals")
-    // keys across two files keep exactly those two
-    val s2 = scan()
-    s2.filter(Array[Filter](In("id", Array[Any](7L, 120L))))
-    assert(s2.planInputPartitions().length === 2)
-    // a key matching nothing prunes everything (sound: residual serves 0 rows)
-    val s3 = scan()
-    s3.filter(Array[Filter](In("id", Array[Any](9999L))))
-    assert(s3.planInputPartitions().length === 0)
-    // runtime filters COMPOSE with static pushed filters: static keeps
-    // files 2+3, runtime keeps 1+3 → intersection is file 3 alone
-    val b4 = new VersionedScanBuilder(root, 0L, None, None, None, None,
-      false, true, dsv2(root).schema)
-    b4.pushFilters(Array[Filter](
-      org.apache.spark.sql.sources.GreaterThanOrEqual("id", 50L)))
-    val s4 = b4.build().asInstanceOf[VersionedScan]
-    s4.filter(Array[Filter](In("id", Array[Any](7L, 120L))))
-    assert(s4.planInputPartitions().length === 1,
-      "runtime pruning must refine the statically-pruned snapshot")
-  }
-
-  test("dynamic file pruning fires end-to-end: a selective dim join reads fewer files") {
-    // a fact LARGE enough that the planner broadcasts the dim (the
-    // 100-TB shape): three single-file commits of 200k rows each, zone
-    // maps on id
-    val root = freshDir("rtf-e2e")
-    val t = new VersionedTable(root)
-    Seq((0L, 200000L), (200000L, 400000L), (400000L, 600000L)).foreach {
-      case (lo, hi) =>
-        t.append(spark, spark.range(lo, hi).toDF("id")
-          .withColumn("v", concat(lit("r"), col("id").cast("string")))
-          .repartition(1), statsCol = Some("id"))
-    }
-    val fact = dsv2(root)
-    // static baseline: an unfiltered DATA scan plans all 3 file
-    // partitions (a bare count() no longer proves this — it is now
-    // answered from the log by the aggregate pushdown)
-    assert(fact.rdd.getNumPartitions === 3)
-    assert(VersionedScan.lastPlanned.get(root) === 3)
-    // a selective dim joined to the fact, filtered on a NON-join-key
-    // column so the IN-set is unknowable statically (constraint
-    // propagation can only infer the untranslatable row filter): Spark
-    // executes the broadcast side first, hands the collected join keys
-    // to the scan as a runtime IN-set, and the scan re-prunes to the
-    // ONE file whose recorded interval can hold them
-    val dim = spark.range(0, 2000).toDF("k")
-      .select((col("k") + 400000L).as("id"),
-        concat(lit("g"), pmod(col("k"), lit(1000L)).cast("string")).as("grp"))
-    val joined = fact.join(dim.filter(col("grp") === "g7"), Seq("id"))
-    val rows = joined.select("id", "v").as[(Long, String)].collect().sorted
-    assert(rows === Array((400007L, "r400007"), (401007L, "r401007")))
-    assert(VersionedScan.lastPlanned.get(root) === 1,
-      "the dim-filtered join must execute ONE input partition, not the " +
-        s"static plan's 3 (got ${VersionedScan.lastPlanned.get(root)})")
-  }
-
-  test("runtime filters prune on STRING join keys and respect MoR deletion vectors") {
-    // string-keyed dims are as common as integer ones: the runtime
-    // IN-set arrives as string values and must prune through the
-    // recorded truncated byte bounds
-    val root = freshDir("rtf-str")
+  test("pushed STRING IN filters prune and respect MoR deletion vectors") {
+    // a string IN-set must prune through the recorded truncated byte
+    // bounds
+    val root = freshDir("in-str")
     val t = new VersionedTable(root)
     Seq("ar" -> "de", "en" -> "fr", "it" -> "pt").foreach { case (lo, hi) =>
       t.append(spark, Seq((1L, lo), (2L, hi)).toDF("id", "lang")
         .repartition(1), statsCol = Some("lang"))
     }
-    def scan(): VersionedScan = {
-      val b = new VersionedScanBuilder(root, 0L, None, None, None, None,
-        false, true, dsv2(root).schema)
-      b.build().asInstanceOf[VersionedScan]
-    }
-    val s1 = scan()
-    s1.filter(Array[Filter](In("lang", Array[Any]("en", "fr"))))
-    assert(s1.planInputPartitions().length === 1,
-      "a string runtime IN-set must prune through the byte bounds")
-    // a runtime-pruned read over a MoR-deleted file stays exact: the
-    // kept partition still carries its deletion vector
+    assert(dsv2(root).filter(col("lang").isin("en", "fr")).rdd.getNumPartitions === 1,
+      "a string IN-set must prune through the byte bounds")
+    // a pruned read over a MoR-deleted file stays exact: the kept
+    // partition still carries its deletion vector
     t.deleteRowsWhere(spark, "lang = 'fr'")
     val rows = dsv2(root).filter(col("lang").isin("en", "fr"))
       .select("id", "lang").as[(Long, String)].collect()
@@ -143,95 +61,17 @@ class Round15LakeSpec extends AnyFunSuite {
     assert(hit.select("id").as[Long].collect().sorted === Array(7L, 120L))
   }
 
-  test("ReadMaxRows admission is served from the log's rows stats — zero footer opens") {
-    val (root, t) = threeFileTable("adm-rows")
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    def latest(from: Long, l: ReadLimit): Long =
-      s.latestOffset(VersionOffset(from), l).asInstanceOf[VersionOffset].v
-    assert(latest(-1, ReadLimit.maxRows(75)) === 0)
-    assert(latest(-1, ReadLimit.maxRows(100)) === 1)
-    assert(latest(-1, ReadLimit.maxRows(150)) === 2)
-    assert(s.table.footerReads.get() === 0L,
-      "stats-carrying commits must admit with ZERO driver-side footer opens")
-
-    // stats-less adds (pre-recording logs — every library write now
-    // records rows) fall back to one footer open each — same admission
-    // answers, counted fallback. Simulate the old log by stripping the
-    // recorded fields in place (the LakeScaleSpec compat trick).
-    val root2 = freshDir("adm-rows2")
-    val t2 = new VersionedTable(root2)
-    (0 until 2).foreach(i => t2.append(spark,
-      spark.range(i * 100L, (i + 1) * 100L).toDF("id").repartition(1)))
-    import scala.jdk.CollectionConverters._
-    (0L to 1L).foreach { i =>
-      val p = Paths.get(root2, "_log", f"$i%012d.json")
-      val stripped = Files.readAllLines(p).asScala.map(_.replaceAll(
-        ",\"rows\":\\d+(,\"bytes\":\\d+)?(,\"nulls\":\"[^\"]*\")?", ""))
-      Files.write(p, stripped.mkString("\n").getBytes("UTF-8"))
-    }
-    val s2 = new VersionedMicroBatchStream(root2, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t2.read(spark).schema)
-    assert(s2.latestOffset(VersionOffset(-1L), ReadLimit.maxRows(150))
-      .asInstanceOf[VersionOffset].v === 0)
-    assert(s2.table.footerReads.get() > 0L,
-      "a stats-less add must take the footer fallback, and count it")
-  }
-
-  test("maxBytesPerTrigger: the third Delta-shaped admission knob") {
-    val (root, t) = threeFileTable("adm-bytes")
-    val sizes = (0L to 2L).map(v =>
-      t.filesAddedAt(v).map(p => Files.size(Paths.get(p))).sum)
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    def latest(from: Long, l: ReadLimit): Long =
-      s.latestOffset(VersionOffset(from), l).asInstanceOf[VersionOffset].v
-    // a budget of exactly v0 admits v0 alone; v0+v1 admits both
-    assert(latest(-1, ReadLimit.maxBytes(sizes(0))) === 0)
-    assert(latest(-1, ReadLimit.maxBytes(sizes(0) + sizes(1))) === 1)
-    assert(latest(-1, ReadLimit.maxBytes(sizes.sum)) === 2)
-    // the first outstanding commit is admitted whole even over-budget
-    assert(latest(-1, ReadLimit.maxBytes(1)) === 0)
-    assert(latest(0, ReadLimit.maxBytes(sizes(1))) === 1, "the cap slides")
-
-    // e2e: the option paces an AvailableNow drain into per-commit batches
-    val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = spark.readStream.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("maxBytesPerTrigger", "1").load()
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        batches.synchronized { batches += b.count() }; ()
-      }
-      .option("checkpointLocation", freshDir("adm-bytes-ck"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(batches.toList === List(50L, 50L, 50L),
-      "one commit per micro-batch under a 1-byte budget")
-  }
-
-  test("byte stats: admission and planner size are served from the log, not the file system") {
+  test("byte stats: planner size is served from the log, not the file system") {
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
     val (root, t) = threeFileTable("bytes-log")
-    // every add recorded its on-disk size
-    val recorded = t.filesWithByteStatsAt(t.version)
-    assert(recorded.forall(_._2.isDefined))
-    recorded.foreach { case (p, b) =>
-      assert(b.contains(Files.size(Paths.get(p))),
-        "recorded bytes must equal the staged file's size")
-    }
-    // INFLATE one file on disk: recorded numbers must keep serving —
-    // proof that neither admission nor statistics re-stats the files
-    val victim = Paths.get(recorded.head._1)
-    val origSize = Files.size(victim)
+    val files = t.filesAt(t.version).map(Paths.get(_))
+    val sizes = files.map(Files.size)
+    // INFLATE one file on disk: the recorded numbers must keep serving —
+    // proof that statistics do not re-stat the files
+    val victim = files.head
     Files.write(victim, new Array[Byte](4096),
       java.nio.file.StandardOpenOption.APPEND)
-    assert(Files.size(victim) === origSize + 4096)
-    val sizes = (0L to 2L).map(v => t.bytesAddedAt(v, failOnMissing = true))
-    assert(sizes(0) === origSize, "admission bytes come from the log")
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    assert(s.latestOffset(VersionOffset(-1L), ReadLimit.maxBytes(sizes(0)))
-      .asInstanceOf[VersionOffset].v === 0)
+    assert(Files.size(victim) === sizes.head + 4096)
     val stats = spark.read.format("graft.sources.VersionedStreamProvider")
       .option("path", root).load()
       .queryExecution.optimizedPlan.collect {
@@ -241,42 +81,12 @@ class Round15LakeSpec extends AnyFunSuite {
       "the reported scan size is the RECORDED sum, not a live stat sweep")
   }
 
-  test("DSv2-written tables carry the same rows/bytes/nulls stats as the library path") {
-    val root = freshDir("dsv2-stats")
-    Seq((1L, Some(10L)), (2L, None), (3L, Some(30L))).toDF("id", "v")
-      .repartition(1)
-      .write.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("statsCol", "v").mode("append").save()
-    val t = new VersionedTable(root)
-    // rows + the stats column's null count, harvested during the task write
-    assert(t.filesWithNullStatsAt(0L).flatMap(_._2) ===
-      Seq((3L, Map("v" -> 1L))))
-    assert(t.filesWithByteStatsAt(0L).forall { case (p, b) =>
-      b.contains(Files.size(Paths.get(p)))
-    })
-    // so ReadMaxRows admission on a DSv2-written table opens no footers
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    assert(s.latestOffset(VersionOffset(-1L), ReadLimit.maxRows(10))
-      .asInstanceOf[VersionOffset].v === 0)
-    assert(s.table.footerReads.get() === 0L)
-    // and the all-null blind spot closes for DSv2 writes too: an
-    // all-null stats column records no bounds but a full null count
-    Seq((4L, Option.empty[Long]), (5L, None)).toDF("id", "v")
-      .repartition(1)
-      .write.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("statsCol", "v").mode("append").save()
-    assert(t.prunedFiles(1L, "v", 0L, 100L).size === 1,
-      "the DSv2-written all-null file must not survive a value probe")
-  }
-
   test("the change-feed fold is carried across triggers: O(window) log reads each") {
     val root = freshDir("cdc-carry")
     val t = new VersionedTable(root)
     (0 until 7).foreach(i => t.append(spark,
       spark.range(i * 10L, (i + 1) * 10L).toDF("id").repartition(1)))
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = true, failOnDataLoss = true,
+    val s = new VersionedMicroBatchStream(root, changeFeed = true,
       spark.readStream.format("graft.sources.VersionedStreamProvider")
         .option("path", root).option("changeFeed", "true").load().schema)
     def drain(from: Long, to: Long): Int =
@@ -308,26 +118,19 @@ class Round15LakeSpec extends AnyFunSuite {
   }
 
   test("a PACED changeFeed drain serves exact CDC across triggers (carried-fold e2e)") {
-    // AvailableNow + maxFilesPerTrigger drives the REAL engine through
-    // multiple contiguous planInputPartitions windows — the call
-    // pattern the carried fold assumes — over a history mixing
-    // appends, a MoR delete (zero ADD actions, coalesces into the next
-    // admission window), and a CoW delete
+    // a running stream drains each group of commits as it lands, which
+    // drives the REAL engine through multiple contiguous
+    // planInputPartitions windows — the call pattern the carried fold
+    // assumes — over a history mixing appends, a MoR delete (zero ADD
+    // actions), and a CoW delete
     val root = freshDir("cdc-paced")
     val t = new VersionedTable(root)
     t.append(spark, spark.range(0, 20).toDF("id").repartition(1),
       statsCol = Some("id"))                 // v0: 20 inserts
-    t.append(spark, spark.range(20, 40).toDF("id").repartition(1),
-      statsCol = Some("id"))                 // v1: 20 inserts
-    t.deleteRowsWhere(spark, "id = 7")       // v2: 1 positional delete
-    t.append(spark, spark.range(40, 50).toDF("id").repartition(1),
-      statsCol = Some("id"))                 // v3: 10 inserts
-    t.deleteWhere(spark, "id", 45L, 49L)     // v4: CoW rewrite of v3's file
     val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val q = spark.readStream.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("changeFeed", "true")
-      .option("maxFilesPerTrigger", "1").load()
+      .option("path", root).option("changeFeed", "true").load()
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val rows = b.collect().map(r =>
@@ -336,9 +139,20 @@ class Round15LakeSpec extends AnyFunSuite {
         ()
       }
       .option("checkpointLocation", freshDir("cdc-paced-ck"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(batches.size >= 3, s"pacing must split the drain (got $batches)")
+      .start()
+    try {
+      q.processAllAvailable()
+      t.append(spark, spark.range(20, 40).toDF("id").repartition(1),
+        statsCol = Some("id"))               // v1: 20 inserts
+      t.deleteRowsWhere(spark, "id = 7")     // v2: 1 positional delete
+      q.processAllAvailable()
+      t.append(spark, spark.range(40, 50).toDF("id").repartition(1),
+        statsCol = Some("id"))               // v3: 10 inserts
+      q.processAllAvailable()
+      t.deleteWhere(spark, "id", 45L, 49L)   // v4: CoW rewrite of v3's file
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(batches.count(_ > 0) >= 3, s"the drain must span triggers (got $batches)")
     val all = acc.toArray
     // exactly-once CDC across every trigger boundary:
     assert(all.count(_._2 == "insert") === 55,
@@ -348,348 +162,6 @@ class Round15LakeSpec extends AnyFunSuite {
       "the MoR needle + the CoW-removed file's 10 visible rows")
     assert(all.filter(r => r._2 == "delete" && r._3 == 2L).map(_._1) ===
       Array(7L), "the dvset-only commit's window serves its grown position")
-  }
-
-  test("failOnDataLoss=false re-baselines past vacuumed windows; default stays loud") {
-    val root = freshDir("fdl")
-    val t = new VersionedTable(root)
-    t.append(spark, Seq((1L, "a")).toDF("id", "v"))   // v0
-    t.overwrite(spark, Seq((2L, "b")).toDF("id", "v")) // v1
-    t.append(spark, Seq((3L, "c")).toDF("id", "v"))   // v2
-    t.vacuum(keepFrom = 1L) // v0's file is gone
-    // unit contracts: loud by default, skipping under the option
-    assertThrows[IllegalArgumentException](t.filesAddedAt(0L))
-    assert(t.filesAddedAt(0L, failOnMissing = false) === Seq.empty)
-    assertThrows[IllegalArgumentException](t.changeWindowsBetween(-1L, 2L))
-
-    // e2e: a changeFeed drain from the batch start under the option
-    // serves every INTACT piece — v1's insert side and v2's insert —
-    // while the reclaimed pieces (v0's add, v1's remove side, both the
-    // vacuumed file) are skipped, never an error
-    val q = spark.readStream.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("changeFeed", "true")
-      .option("failOnDataLoss", "false").load()
-      .writeStream.format("memory").queryName("fdl1")
-      .option("checkpointLocation", freshDir("fdl-ck"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("fdl1").as[(Long, String, String, Long)].collect()
-    assert(rows.forall(_._4 >= 1L), "the vacuumed v0 window serves nothing")
-    assert(rows.filter(r => r._3 == "insert" && r._4 == 1L).map(_._1) ===
-      Array(2L), "the overwrite's intact ADD side still serves")
-    assert(rows.count(_._3 == "delete") === 0,
-      "the overwrite's remove side (the vacuumed file) is skipped")
-    assert(rows.filter(r => r._3 == "insert" && r._4 == 2L).map(_._1) ===
-      Array(3L))
-  }
-
-  test("vacuum reclaims NESTED abandoned staging trees (crashed-writer shape)") {
-    val root = freshDir("vac-nested")
-    val t = new VersionedTable(root)
-    t.append(spark, Seq((1L, "a")).toDF("id", "v"))
-    // a crashed df.write.parquet leaves _temporary/... INSIDE _tmp-*
-    val staging = Paths.get(root, "_tmp-crashed")
-    val nested = staging.resolve("_temporary").resolve("0")
-    Files.createDirectories(nested)
-    Files.write(nested.resolve("task-attempt.parquet"), Array[Byte](1, 2, 3))
-    val reclaimed = t.vacuum(keepFrom = 0L)
-    assert(reclaimed.contains("_tmp-crashed"),
-      "the nested staging tree must be reported reclaimed")
-    assert(!Files.exists(staging),
-      "a single-level sweep would throw DirectoryNotEmptyException here")
-    assert(t.read(spark).count() === 1, "live data untouched")
-  }
-
-  test("vacuum dryRun previews the victims without deleting anything") {
-    val root = freshDir("vac-dry")
-    val t = new VersionedTable(root)
-    t.append(spark, Seq((1L, "a")).toDF("id", "v"))    // v0
-    t.overwrite(spark, Seq((2L, "b")).toDF("id", "v")) // v1: v0's file dies
-    val staging = Paths.get(root, "_tmp-crashed")
-    Files.createDirectories(staging)
-    Files.write(staging.resolve("leak.parquet"), Array[Byte](1))
-    val preview = t.vacuum(keepFrom = 1L, dryRun = true)
-    assert(preview.size === 2 && preview.contains("_tmp-crashed"))
-    // nothing was touched: v0 still time-travels, the staging leak stays
-    assert(t.readAsOf(spark, 0L).count() === 1)
-    assert(Files.exists(staging))
-    // the real run deletes EXACTLY the previewed set
-    assert(t.vacuum(keepFrom = 1L).sorted === preview.sorted)
-    assert(!Files.exists(staging))
-    assertThrows[Exception](t.readAsOf(spark, 0L).count())
-  }
-
-  test("V2-native runtime predicates: conjunctions flatten, literals normalize, strings convert") {
-    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Expressions, Literal => V2Lit}
-    import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Pred}
-    import org.apache.spark.sql.types.{DataType, LongType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-    val (root, _) = threeFileTable("rtf-v2")
-    def scan(): VersionedScan = {
-      val b = new VersionedScanBuilder(root, 0L, None, None, None, None,
-        false, true, dsv2(root).schema)
-      b.build().asInstanceOf[VersionedScan]
-    }
-    val id = Expressions.column("id")
-    // the catalyst-internal literal shape Spark's runtime-filter
-    // builder ships (LiteralValue is private[sql]; the interface is the
-    // public contract the translator matches on)
-    def typedLit[T](v: T, dt: DataType): V2Expr = new V2Lit[T] {
-      override def value(): T = v
-      override def dataType(): DataType = dt
-    }
-    def lit(v: Long): V2Expr = typedLit(v, LongType)
-    // a CONJUNCTION flattens into independent probes (the default
-    // PredicateUtils.toV1 bridge yields one sources.And, which the
-    // probe gate rejects — the whole filter would be dropped):
-    // id >= 100 keeps file 3; IN(7, 120) keeps files 1+3 → file 3 alone
-    val s1 = scan()
-    s1.filter(Array(new V2Pred("AND", Array[V2Expr](
-      new V2Pred(">=", Array[V2Expr](id, lit(100L))),
-      new V2Pred("IN", Array[V2Expr](id, lit(7L), lit(120L)))))))
-    assert(s1.planInputPartitions().length === 1,
-      "an AND runtime filter must prune through BOTH conjuncts")
-    // a literal on the LEFT normalizes: 49 >= id ⇒ id <= 49 → file 1
-    val s2 = scan()
-    s2.filter(Array(new V2Pred(">=", Array[V2Expr](lit(49L), id))))
-    assert(s2.planInputPartitions().length === 1)
-    // null-safe equality prunes like its null-rejecting twin
-    val s3 = scan()
-    s3.filter(Array(new V2Pred("<=>", Array[V2Expr](id, lit(120L)))))
-    assert(s3.planInputPartitions().length === 1)
-    // a NULL in an IN list matches no row: the narrowed list still prunes
-    val s4 = scan()
-    s4.filter(Array(new V2Pred("IN", Array[V2Expr](id, lit(120L),
-      typedLit(null.asInstanceOf[Any], LongType)))))
-    assert(s4.planInputPartitions().length === 1)
-    // an untranslatable shape contributes NO probe — sound, never wrong
-    val s5 = scan()
-    s5.filter(Array(new V2Pred("OR", Array[V2Expr](
-      new V2Pred("=", Array[V2Expr](id, lit(7L))),
-      new V2Pred("=", Array[V2Expr](id, lit(120L)))))))
-    assert(s5.planInputPartitions().length === 3)
-    // string literals arrive as catalyst UTF8String and must convert
-    // to the external form the byte-bound compares expect
-    val rootS = freshDir("rtf-v2-str")
-    val tS = new VersionedTable(rootS)
-    Seq("ar" -> "de", "en" -> "fr", "it" -> "pt").foreach { case (lo, hi) =>
-      tS.append(spark, Seq((1L, lo), (2L, hi)).toDF("id", "lang")
-        .repartition(1), statsCol = Some("lang"))
-    }
-    val s6 = new VersionedScanBuilder(rootS, 0L, None, None, None, None,
-      false, true, dsv2(rootS).schema).build().asInstanceOf[VersionedScan]
-    s6.filter(Array(new V2Pred("=", Array[V2Expr](
-      Expressions.column("lang"),
-      typedLit(UTF8String.fromString("en"), StringType)))))
-    assert(s6.planInputPartitions().length === 1,
-      "a UTF8String equality literal must prune through the byte bounds")
-  }
-
-  test("changeFeed admission costs the pieces the feed serves, not just the adds") {
-    val root = freshDir("cdc-adm")
-    val t = new VersionedTable(root)
-    t.append(spark, spark.range(0, 20).toDF("id").repartition(1))  // v0
-    t.overwrite(spark, spark.range(0, 5).toDF("id").repartition(1)) // v1: remove(20 rows) + add(5)
-    t.deleteRowsWhere(spark, "id = 3")                              // v2: one dvset, grown 1
-    t.compact(spark)                                                // v3: maintenance — feed serves nothing
-    val feedSchema = spark.readStream
-      .format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("changeFeed", "true").load().schema
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = true, failOnDataLoss = true, feedSchema)
-    def latest(from: Long, l: ReadLimit): Long =
-      s.latestOffset(VersionOffset(from), l).asInstanceOf[VersionOffset].v
-    // files: v1 serves TWO pieces (the removed file's delete rows + the
-    // new file's inserts), v2 serves one dvset partition, v3 zero
-    assert(latest(-1, ReadLimit.maxFiles(1)) === 0)
-    assert(latest(-1, ReadLimit.maxFiles(2)) === 0,
-      "v1 is 2 pieces: it overflows a 2-file budget already holding v0")
-    assert(latest(-1, ReadLimit.maxFiles(3)) === 1)
-    assert(latest(0, ReadLimit.maxFiles(2)) === 1)
-    assert(latest(1, ReadLimit.maxFiles(1)) === 3,
-      "the dvset is ONE piece and the maintenance commit is free")
-    // rows: v1 = 20 deletes + 5 inserts, v2 = 1 grown position; the
-    // add-only costing would price v1 at 5 and v2 at 0
-    assert(latest(0, ReadLimit.maxRows(5)) === 1,
-      "the first outstanding commit admits whole even over budget")
-    assert(latest(0, ReadLimit.maxRows(25)) === 1, "then the 1-row dvset overflows")
-    assert(latest(0, ReadLimit.maxRows(26)) === 3)
-    // the plain feed keeps its add-only costs (v1 = 5 rows, v2 = 0)
-    val plain = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    assert(plain.latestOffset(VersionOffset(0), ReadLimit.maxRows(5))
-      .asInstanceOf[VersionOffset].v === 2)
-    // all of it METADATA-ONLY: the stats ride the remove/dvset lines
-    assert(s.table.footerReads.get() === 0L,
-      "changeFeed admission over stats-carrying commits opens no footers")
-    import scala.jdk.CollectionConverters._
-    val v1log = Files.readAllLines(
-      Paths.get(root, "_log", f"${1L}%012d.json")).asScala.mkString("\n")
-    assert(v1log.contains("\"op\":\"remove\"") && v1log.contains("\"rows\":20"),
-      "the remove line must carry the removed file's visible rows")
-    val v2log = Files.readAllLines(
-      Paths.get(root, "_log", f"${2L}%012d.json")).asScala.mkString("\n")
-    assert(v2log.contains("\"grown\":1") && v2log.contains("\"fbytes\":"),
-      "the dvset line must record its exact grown count and data-file size")
-  }
-
-  test("changeFeed admission falls back soundly on pre-recording logs") {
-    val root = freshDir("cdc-adm-compat")
-    val t = new VersionedTable(root)
-    t.append(spark, spark.range(0, 20).toDF("id").repartition(1))   // v0
-    t.overwrite(spark, spark.range(0, 5).toDF("id").repartition(1)) // v1
-    t.deleteRowsWhere(spark, "id = 3")                               // v2
-    // strip the r15 carried fields in place (the LakeScaleSpec compat trick)
-    import scala.jdk.CollectionConverters._
-    (1L to 2L).foreach { i =>
-      val p = Paths.get(root, "_log", f"$i%012d.json")
-      val stripped = Files.readAllLines(p).asScala.map(_
-        .replaceAll(",\"rows\":\\d+", "").replaceAll(",\"bytes\":\\d+", "")
-        .replaceAll(",\"grown\":\\d+", "").replaceAll(",\"fbytes\":\\d+", ""))
-      Files.write(p, stripped.mkString("\n").getBytes("UTF-8"))
-    }
-    // rows: the remove falls back to ONE counted footer open (full file
-    // count — the sound upper bound), the dvset to its cardinality
-    assert(t.cdcCostsAt(1L, failOnMissing = true)._2 === 25L)
-    assert(t.footerReads.get() > 0L, "the stripped remove must cost a footer")
-    assert(t.cdcCostsAt(2L, failOnMissing = true)._2 === 1L,
-      "a grown-less dvset costs its new cardinality")
-    // bytes fall back to Files.size; pieces never need stats
-    assert(t.cdcCostsAt(1L, failOnMissing = true)._1 === 2L)
-    assert(t.cdcCostsAt(1L, failOnMissing = true)._3 > 0L)
-  }
-
-  test("LIMIT pushdown plans only enough files to cover n") {
-    val (root, _) = threeFileTable("limit-push")
-    // 50 rows fit in file 1 alone; 51 need file 2; the retained Spark
-    // Limit trims the over-serve, so results stay exact either way
-    assert(dsv2(root).limit(50).collect().length === 50)
-    assert(VersionedScan.lastPlanned.get(root) === 1,
-      "a 50-row limit over 50-row files must plan ONE partition")
-    assert(dsv2(root).limit(51).collect().length === 51)
-    assert(VersionedScan.lastPlanned.get(root) === 2)
-    // a filtered limit never pushes (this source keeps every filter as
-    // a residual, and Spark only pushes limits past FULLY-pushed
-    // filters) — the scan serves the full candidate set and stays exact
-    val filtered = dsv2(root).filter(col("id") >= 49L).limit(3)
-    assert(filtered.collect().length === 3)
-    assert(VersionedScan.lastPlanned.get(root) === 3)
-    // a MoR delete shrinks the recorded visible rows: 50 post-delete
-    // rows now span two files, and the served rows subtract the vector
-    val (root2, t2) = threeFileTable("limit-push-dv")
-    t2.deleteRowsWhere(spark, "id = 7")
-    val got = dsv2(root2).limit(50).as[(Long, String)].collect()
-    assert(got.length === 50 && !got.map(_._1).contains(7L))
-    assert(VersionedScan.lastPlanned.get(root2) === 2,
-      "49 visible rows in file 1 cannot prove a 50-row limit")
-  }
-
-  test("TOP-N pushdown serves only the files that can hold an extreme row") {
-    val (root, _) = threeFileTable("topn-push")
-    // ascending: the 10 smallest ids live in file 1 alone
-    val asc = dsv2(root).orderBy(col("id")).limit(10)
-      .select("id").as[Long].collect()
-    assert(asc === (0L until 10L).toArray)
-    assert(VersionedScan.lastPlanned.get(root) === 1)
-    // descending: the tail file alone — the "newest 100 events" shape
-    val desc = dsv2(root).orderBy(col("id").desc).limit(10)
-      .select("id").as[Long].collect()
-    assert(desc === (149L to 140L by -1L).toArray)
-    assert(VersionedScan.lastPlanned.get(root) === 1)
-    // 60 rows outgrow file 1: coverage needs two files
-    val sixty = dsv2(root).orderBy(col("id")).limit(60)
-      .select("id").as[Long].collect()
-    assert(sixty === (0L until 60L).toArray)
-    assert(VersionedScan.lastPlanned.get(root) === 2)
-
-    // NULLS FIRST (the ASC default): the all-null file must serve —
-    // its rows ARE the top of the order. And since its recorded null
-    // count PROVES 2 surviving nulls ≥ n, the whole top-2 is provably
-    // null and the value file drops outright (the r16 null-prefix
-    // refinement: value slots = n − proven nulls).
-    val rootN = freshDir("topn-nulls")
-    val tN = new VersionedTable(rootN)
-    tN.append(spark, Seq.tabulate(5)(i => (Some(i.toLong), s"r$i"))
-      .toDF("id", "v").repartition(1), statsCol = Some("id"))
-    tN.append(spark, Seq((Option.empty[Long], "n1"), (None, "n2"))
-      .toDF("id", "v").repartition(1), statsCol = Some("id"))
-    val first2 = dsv2(rootN).orderBy(col("id")).limit(2)
-      .select("id").collect()
-    assert(first2.forall(_.isNullAt(0)), "ASC defaults to NULLS FIRST")
-    assert(VersionedScan.lastPlanned.get(rootN) === 1,
-      "top-2 provably all-null: the value file must not serve")
-    // limit 3 outgrows the proven null prefix by one value slot: the
-    // null file plus one coverage file serve, and the value that
-    // follows the nulls is the minimum
-    val first3 = dsv2(rootN).orderBy(col("id")).limit(3)
-      .select("id").collect()
-    assert(first3.count(_.isNullAt(0)) === 2 &&
-      first3.exists(r => !r.isNullAt(0) && r.getLong(0) === 0L))
-    assert(VersionedScan.lastPlanned.get(rootN) === 2,
-      "one unproven slot needs one coverage file")
-    // a deletion vector on the null file eats into the PROVEN null
-    // count (2 recorded − 1 deleted = 1 proven): limit 2 again needs a
-    // value slot, so the coverage file returns
-    tN.deleteRowsWhere(spark, "v = 'n1'")
-    val afterDv = dsv2(rootN).orderBy(col("id")).limit(2)
-      .select("id").collect()
-    assert(afterDv.count(_.isNullAt(0)) === 1 &&
-      afterDv.exists(r => !r.isNullAt(0) && r.getLong(0) === 0L))
-    assert(VersionedScan.lastPlanned.get(rootN) === 2,
-      "a DV'd null file proves one null fewer — coverage must widen")
-    // NULLS LAST: n non-null rows provably precede every null, so the
-    // all-null file is skipped outright
-    val last2 = dsv2(rootN).orderBy(col("id").asc_nulls_last).limit(2)
-      .select("id").as[Long].collect()
-    assert(last2 === Array(0L, 1L))
-    assert(VersionedScan.lastPlanned.get(rootN) === 1)
-  }
-
-  test("aggregate pushdown answers count/min/max from the log — zero data files opened") {
-    import scala.jdk.CollectionConverters._
-    def corrupt(root: String): Unit =
-      Files.list(Paths.get(root, "data")).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach(p => Files.write(p, Array[Byte](0, 0, 0)))
-    // count(*) stays exact under a deletion vector (rows − cardinality);
-    // CORRUPTING every data file proves no task opened one
-    val (root, t) = threeFileTable("agg-push")
-    t.deleteRowsWhere(spark, "id = 7")
-    corrupt(root)
-    assert(dsv2(root).count() === 149L)
-    // min/max REFUSE under a deletion vector (it could have removed the
-    // extreme row) — the fallback data scan then trips on the corrupt
-    // files, proving the refusal is load-bearing, not cosmetic
-    assertThrows[Exception](dsv2(root).agg(min("id"), max("id")).collect())
-    // DV-free: min/max/count all served from the log in one aggregation
-    val (root2, _) = threeFileTable("agg-push2")
-    corrupt(root2)
-    val r = dsv2(root2)
-      .agg(min("id").as("lo"), max("id").as("hi"), count(lit(1)).as("n"))
-      .head()
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((0L, 149L, 150L)))
-    // count(col) serves from the recorded null counts of the stats column
-    val root3 = freshDir("agg-push3")
-    val t3 = new VersionedTable(root3)
-    t3.append(spark, Seq((1L, Some(10L)), (2L, None), (3L, Some(30L)))
-      .toDF("id", "v").repartition(1), statsCol = Some("v"))
-    t3.append(spark, Seq((4L, Option.empty[Long])).toDF("id", "v")
-      .repartition(1), statsCol = Some("v"))
-    corrupt(root3)
-    assert(dsv2(root3).agg(count(col("v"))).head().getLong(0) === 2L)
-    // a GROUPED aggregate refuses the pushdown (falls back to the scan)
-    assertThrows[Exception](dsv2(root3).groupBy("id").count().collect())
-    // a vector on a NON-extreme file blocks nothing: the DV-free
-    // bounds dominate, so min/max still answer — and count(col) stays
-    // exact on the DV'd file because its recorded null count is zero
-    // (every vectored row was provably non-null)
-    val (root4, t4) = threeFileTable("agg-push4")
-    t4.deleteRowsWhere(spark, "id = 75") // the MIDDLE file
-    corrupt(root4)
-    val r4 = dsv2(root4)
-      .agg(min("id"), max("id"), count(col("id")), count(lit(1))).head()
-    assert((r4.getLong(0), r4.getLong(1), r4.getLong(2), r4.getLong(3)) ===
-      ((0L, 149L, 149L, 149L)))
   }
 
   test("explicit readStream.schema() cannot bypass the changeFeed contract") {

@@ -137,6 +137,28 @@ class SourceLintSpec extends AnyFunSuite {
         bad.mkString("\n"))
   }
 
+  test("every public lake-layer def has a caller in src/main outside its own file") {
+    // the lake layer exists for the registry's lake queries and the
+    // streaming source; a public member that only its own file (or a
+    // spec) calls is surface nothing reaches. A spec-only accessor is
+    // private[graft]. A caller is a member selection `.name` in code —
+    // comments are stripped, so a scaladoc link is not a caller.
+    val lake = Seq("VersionedTable.scala", "VersionedStream.scala")
+      .map(f => s"src/main/scala/graft/sources/$f")
+    val code = mainSources.map { case (p, text) =>
+      p.toString -> text.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    }
+    val bad = offenders("^  def \\w+".r)
+      .filter(o => lake.exists(f => o.startsWith(f + ":")))
+      .filterNot { o =>
+        val file = o.takeWhile(_ != ':')
+        val call = s"\\.${"def (\\w+)".r.findFirstMatchIn(o).get.group(1)}\\b".r
+        code.exists { case (p, text) => p != file && call.findFirstIn(text).isDefined }
+      }
+    assert(bad.isEmpty,
+      s"public lake-layer def with no caller outside its file:\n${bad.mkString("\n")}")
+  }
+
   // ---------------------------------------------------------------------
   // Oracle window-sum output-type lint.
   //

@@ -69,16 +69,16 @@ class VersionedStreamSpec extends AnyFunSuite {
       "resume must serve exactly the unseen commits, never re-serve v0")
   }
 
-  test("full lake loop: stream in via appendBatch, stream out via the log tail") {
+  test("full lake loop: stream in via foreachBatch appends, stream out via the log tail") {
     implicit val sc = spark.sqlContext
     val root = freshDir("vloop")
     val t = new VersionedTable(root)
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
 
-    // producer leg: micro-batches land as exactly-once commits
+    // producer leg: each micro-batch lands as one commit
     val ingest = input.toDF().writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        t.appendBatch(spark, b, id); ()
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        t.append(spark, b); ()
       }
       .option("checkpointLocation", freshDir("vloop-ick"))
       .outputMode("append").start()
@@ -131,77 +131,27 @@ class VersionedStreamSpec extends AnyFunSuite {
       .as[(String, Long)].collect() === Array(("r7", 7L)))
   }
 
-  test("DSv2 write: tasks stage their files, the driver commits ONCE") {
-    import org.apache.spark.sql.functions._
-    val root = freshDir("vwrite")
-    def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
-      df.write.format("graft.sources.VersionedStreamProvider")
-        .option("path", root).option("statsCol", "id").mode(mode).save()
-
-    write(spark.range(0L, 100L).toDF("id")
-      .withColumn("v", concat(lit("w"), col("id").cast("string")))
-      .repartition(4), "append")
-    val t = new VersionedTable(root)
-    assert(t.version === 0L, "4 task files, ONE commit")
-    assert(t.read(spark).count() === 100)
-    val stats = t.filesWithStatsAt(0L).flatMap(_._2)
-    assert(stats.nonEmpty && stats.forall(_._1 == "id"),
-      "zone maps harvested during the task writes")
-
-    write(spark.range(100L, 120L).toDF("id").withColumn("v", lit("x")), "append")
-    assert(t.read(spark).count() === 120)
-
-    write(spark.range(0L, 7L).toDF("id").withColumn("v", lit("z")), "overwrite")
-    assert(t.read(spark).count() === 7)
-    assert(t.history.map(_._2) === Seq("append", "append", "overwrite"))
-    assert(t.readAsOf(spark, 1L).count() === 120,
-      "time travel must survive the truncating write")
-
-    // full DSv2 round trip: written by the provider, read by the provider
-    assert(spark.read.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).load().count() === 7)
-  }
-
-  test("DSv2 streaming sink: epochs land exactly once through the batch ledger") {
-    implicit val sc = spark.sqlContext
-    val root = freshDir("vsink")
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-    val q = input.toDF().writeStream
-      .format("graft.sources.VersionedStreamProvider")
-      .option("path", root)
-      .option("checkpointLocation", freshDir("vsink-ck"))
-      .outputMode("append").start()
-    try {
-      input.addData(1, 2, 3)
-      q.processAllAvailable()
-      input.addData(4, 5)
-      q.processAllAvailable()
-    } finally q.stop()
-    val t = new VersionedTable(root)
-    assert(t.read(spark).as[Int].collect().sorted === Array(1, 2, 3, 4, 5))
-    assert(t.committedBatchIds === Set(0L, 1L),
-      "each epoch is one ledgered commit — replays would be dropped")
-  }
-
-  test("startingVersion skips history; vacuumed windows fail loudly") {
+  test("a window whose data file is gone fails loudly, never skips history") {
     val root = freshDir("vstream3")
     val t = new VersionedTable(root)
-    t.append(spark, Seq((1L, "a")).toDF("id", "v"))
-    t.append(spark, Seq((2L, "b")).toDF("id", "v"))
-
-    val q = spark.readStream
-      .format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("startingVersion", "1").load()
-      .writeStream.format("memory").queryName("vs3")
-      .option("checkpointLocation", freshDir("vs3ck"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.table("vs3").as[(Long, String)].collect() === Array((2L, "b")))
-
-    // end v0's time travel, then ask for its window
-    t.overwrite(spark, Seq((9L, "z")).toDF("id", "v"))
-    t.vacuum(keepFrom = 2L)
+    t.append(spark, Seq((1L, "a")).toDF("id", "v"))    // v0
+    t.overwrite(spark, Seq((2L, "b")).toDF("id", "v")) // v1: v0's file dies
+    // reclaim v0's file outside the table's API
+    t.filesAt(0L).foreach(f => Files.delete(java.nio.file.Paths.get(f)))
     assertThrows[IllegalArgumentException](t.filesAddedAt(0L))
+    assert(t.filesAddedAt(1L).nonEmpty, "intact windows still serve")
+    // both feeds fail the drain instead of silently skipping v0's window
+    Seq(false, true).foreach { cdc =>
+      val q = spark.readStream
+        .format("graft.sources.VersionedStreamProvider")
+        .option("path", root).option("changeFeed", cdc.toString).load()
+        .writeStream.format("memory").queryName(s"vs3$cdc")
+        .option("checkpointLocation", freshDir("vs3ck"))
+        .trigger(Trigger.AvailableNow()).start()
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination())
+      assert(e.getMessage.contains("missing"), e.getMessage)
+    }
   }
 
   test("a restore replays its re-referenced files to log-tailing consumers") {
@@ -215,52 +165,20 @@ class VersionedStreamSpec extends AnyFunSuite {
     val t = new VersionedTable(root)
     t.append(spark, Seq((1L, "good")).toDF("id", "v"))   // v0
     t.overwrite(spark, Seq((2L, "bad")).toDF("id", "v")) // v1
-    val rv = t.restore(spark, 0L)                        // v2: re-adds v0's file
+    val rv = t.restore(0L)                               // v2: re-adds v0's file
     assert(rv === 2L)
     assert(t.filesAddedAt(rv) === t.filesAt(0L),
       "the restore commit's adds are v0's files by reference")
 
-    // a consumer starting AT the restore version serves exactly the
-    // restored snapshot — one batch, the re-referenced rows
-    val q = spark.readStream
-      .format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("startingVersion", rv.toString).load()
+    // a consumer tailing the whole log serves v0, the bad v1, and then
+    // the restore window's re-referenced rows again
+    val q = stream(root)
       .writeStream.format("memory").queryName("vsr")
       .option("checkpointLocation", freshDir("vsrck"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    assert(spark.table("vsr").as[(Long, String)].collect() === Array((1L, "good")))
-  }
-
-  test("admission control: ReadLimit caps the commits claimed per batch") {
-    import graft.sources.{VersionOffset, VersionedMicroBatchStream}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val root = freshDir("vstream-rl")
-    val t = new VersionedTable(root)
-    // 3 commits × 1 file × 100 rows
-    (0 until 3).foreach(i => t.append(spark,
-      spark.range(i * 100L, (i + 1) * 100L).toDF("id").repartition(1)))
-
-    val s = new VersionedMicroBatchStream(root, 0L, None, None, None,
-      changeFeed = false, failOnDataLoss = true, t.read(spark).schema)
-    def latest(from: Long, l: ReadLimit): Long =
-      s.latestOffset(VersionOffset(from), l).asInstanceOf[VersionOffset].v
-
-    assert(latest(-1, ReadLimit.allAvailable()) === 2)
-    assert(latest(-1, ReadLimit.maxFiles(1)) === 0)
-    assert(latest(-1, ReadLimit.maxFiles(2)) === 1)
-    assert(latest(0, ReadLimit.maxFiles(2)) === 2, "the cap slides with start")
-    // the rows budget comes from footer metadata: 100 per commit
-    assert(latest(-1, ReadLimit.maxRows(150)) === 0)
-    assert(latest(-1, ReadLimit.maxRows(200)) === 1)
-    // a commit is the atomic publication unit: the first outstanding one
-    // is admitted whole even when it alone overflows the budget
-    assert(latest(-1, ReadLimit.maxRows(10)) === 0)
-    assert(latest(-1, ReadLimit.compositeLimit(
-      Array(ReadLimit.maxFiles(3), ReadLimit.maxRows(150)))) === 0,
-      "a composite limit admits the intersection")
-    // nothing outstanding → the offset holds still
-    assert(latest(2, ReadLimit.maxFiles(1)) === 2)
+    assert(spark.table("vsr").as[(Long, String)].collect().sorted ===
+      Array((1L, "good"), (1L, "good"), (2L, "bad")))
   }
 
   test("changeFeed streams MoR deletes as tagged rows; absent without the option") {
@@ -329,17 +247,20 @@ class VersionedStreamSpec extends AnyFunSuite {
   test("changeFeed serves file-CDC for rewrite commits; maintenance is invisible") {
     val root = freshDir("vstream-cdc2")
     val t = new VersionedTable(root)
-    t.append(spark, spark.range(0, 20).toDF("id").repartition(1),
-      statsCol = Some("id"))             // v0: 20 inserts
+    t.append(spark, spark.range(0, 20).toDF("id")
+      .withColumn("b", org.apache.spark.sql.functions.col("id") % 4)
+      .repartition(1), statsCol = Some("id")) // v0: 20 inserts
     t.deleteWhere(spark, "id", 5L, 9L)   // v1: CoW rewrite of the one file
-    t.compact(spark, targetFiles = 1)    // v2: maintenance — must serve NOTHING
+    // v2: maintenance — must serve NOTHING
+    t.compactZOrder(spark, "id", "b", targetFiles = 1)
     val q = spark.readStream.format("graft.sources.VersionedStreamProvider")
       .option("path", root).option("changeFeed", "true").load()
       .writeStream.format("memory").queryName("vcdc3")
       .option("checkpointLocation", freshDir("vcdc3ck"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val rows = spark.table("vcdc3").as[(Long, String, Long)].collect()
+    val rows = spark.table("vcdc3")
+      .select("id", "_change_type", "_commit_version").as[(Long, String, Long)].collect()
     // v1 is file-CDC: the removed file's 20 rows surface as deletes,
     // the rewritten survivors (15) as inserts — carried rows on both
     // sides, the changesBetween contract; v2 contributes zero rows
@@ -446,7 +367,7 @@ class VersionedStreamSpec extends AnyFunSuite {
     // would mis-describe a drain (it replays history) and per-trigger
     // stats would sweep the table's files every trigger
     val builder = new graft.sources.VersionedScanBuilder(
-      root, 0L, None, None, None, None, false, true, dsv2.schema)
+      root, None, false, dsv2.schema)
     val scan = builder.build()
     scan.toMicroBatchStream(freshDir("vstatsck"))
     val streamStats = scan
@@ -456,23 +377,30 @@ class VersionedStreamSpec extends AnyFunSuite {
       "a streaming scan must not report head-snapshot statistics")
   }
 
-  test("maxFilesPerTrigger paces an AvailableNow drain into per-commit batches") {
-    val root = freshDir("vstream-rl2")
+  test("the provider refuses options it does not read and has no write path") {
+    val root = freshDir("vstream-opts")
     val t = new VersionedTable(root)
-    (0 until 3).foreach(i => t.append(spark,
-      spark.range(i * 10L, (i + 1) * 10L).toDF("id").repartition(1)))
-
-    val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = spark.readStream.format("graft.sources.VersionedStreamProvider")
-      .option("path", root).option("maxFilesPerTrigger", "1").load()
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        batches.synchronized { batches += b.count() }; ()
-      }
-      .option("checkpointLocation", freshDir("vsrl2ck"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(batches.toList === List(10L, 10L, 10L),
-      "one commit (one file) per micro-batch under maxFilesPerTrigger=1")
+    t.append(spark, Seq((1L, "a")).toDF("id", "v"))
+    val provider = "graft.sources.VersionedStreamProvider"
+    // options of dropped features must fail by name, never be ignored
+    Seq("maxFilesPerTrigger" -> "1", "startingVersion" -> "1",
+        "failOnDataLoss" -> "false").foreach { case (k, x) =>
+      val batch = intercept[IllegalArgumentException](
+        spark.read.format(provider).option("path", root).option(k, x).load())
+      assert(batch.getMessage.contains(k), batch.getMessage)
+      val streaming = intercept[IllegalArgumentException](
+        spark.readStream.format(provider).option("path", root).option(k, x).load())
+      assert(streaming.getMessage.contains(k), streaming.getMessage)
+    }
+    // the options it does read still load
+    assert(spark.read.format(provider).option("path", root)
+      .option("versionAsOf", "0").load().count() === 1)
+    // a write through the provider falls back to Spark's V1 write
+    // path, which refuses a source that is not a writable relation
+    val w = intercept[org.apache.spark.SparkException](
+      Seq((2L, "b")).toDF("id", "v").write.format(provider)
+        .option("path", root).mode("append").save())
+    assert(w.getMessage.contains("does not allow create table as select"), w.getMessage)
+    assert(t.version === 0L && t.read(spark).count() === 1)
   }
 }

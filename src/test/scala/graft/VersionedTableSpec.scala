@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.VersionedTable
@@ -15,6 +17,11 @@ class VersionedTableSpec extends AnyFunSuite {
 
   private def table(): VersionedTable =
     new VersionedTable(Files.createTempDirectory("vtab").toString)
+
+  /** The add-action lines commit v wrote to the log. */
+  private def addLines(t: VersionedTable, v: Long): Seq[String] =
+    Files.readAllLines(Paths.get(t.root, "_log", f"$v%012d.json")).asScala.toSeq
+      .filter(_.contains("\"op\":\"add\""))
 
   test("append grows the snapshot; every old version stays readable") {
     val t = table()
@@ -67,28 +74,24 @@ class VersionedTableSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("id").cast("string")))
       .repartitionByRange(4, org.apache.spark.sql.functions.col("id"))
     t.append(spark, df, statsCol = Some("id"))
-    val all = t.filesWithStatsAt(0L)
+    val all = t.filesAt(0L)
     assert(all.size === 4)
-    assert(all.forall(_._2.nonEmpty), "every add must carry footer stats")
     // a 10%-selectivity range must not open every file
-    val candidates = t.prunedFiles(0L, "id", 0L, 99L)
-    assert(candidates.size < all.size,
-      s"no skipping happened: ${candidates.size} of ${all.size}")
+    val probe = t.readWhere(spark, 0L, "id", 0L, 99L)
+    assert(probe.inputFiles.length < all.size,
+      s"no skipping happened: ${probe.inputFiles.length} of ${all.size}")
     // and the pruned read is EXACT vs the full-scan filter
-    val skipped = t.readWhere(spark, 0L, "id", 0L, 99L)
-      .select("id").as[Long].collect().sorted
-    assert(skipped === (0L to 99L).toArray)
+    assert(probe.select("id").as[Long].collect().sorted === (0L to 99L).toArray)
     // a column with no recorded stats always reads everything (sound)
-    assert(t.prunedFiles(0L, "payload", 0L, 1L).size === all.size)
+    assert(t.readWhere(spark, 0L, "payload", 0L, 1L).inputFiles.length === all.size)
   }
 
   test("stats-free commits skip nothing but stay correct") {
     val t = table()
     t.append(spark, spark.range(0, 100).toDF("id"))
-    assert(t.filesWithStatsAt(0L).forall(_._2.isEmpty))
-    assert(t.prunedFiles(0L, "id", 5L, 6L).size === t.filesAt(0L).size)
-    assert(t.readWhere(spark, 0L, "id", 5L, 6L)
-      .select("id").as[Long].collect().sorted === Array(5L, 6L))
+    val probe = t.readWhere(spark, 0L, "id", 5L, 6L)
+    assert(probe.inputFiles.length === t.filesAt(0L).size)
+    assert(probe.select("id").as[Long].collect().sorted === Array(5L, 6L))
   }
 
   test("optimistic concurrency: one writer wins a version, the loser retries") {
@@ -163,7 +166,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // the two non-intersecting files are carried BY REFERENCE
     val after = t.filesAt(3L).toSet
     assert((before & after).size === 2, "untouched files must not be rewritten")
-    // the deleted rows stay time-travelable until vacuum
+    // the deleted rows stay time-travelable
     assert(t.readAsOf(spark, 2L).count() === 150)
     // a provably-miss predicate commits nothing
     assert(t.deleteWhere(spark, "id", 900L, 999L) === 3L)
@@ -202,100 +205,6 @@ class VersionedTableSpec extends AnyFunSuite {
       .collect().sortBy(_._1) === Array((1, Some(9.9)), (2, Some(7.5))))
   }
 
-  test("streaming ingest: batchId-keyed appends are exactly-once under re-delivery") {
-    implicit val sc = spark.sqlContext
-    val t = table()
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-    val cp = Files.createTempDirectory("vtab-cp").toString
-    val q = input.toDF().writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        t.appendBatch(spark, b, id); ()
-      }
-      .option("checkpointLocation", cp)
-      .outputMode("append").start()
-    try {
-      input.addData(1, 2, 3)
-      q.processAllAvailable()
-      input.addData(4, 5)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(t.read(spark).count() === 5)
-    assert(t.committedBatchIds === Set(0L, 1L))
-    assert(t.history.forall(_._2 === "append"))
-
-    // at-least-once re-delivery of batch 0 (post-crash replay): skipped
-    import spark.implicits._
-    assert(t.appendBatch(spark, Seq(1, 2, 3).toDF("value"), 0L) === None)
-    assert(t.read(spark).count() === 5, "replayed batch must not duplicate")
-    // a genuinely new batch still lands
-    assert(t.appendBatch(spark, Seq(6).toDF("value"), 2L).nonEmpty)
-    assert(t.read(spark).count() === 6)
-  }
-
-  test("compact is a physical rewrite, logical no-op; vacuum ends time travel explicitly") {
-    val t = table()
-    // simulate a streaming-ingested small-files table: 3 appends,
-    // each range-partitioned into 2 files
-    (0 until 3).foreach { i =>
-      t.append(spark, spark.range(i * 100, (i + 1) * 100).toDF("id")
-        .repartition(2))
-    }
-    val before = t.read(spark).select("id").as[Long].collect().sorted
-    assert(t.filesAt(2L).size === 6)
-
-    val cv = t.compact(spark, targetFiles = 1)
-    assert(cv === 3L)
-    assert(t.filesAt(cv).size === 1, "compaction must coalesce the file set")
-    assert(t.read(spark).select("id").as[Long].collect().sorted === before,
-      "compaction must not change the snapshot")
-    // time travel still resolves the ORIGINAL files
-    assert(t.readAsOf(spark, 1L).count() === 200)
-    assert(t.history.last._2 === "compact")
-
-    // vacuum to the compacted horizon: the 6 originals go away...
-    val deleted = t.vacuum(keepFrom = cv)
-    assert(deleted.size === 6)
-    // ...the head still reads, and pre-horizon time travel now fails
-    assert(t.read(spark).count() === 300)
-    intercept[Exception] { t.readAsOf(spark, 1L).count() }
-  }
-
-  test("compact lost race rebases: a concurrent delete's rows stay deleted") {
-    val root = Files.createTempDirectory("vtab").toString
-    val plain = new VersionedTable(root)
-    // two id-clustered files with footer stats, so deleteWhere can prune
-    plain.append(spark, spark.range(0, 100).toDF("id").repartition(1),
-      statsCol = Some("id"))                                           // v0
-    plain.append(spark, spark.range(100, 200).toDF("id").repartition(1),
-      statsCol = Some("id"))                                           // v1
-
-    // a compacting writer whose FIRST commit attempt loses the race to a
-    // concurrent deleteWhere (injected between stage and rename)
-    var injected = false
-    val racy = new VersionedTable(root) {
-      override private[graft] def commit(v: Long, actions: Seq[String]): Boolean = {
-        if (!injected && actions.exists(_.contains("\"operation\":\"compact\""))) {
-          injected = true
-          plain.deleteWhere(spark, "id", 50L, 149L) // wins version v
-        }
-        super.commit(v, actions)
-      }
-    }
-    val cv = racy.compact(spark, targetFiles = 1)
-
-    // the retry must have recomputed against the post-delete head: the
-    // deleted rows stay deleted and the survivors appear exactly once
-    assert(cv === 3L)
-    assert(plain.history.map(_._2) ===
-      Seq("append", "append", "delete", "compact"))
-    val ids = plain.read(spark).select("id").as[Long].collect().sorted
-    assert(ids === ((0L to 49L) ++ (150L to 199L)).toArray,
-      "a rebased compact must not resurrect deleted rows or duplicate survivors")
-    assert(plain.filesAt(cv).size === 1)
-    // pre-race versions still time-travel to their own state
-    assert(plain.readAsOf(spark, 1L).count() === 200)
-  }
-
   test("footer stats on an unsupported column type fail with a diagnosable error") {
     val t = table()
     val df = Seq((1L, 0.5), (2L, 0.7)).toDF("id", "score")
@@ -304,64 +213,6 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(e.getMessage.contains("integer- or string-typed"),
       s"want the writer-path message, got: ${e.getMessage}")
     assert(t.version === -1L, "the failed append must not commit")
-  }
-
-  test("CHECK constraints gate every writer; lifecycle rides the log") {
-    val t = table()
-    t.append(spark, Seq((1, 10.0), (2, 20.0)).toDF("id", "score"))
-
-    // registration validates the EXISTING snapshot first
-    val e0 = intercept[IllegalArgumentException](
-      t.addConstraint(spark, "score_high", "score >= 15"))
-    assert(e0.getMessage.contains("score_high"))
-    val cv = t.addConstraint(spark, "score_pos", "score > 0 AND score < 100")
-    assert(t.constraintsAt(cv) === Map("score_pos" -> "score > 0 AND score < 100"))
-    assert(t.history.last._2 === "add_constraint")
-
-    // a violating append fails BEFORE committing, names the constraint,
-    // and leaves the table untouched
-    val e1 = intercept[IllegalArgumentException](
-      t.append(spark, Seq((3, -5.0)).toDF("id", "score")))
-    assert(e1.getMessage.contains("score_pos") && e1.getMessage.contains("1 row(s)"))
-    assert(t.version === cv && t.read(spark).count() === 2)
-    // NULL is not provably true: it is a violation, not a pass
-    val e2 = intercept[IllegalArgumentException](t.append(spark,
-      Seq((4, Some(5.0)), (5, None)).toDF("id", "score")))
-    assert(e2.getMessage.contains("score_pos"))
-    // merge updates pass the same gate
-    assertThrows[IllegalArgumentException](
-      t.merge(spark, Seq((1, 500.0)).toDF("id", "score"), "id"))
-    // clean writes land
-    t.append(spark, Seq((3, 30.0)).toDF("id", "score"))
-    t.merge(spark, Seq((1, 11.0)).toDF("id", "score"), "id")
-    assert(t.read(spark).count() === 3)
-
-    // drop ends enforcement; both commits stay time-travelable
-    t.dropConstraint("score_pos")
-    t.append(spark, Seq((9, -1.0)).toDF("id", "score"))
-    assert(t.constraintsAt(t.version) === Map.empty)
-    assert(t.constraintsAt(cv).contains("score_pos"),
-      "the constraint is still visible AS OF its own epoch")
-  }
-
-  test("CHECK constraints gate the DSv2 write path too") {
-    val t = table()
-    t.append(spark, Seq((1L, 10.0)).toDF("id", "score"))
-    t.addConstraint(spark, "score_pos", "score > 0")
-    val bad = Seq((2L, -3.0)).toDF("id", "score")
-    val e = intercept[Exception] {
-      bad.write.format("graft.sources.VersionedStreamProvider")
-        .option("path", t.root).mode("append").save()
-    }
-    def rootCause(x: Throwable): Throwable =
-      if (x.getCause == null || x.getCause == x) x else rootCause(x.getCause)
-    assert((e.getMessage + rootCause(e).getMessage).contains("score_pos"))
-    assert(t.read(spark).count() === 1, "the aborted write must not land")
-    // staged file was dropped by the abort
-    Seq((3L, 7.0)).toDF("id", "score")
-      .write.format("graft.sources.VersionedStreamProvider")
-      .option("path", t.root).mode("append").save()
-    assert(t.read(spark).count() === 2)
   }
 
   test("compactZOrder: logical no-op whose multi-column zone maps prune BOTH dims") {
@@ -380,17 +231,14 @@ class VersionedTableSpec extends AnyFunSuite {
       "z-order compaction must not change the snapshot")
     val nf = t.filesAt(v).size
     assert(nf >= 2)
-    // every live file carries BOTH zone maps
-    assert(t.filesWithMultiStatsAt(v)
-      .forall(_._2.map(_._1).toSet === Set("a", "b")))
     // pruning now bites on EITHER dimension...
-    assert(t.prunedFiles(v, "a", 0, 9).size < nf,
-      s"a-range probe must skip some of the $nf files")
-    assert(t.prunedFiles(v, "b", 0, 9).size < nf,
-      s"b-range probe must skip some of the $nf files")
+    val onA = t.readWhere(spark, v, "a", 0, 9)
+    val onB = t.readWhere(spark, v, "b", 0, 9)
+    assert(onA.inputFiles.length < nf, s"a-range probe must skip some of the $nf files")
+    assert(onB.inputFiles.length < nf, s"b-range probe must skip some of the $nf files")
     // ...and pruned reads stay exact
-    assert(t.readWhere(spark, v, "a", 0, 9).count() === 1000)
-    assert(t.readWhere(spark, v, "b", 0, 9).count() === 1000)
+    assert(onA.count() === 1000)
+    assert(onB.count() === 1000)
     // the DSv2 batch face prunes through the same multi-column maps
     val dsv2 = spark.read.format("graft.sources.VersionedStreamProvider")
       .option("path", t.root).option("versionAsOf", v.toString).load()
@@ -406,9 +254,9 @@ class VersionedTableSpec extends AnyFunSuite {
     t.append(spark, mk(100, 200), statsCol = Some("id"))   // v1: the good state
     t.overwrite(spark, mk(900, 903), statsCol = Some("id")) // v2: the bad freeze
     val goodFiles = t.filesAt(1L).sorted
-    val goodStats = t.filesWithMultiStatsAt(1L).toMap
+    val goodProbe = t.readWhere(spark, 1L, "id", 0L, 50L).inputFiles.toSet
 
-    val rv = t.restore(spark, 1L)
+    val rv = t.restore(1L)
     assert(rv === 3L)
     assert(t.history.map(_._2) === Seq("append", "append", "overwrite", "restore"))
     // exact v1 snapshot, served by the ORIGINAL files — no rewrite
@@ -416,13 +264,15 @@ class VersionedTableSpec extends AnyFunSuite {
       (0L until 200L).toArray)
     assert(t.filesAt(rv).sorted === goodFiles,
       "restore must re-reference v1's files, not rewrite them")
-    // the replayed add actions carry the original zone maps
-    assert(t.filesWithMultiStatsAt(rv).toMap === goodStats)
-    assert(t.prunedFiles(rv, "id", 0L, 50L).size < goodFiles.size)
-    // the undone window stays time-travelable until vacuum
+    // the replayed add actions carry the original zone maps: a probe
+    // opens exactly the files it opened at v1, a strict subset
+    val restoredProbe = t.readWhere(spark, rv, "id", 0L, 50L).inputFiles.toSet
+    assert(restoredProbe === goodProbe)
+    assert(restoredProbe.size < goodFiles.size)
+    // the undone window stays time-travelable
     assert(t.readAsOf(spark, 2L).count() === 3)
     // restoring TO the head is a metadata no-op commit
-    assert(t.restore(spark, rv) === 4L)
+    assert(t.restore(rv) === 4L)
     assert(t.filesAt(4L).sorted === goodFiles)
   }
 
@@ -453,8 +303,9 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(plain.read(spark).select("id").as[Long].collect().sorted ===
       ((0L to 99L) ++ (200L to 999L)).toArray,
       "a rebased z-order rewrite must not resurrect deleted rows")
-    assert(plain.filesWithMultiStatsAt(cv)
-      .forall(_._2.map(_._1).toSet === Set("a", "b")))
+    // every re-staged file records zone maps on BOTH clustering columns
+    assert(addLines(plain, cv).forall(l =>
+      l.contains("\"multi\":\"a,") && l.contains("|b,")))
   }
 
   test("restore lost race rebases: a concurrent append is rolled back too") {
@@ -477,7 +328,7 @@ class VersionedTableSpec extends AnyFunSuite {
         super.commit(v, actions)
       }
     }
-    val rv = racy.restore(spark, 0L)
+    val rv = racy.restore(0L)
     assert(rv === 3L)
     assert(plain.history.map(_._2) ===
       Seq("append", "overwrite", "append", "restore"))
@@ -485,7 +336,7 @@ class VersionedTableSpec extends AnyFunSuite {
       (0L until 50L).toArray,
       "the restored head must be exactly v0 — racing append rolled back")
     assert(plain.filesAt(rv).sorted === plain.filesAt(0L).sorted)
-    // the raced append stays time-travelable until vacuum
+    // the raced append stays time-travelable
     assert(plain.readAsOf(spark, 2L).count() === 13)
   }
 
@@ -496,10 +347,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.readAsOf(spark, dv).count() === 0,
       "a delete-all snapshot must read as an empty frame under its schema")
     t.append(spark, spark.range(500, 510).toDF("id"))                      // v2
-    // a contract v0 violates but an EMPTY snapshot trivially satisfies —
-    // restore must skip the re-validation scan instead of choking on it
-    t.addConstraint(spark, "big", "id >= 500")                             // v3
-    val rv = t.restore(spark, dv)
+    val rv = t.restore(dv)
     assert(t.read(spark).count() === 0)
     assert(t.read(spark).schema.fieldNames === Array("id"))
     assert(t.history.map(_._2).last === "restore")
@@ -511,9 +359,9 @@ class VersionedTableSpec extends AnyFunSuite {
       .option("path", t.root).option("versionAsOf", dv.toString).load()
     assert(dsv2.schema.fieldNames === Array("id") && dsv2.count() === 0)
     // and a restore FORWARD out of the empty state works too
-    t.restore(spark, 2L)
+    t.restore(2L)
     assert(t.read(spark).count() === 10)
-    assert(rv === 4L)
+    assert(rv === 3L)
   }
 
   test("compactZOrder buckets huge-range keys without BIGINT overflow") {
@@ -526,27 +374,15 @@ class VersionedTableSpec extends AnyFunSuite {
     val df = huge.toDF("a").withColumn("b", org.apache.spark.sql.functions.col("a"))
     t.append(spark, df, statsCol = Some("a"))
     val v = t.compactZOrder(spark, "a", "b", targetFiles = 4)
-    val maps = t.filesWithMultiStatsAt(v)
-      .map(_._2.toMap.apply("a")).sortBy(_._1)
-    assert(maps.nonEmpty)
-    maps.sliding(2).foreach {
-      case Seq((_, hi1), (lo2, _)) =>
-        assert(hi1 < lo2,
-          s"zone maps overlap ($hi1 >= $lo2): bucket expression lost monotonicity (overflow)")
-      case _ =>
+    assert(t.filesAt(v).size > 1)
+    // disjoint zone maps on `a` ⇔ every point probe opens exactly one
+    // file: overlapping intervals would put some value in two of them
+    huge.foreach { x =>
+      val opened = t.readWhere(spark, v, "a", x, x).inputFiles.length
+      assert(opened === 1,
+        s"value $x falls in $opened files' zone maps: bucket expression lost monotonicity (overflow)")
     }
     assert(t.read(spark).select("a").as[Long].collect().sorted === huge.toArray)
-  }
-
-  test("restore re-validates constraints added since the target version") {
-    val t = table()
-    t.append(spark, Seq((1L, -5L), (2L, 3L)).toDF("id", "score")) // v0: has a negative
-    t.overwrite(spark, Seq((3L, 7L)).toDF("id", "score"))         // v1: clean
-    t.addConstraint(spark, "nonneg", "score >= 0")                // v2: contract
-    val e = intercept[IllegalArgumentException](t.restore(spark, 0L))
-    assert(e.getMessage.contains("nonneg"),
-      s"restore must refuse to resurrect rows the current contract forbids: ${e.getMessage}")
-    assert(t.version === 2L, "the refused restore must not commit")
   }
 
   test("writer storm: concurrent appends all land exactly once") {

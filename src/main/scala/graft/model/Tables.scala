@@ -50,12 +50,14 @@ object Tables {
     * file declares — the engine-wide contract every downstream `ts div
     * …` / RANGE-frame expression is written against. Two generations of
     * driver testdata exist: TIMESTAMP(NANOS), which Spark's schema
-    * converter only accepts as a raw long under the legacy conf (set
-    * here — runtime SQL conf, safe per-session), and TIMESTAMP(MICROS,
-    * NTZ), which resolves as TIMESTAMP_NTZ and is converted to
+    * converter only accepts as a raw long under the legacy conf, and
+    * TIMESTAMP(MICROS, NTZ), which resolves as TIMESTAMP_NTZ and is converted to
     * epoch-nanos (`unix_micros` × 1000; the NTZ→LTZ cast reads the wall
     * clock in the session zone, UTC at every entry point — matching the
-    * oracle, whose `epoch_ns` treats the naive value as UTC).
+    * oracle, whose `epoch_ns` treats the naive value as UTC). The legacy
+    * conf is the one setting the engine writes on a caller's session: the
+    * caller's own plans over this lazy scan need it, which a private
+    * session cannot provide. The write is idempotent.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -23,9 +23,10 @@ object BehaviorOps {
   /** Session-cached canonical event-sequence frame: the full event
     * projection (event_id, user_id, event_type, ts_ns, ts_us, value),
     * hash-partitioned on user_id and sorted (user_id, ts_us, event_id)
-    * within partitions, materialized once per session. The checkpoint
-    * keeps the partitioning AND the sort order visible (see
-    * [[SharedFrames.partitionedFrame]]), so the ~20 queries that run
+    * within partitions, materialized once per session on a private
+    * session with AQE off and handed back as a plan bound to the caller.
+    * The checkpoint keeps the partitioning AND the sort order visible
+    * (see [[SharedFrames.partitionedFrame]]), so the ~20 queries that run
     * user-keyed windows or per-user aggregates over the event log do so
     * with NO exchange — and those ordering by (ts_us, event_id) skip
     * the sort too. This is the 100-TB shape: one clustered, time-sorted
@@ -33,8 +34,8 @@ object BehaviorOps {
     * co-partitioned instead of re-shuffling the raw log.
     */
   private[graft] def eventSeq(spark: SparkSession, dir: String): DataFrame =
-    SharedFrames.partitionedFrame(spark, dir, "eventSeq") {
-      Tables.fanOut(Tables.events(spark, dir))
+    SharedFrames.partitionedFrame(spark, dir, "eventSeq") { s =>
+      Tables.fanOut(Tables.events(s, dir))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts").as("ts_ns"), expr("ts div 1000").as("ts_us"), col("value"))
         .repartition(col("user_id"))

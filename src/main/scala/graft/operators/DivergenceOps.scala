@@ -34,8 +34,10 @@ object DivergenceOps {
     * joins, no cartesian product in the plan. */
   private final case class Corpus(grid: DataFrame, t: Double, v: Double)
 
-  private def corpus(spark: SparkSession, dir: String): Corpus =
-    SharedFrames.value(spark, dir, "corpus")(buildCorpus(spark, dir))
+  private def corpus(spark: SparkSession, dir: String): Corpus = {
+    val c = SharedFrames.value(spark, dir, "corpus")(buildCorpus(spark, dir))
+    c.copy(grid = SharedFrames.handBack(spark, c.grid)) // bound to the caller
+  }
 
   private def buildCorpus(spark: SparkSession, dir: String): Corpus = {
     // the one corpus-scale pass: the session's cached token stream +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{SharedFrames, Tables}
 
 /** Relational capability set over the TPC-H-ish star schema (SURVEY.md
   * §2.3/§2.5: the reference has zero joins and zero window functions; these
@@ -253,8 +253,7 @@ object RelationalOps {
     * was retired in round 7).
     */
   def correlatedOutliers(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_orders")
-    spark.sql(
+    SharedFrames.sql(spark, "graft_orders" -> Tables.orders(spark, dir))(
       """WITH o AS (
            SELECT o_orderkey, o_custkey,
              CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -410,10 +409,9 @@ object RelationalOps {
     * asserting the API, not inventing a new execution path.
     */
   def lateralTopNations(spark: SparkSession, dir: String): DataFrame = {
-    Tables.region(spark, dir).createOrReplaceTempView("graft_region")
-    Tables.nation(spark, dir).createOrReplaceTempView("graft_nation")
-    Tables.customer(spark, dir).createOrReplaceTempView("graft_customer")
-    spark.sql(
+    SharedFrames.sql(spark, "graft_region" -> Tables.region(spark, dir),
+        "graft_nation" -> Tables.nation(spark, dir),
+        "graft_customer" -> Tables.customer(spark, dir))(
       """SELECT r.r_name AS region, t.n_name AS nation, t.n_customers
          FROM graft_region r,
          LATERAL (
@@ -466,17 +464,14 @@ object RelationalOps {
     // project to the 3 consumed columns BEFORE the fan-out exchange —
     // the full 16-column lineitem was round-robin-shuffled just to be
     // dropped by the aggregate's pruning (guide §2: shuffle fewer bytes)
-    graft.model.Tables.fanOut(graft.model.Tables.lineitem(spark, dir)
-        .select(col("l_partkey"), col("l_extendedprice"), col("l_discount")))
-      .createOrReplaceTempView("graft_li_ssq")
-    spark.sql(
+    val pv = SharedFrames.sql(spark, "graft_li_ssq" -> Tables.fanOut(
+        Tables.lineitem(spark, dir)
+          .select(col("l_partkey"), col("l_extendedprice"), col("l_discount"))))(
       """SELECT l_partkey,
            CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
              AS BIGINT)) AS BIGINT) AS rev_cents
          FROM graft_li_ssq GROUP BY l_partkey""")
-      .localCheckpoint()
-      .createOrReplaceTempView("graft_pv_ssq")
-    spark.sql(
+    SharedFrames.sql(spark, "graft_pv_ssq" -> pv.localCheckpoint())(
       """SELECT l_partkey, rev_cents
          FROM graft_pv_ssq
          WHERE rev_cents * (SELECT count(*) FROM graft_pv_ssq) * 10 >
@@ -494,11 +489,8 @@ object RelationalOps {
     * scale shape as `q_semi_anti`, driven from SQL.
     */
   def notExistsSegments(spark: SparkSession, dir: String): DataFrame = {
-    graft.model.Tables.customer(spark, dir)
-      .createOrReplaceTempView("graft_cust_ne")
-    graft.model.Tables.orders(spark, dir)
-      .createOrReplaceTempView("graft_ord_ne")
-    spark.sql(
+    SharedFrames.sql(spark, "graft_cust_ne" -> Tables.customer(spark, dir),
+        "graft_ord_ne" -> Tables.orders(spark, dir))(
       """WITH pos AS (
            SELECT CAST(count(*) AS BIGINT) AS n_pos,
              CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
@@ -543,7 +535,7 @@ object RelationalOps {
     // round — bounded the same way the old 1-row frontier was).
     val byDate = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
-    graft.model.Tables.orders(spark, dir)
+    val nxt = Tables.orders(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"),
         lead(col("o_orderkey"), 4).over(byDate).as("next4_key"),
         lag(col("o_orderkey"), 1).over(byDate).as("p1"),
@@ -556,8 +548,7 @@ object RelationalOps {
           .when(col("p3").isNull, 3)
           .when(col("p4").isNull, 4).as("seed_pos"))
       .localCheckpoint()
-      .createOrReplaceTempView("graft_ord_nxt")
-    spark.sql(
+    SharedFrames.sql(spark, "graft_ord_nxt" -> nxt)(
       """WITH RECURSIVE walk AS (
            SELECT o_custkey, o_orderkey, next4_key, seed_pos AS pos
            FROM graft_ord_nxt WHERE seed_pos IS NOT NULL

@@ -53,31 +53,32 @@ object ScaleOps {
     * so at 100 TB the "how big is this table" query costs one metadata
     * read per file instead of a full column scan. Requires the DSv2
     * parquet path (`useV1SourceList` without parquet) plus
-    * `spark.sql.parquet.aggregatePushdown`; both confs are scoped to
-    * this query — set, the aggregate materialized eagerly
-    * (localCheckpoint) under them, then restored, so the other 190
-    * queries keep their pinned v1 plan shapes. Pushdown rules: no
-    * filters below the aggregate, no DISTINCT, group-by only on
+    * `spark.sql.parquet.aggregatePushdown`, both set on a private session
+    * that materializes the aggregate (localCheckpoint) and hands its plan
+    * back, so the caller's conf and the other queries' pinned v1 plan
+    * shapes are never touched. Pushdown rules: no filters below the
+    * aggregate, no DISTINCT, group-by only on
     * partition columns (none here — a single global row), and integer
     * min/max (float stats interact with NaN ordering, so the audit
     * sticks to the key columns). `PlanSpec` pins PushedAggregation on
     * the lazy frame.
     */
-  def aggPushdownStats(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.conf
+  def aggPushdownStats(spark: SparkSession, dir: String): DataFrame =
+    SharedFrames.handBack(spark,
+      aggPushdownFrame(aggPushdownSession(spark), dir).localCheckpoint())
+
+  /** The private session: DSv2 parquet path, aggregate pushdown on. */
+  private[graft] def aggPushdownSession(spark: SparkSession): SparkSession = {
     val v1Key = "spark.sql.sources.useV1SourceList"
-    val aggKey = "spark.sql.parquet.aggregatePushdown"
-    val (prevV1, prevAgg) = (conf.get(v1Key), conf.get(aggKey))
-    conf.set(v1Key, prevV1.split(",").map(_.trim)
-      .filter(s => s.nonEmpty && s != "parquet").mkString(","))
-    conf.set(aggKey, "true")
-    try aggPushdownFrame(spark, dir).localCheckpoint()
-    finally { conf.set(v1Key, prevV1); conf.set(aggKey, prevAgg) }
+    SharedFrames.privateSession(spark,
+      v1Key -> spark.conf.get(v1Key).split(",").map(_.trim)
+        .filter(s => s.nonEmpty && s != "parquet").mkString(","),
+      "spark.sql.parquet.aggregatePushdown" -> "true")
   }
 
   /** The lazy footer-stats aggregate — separated so the plan-shape spec
-    * can assert PushedAggregation before materialization. Only valid
-    * under the confs [[aggPushdownStats]] scopes around it. */
+    * can assert PushedAggregation before materialization. Only valid on
+    * an [[aggPushdownSession]]. */
   private[graft] def aggPushdownFrame(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/lineitem.parquet")
       .agg(

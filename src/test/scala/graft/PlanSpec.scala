@@ -363,17 +363,10 @@ class PlanSpec extends AnyFunSuite {
   test("footer-stats aggregate pushes down to the parquet scan") {
     // COUNT/MIN/MAX answered from parquet metadata: the v2 scan carries
     // PushedAggregation, so no data page is ever materialized
-    val keys = Seq("spark.sql.sources.useV1SourceList",
-      "spark.sql.parquet.aggregatePushdown")
-    val prev = keys.map(k => k -> spark.conf.get(k)).toMap
-    try {
-      spark.conf.set(keys(0), prev(keys(0)).split(",").map(_.trim)
-        .filter(s => s.nonEmpty && s != "parquet").mkString(","))
-      spark.conf.set(keys(1), "true")
-      val p = plan(graft.operators.ScaleOps.aggPushdownFrame(spark, dir))
-      assert(p.contains("PushedAggregation: [COUNT(*)"),
-        s"aggregate not pushed to the scan:\n$p")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    import graft.operators.ScaleOps
+    val p = plan(ScaleOps.aggPushdownFrame(ScaleOps.aggPushdownSession(spark), dir))
+    assert(p.contains("PushedAggregation: [COUNT(*)"),
+      s"aggregate not pushed to the scan:\n$p")
   }
 
   test("top-k cliffs cut with TakeOrderedAndProject before any rank window") {

@@ -53,13 +53,25 @@ class Round7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("aggPushdownStats: footer stats equal the scanned truth, confs restored") {
-    val v1Before = spark.conf.get("spark.sql.sources.useV1SourceList")
-    val aggBefore = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    val got = ScaleOps.aggPushdownStats(spark, dir).collect()(0)
-    // conf hygiene: the scoped confs are back exactly as they were
-    assert(spark.conf.get("spark.sql.sources.useV1SourceList") === v1Before)
-    assert(spark.conf.get("spark.sql.parquet.aggregatePushdown") === aggBefore)
+  test("aggPushdownStats: footer stats equal the truth, caller conf never written") {
+    // a second thread samples the caller's conf for as long as the build
+    // runs: the pushdown confs belong to a private session
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    @volatile var building = true
+    @volatile var samples = 0
+    @volatile var written: Option[Map[String, String]] = None
+    val sampler = new Thread(() => while (building) {
+      val now = caller.conf.getAll
+      if (now != before) written = Some(now)
+      samples += 1
+    })
+    sampler.start()
+    val got = try ScaleOps.aggPushdownStats(caller, dir).collect()(0)
+      finally { building = false; sampler.join() }
+    assert(samples > 0)
+    assert(written === None)
+    assert(caller.conf.getAll === before)
     val li = Tables.lineitem(spark, dir)
     val truth = li.agg(count(lit(1)), min(col("l_orderkey")),
       max(col("l_orderkey")), min(col("l_linenumber")),

@@ -7,16 +7,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{BehaviorOps, DashboardOps, MlOps}
+import graft.operators.{BehaviorOps, DashboardOps, DivergenceOps, MlOps}
 
 /** A query's result must not depend on which session built the shared
-  * frames it reads. `SharedFrames` hands back a frame bound to the
-  * session that BUILT it; a query that resolved graft's native functions
-  * by name through a session's function registry, or that registered a
-  * temp view on the frame's session and queried its own, worked only if
-  * some earlier query had prepared that session. Here each query's
-  * shared frames are built on one fresh session (no function
-  * registration), and the query runs on a second fresh session.
+  * frames it reads, and a query must leave its caller's session as it
+  * found it. `SharedFrames` hands each hit back as the stored plan bound
+  * to the CALLER, so plans over it run under the caller's conf; work
+  * that needs its own conf or temp views runs on a private session.
+  * Here each query's shared frames are built on one fresh session (no
+  * function registration), and the query runs on a second fresh session.
   */
 class SessionIndependenceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -41,6 +40,7 @@ class SessionIndependenceSpec extends AnyFunSuite {
     "q_dashboard_payload" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
     "q_global_stats" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
     "q_risk_histogram" -> ((s, d) => DashboardOps.scoredDocuments(s, d)),
+    "q_source_js" -> ((s, d) => DivergenceOps.sourceJs(s, d)),
   )
 
   for ((name, buildShared) <- queries)
@@ -51,4 +51,27 @@ class SessionIndependenceSpec extends AnyFunSuite {
       assert(want.nonEmpty)
       assert(got === want)
     }
+
+  test("plans over a frame built elsewhere run under the caller's conf") {
+    BehaviorOps.eventSeq(spark.newSession(), dir)
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    val p = BehaviorOps.eventSeq(caller, dir).groupBy("event_type").count()
+      .queryExecution.executedPlan.toString
+    assert("""hashpartitioning\(event_type#\d+, 3\)""".r.findFirstIn(p).isDefined, p)
+  }
+
+  test("SQL-surface queries, q_agg_pushdown: caller's views and conf unchanged") {
+    val caller = spark.newSession()
+    caller.range(3).toDF("o_orderkey").createOrReplaceTempView("graft_orders")
+    def views = caller.catalog.listTables().collect().map(_.name).toSet
+    val (viewsBefore, confBefore) = (views, caller.conf.getAll)
+    for (name <- Seq("q_correlated_subquery", "q_lateral_topk", "q_scalar_subquery",
+        "q_not_exists", "q_recursive_cte", "q_agg_pushdown")) {
+      assert(SparkEntry.queries(name)(caller, dir).collect().nonEmpty, name)
+      assert(views === viewsBefore, name)
+      assert(caller.conf.getAll === confBefore, name)
+      assert(caller.table("graft_orders").count() === 3, name)
+    }
+  }
 }

@@ -137,6 +137,18 @@ class SourceLintSpec extends AnyFunSuite {
         bad.mkString("\n"))
   }
 
+  test("engine code outside model/ writes no session conf and registers no temp view") {
+    // a caller's conf and catalog belong to the caller: work that needs
+    // its own conf or views runs on a private session through
+    // graft.model.SharedFrames, which hands its plan back
+    val bad = offenders("""conf\.(un)?set\(|create(OrReplace|Global)?TempView\(""".r)
+      .filter(_.startsWith("src/main/scala/graft/"))
+      .filterNot(_.startsWith("src/main/scala/graft/model/"))
+    assert(bad.isEmpty,
+      s"conf write or temp view outside model/ (use a SharedFrames private session):\n" +
+        bad.mkString("\n"))
+  }
+
   test("every public lake-layer def has a caller in src/main outside its own file") {
     // the lake layer exists for the registry's lake queries and the
     // streaming source; a public member that only its own file (or a
